@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import functools
 import importlib
+import json
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -53,6 +54,12 @@ PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython",
                 "BatchEvalPython", "FlatMapGroupsInPandas",
                 "FlatMapGroupsInArrow", "ArrowWindowPython")
 
+# a Python node is the scorer's when its output holds one of these column
+# sets: the scored records (functions.scoring's fused mapper, the LM's
+# reassembly mapper) or the LM's token rows. Line dedup's mapper and the
+# gates' shingle mappers emit neither.
+SCORER_COLUMNS = (frozenset({"mean_q"}), frozenset({"pos", "tok"}))
+
 
 @dataclass
 class Span:
@@ -68,6 +75,7 @@ class Tracer:
     sc: object                         # SparkContext
     spans: list[Span] = field(default_factory=list)
     captured: dict = field(default_factory=dict)   # span -> first argument
+    overhead_s: float = 0.0            # wall spent in span bookkeeping
     _stack: list[Span] = field(default_factory=list)
     _saved: list = field(default_factory=list)
 
@@ -76,13 +84,16 @@ class Tracer:
 
     @contextmanager
     def span(self, name: str):
+        t0 = time.perf_counter()
         s = Span(name, time.time(),
                  parent=self._stack[-1].name if self._stack else None)
         self._stack.append(s)
         self._describe(name)
+        self.overhead_s += time.perf_counter() - t0
         try:
             yield s
         finally:
+            t0 = time.perf_counter()
             s.end = time.time()
             self._stack.pop()
             self.spans.append(s)
@@ -92,6 +103,7 @@ class Tracer:
                 self._describe(f"{self._stack[0].name} after {name}")
             else:
                 self._describe(self._stack[-1].name)
+            self.overhead_s += time.perf_counter() - t0
 
     def install(self) -> None:
         for mod_name, attr, name in WRAPPED:
@@ -150,82 +162,92 @@ def parse_metric(text: str) -> float:
     return value * _SCALE[parts[1]] if len(parts) > 1 else value
 
 
+def node_outputs(desc: str) -> frozenset[str]:
+    """Output column names of a Python plan node, from its description
+    'MapInPandas f(url#1, text#2)#9, [url#10, mean_q#11], false'."""
+    if ", [" not in desc:
+        return frozenset()
+    cols = desc.rsplit(", [", 1)[1].split("]", 1)[0]
+    return frozenset(c.strip().split("#", 1)[0] for c in cols.split(","))
+
+
 class StatusStore:
-    """Reads finished jobs, stages and SQL executions with the UI off."""
+    """Reads finished jobs, stages and SQL executions with the UI off. Each
+    status object crosses the py4j bridge as one JSON document, written
+    by the Jackson mapper Spark ships with (one call instead of one per
+    field)."""
 
     def __init__(self, spark):
-        self.jvm = spark._jvm
+        jvm = spark._jvm
+        self.tracker = spark.sparkContext.statusTracker()
         self.app = spark.sparkContext._jsc.sc().statusStore()
         self.sql = spark._jsparkSession.sharedState().statusStore()
-        self._conv = self.jvm.scala.jdk.javaapi.CollectionConverters
+        scala = getattr(jvm.com.fasterxml.jackson.module.scala,
+                        "DefaultScalaModule$").__getattr__("MODULE$")
+        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper() \
+            .registerModule(scala)
+        self._no_quantiles = spark.sparkContext._gateway.new_array(
+            jvm.double, 0)
 
-    def _list(self, seq) -> list:
-        return list(self._conv.asJava(seq))
-
-    @staticmethod
-    def _opt(o, default=None):
-        return o.get() if o.isDefined() else default
+    def _json(self, obj):
+        return json.loads(self._mapper.writeValueAsString(obj))
 
     def last_job_id(self) -> int:
-        return max((j.jobId() for j in self._list(self.app.jobsList(None))),
-                   default=-1)
+        # job ids run 0, 1, 2, ... in submission order
+        return max(self.tracker.getJobIdsForGroup(None), default=-1)
 
     def last_execution_id(self) -> int:
-        return max((e.executionId()
-                    for e in self._list(self.sql.executionsList())),
-                   default=-1)
+        n = self.sql.executionsCount()
+        return self._json(self.sql.executionsList(n - 1, 1))[0][
+            "executionId"] if n else -1
 
     def jobs(self, after: int) -> list[dict]:
-        out = []
-        for j in self._list(self.app.jobsList(None)):
-            if j.jobId() <= after:
-                continue
-            start, end = self._opt(j.submissionTime()), \
-                self._opt(j.completionTime())
-            out.append({"id": j.jobId(), "desc": self._opt(j.description()),
-                        "start": start.getTime() / 1e3 if start else None,
-                        "end": end.getTime() / 1e3 if end else None,
-                        "stages": [int(s) for s in self._list(j.stageIds())]})
-        return sorted(out, key=lambda j: j["id"])
+        return sorted(({"id": j["jobId"], "desc": j["description"],
+                        "start": (j["submissionTime"] or 0) / 1e3 or None,
+                        "end": (j["completionTime"] or 0) / 1e3 or None,
+                        "stages": j["stageIds"]}
+                       for j in self._json(self.app.jobsList(None))
+                       if j["jobId"] > after), key=lambda j: j["id"])
 
     def stages(self, stage_ids) -> list[dict]:
-        from pyspark import SparkContext
         wanted = set(stage_ids)
-        no_quantiles = SparkContext._gateway.new_array(self.jvm.double, 0)
-        rows = self._list(self.app.stageList(None, False, False,
-                                             no_quantiles, None))
-        out = []
-        for s in rows:
-            if s.stageId() in wanted:
-                out.append({
-                    "id": s.stageId(), "tasks": s.numCompleteTasks(),
-                    "run_s": s.executorRunTime() / 1e3,
-                    "cpu_s": s.executorCpuTime() / 1e9,
-                    "gc_s": s.jvmGcTime() / 1e3,
-                    "shuffle_write_bytes": s.shuffleWriteBytes(),
-                    "spill_bytes": s.memoryBytesSpilled()
-                    + s.diskBytesSpilled(),
-                    "input_bytes": s.inputBytes()})
-        return out
+        return [{"id": s["stageId"], "tasks": s["numCompleteTasks"],
+                 "run_s": s["executorRunTime"] / 1e3,
+                 "cpu_s": s["executorCpuTime"] / 1e9,
+                 "gc_s": s["jvmGcTime"] / 1e3,
+                 "shuffle_write_bytes": s["shuffleWriteBytes"],
+                 "spill_bytes": s["memoryBytesSpilled"]
+                 + s["diskBytesSpilled"],
+                 "input_bytes": s["inputBytes"]}
+                for s in self._json(self.app.stageList(
+                    None, False, False, self._no_quantiles, None))
+                if s["stageId"] in wanted]
 
     def executions(self, after: int) -> list[dict]:
-        """SQL executions after ``after``: description and, per plan node,
-        its name and parsed metric totals."""
+        """SQL executions after ``after``: description and, per scan,
+        exchange and Python plan node, its name, parsed metric totals and
+        (Python nodes only) output column names."""
         out = []
-        for e in self._list(self.sql.executionsList()):
-            eid = e.executionId()
-            if eid <= after:
+        for eid in range(after + 1, self.last_execution_id() + 1):
+            e = self.sql.execution(eid)
+            if not e.isDefined():
                 continue
-            values = self.sql.executionMetrics(eid)
+            values = self._json(self.sql.executionMetrics(eid))
             nodes = []
-            for n in self._list(self.sql.planGraph(eid).allNodes()):
-                mets = {}
-                for m in self._list(n.metrics()):
-                    v = values.get(m.accumulatorId())
-                    if m.name() in SQL_METRICS and v.isDefined():
-                        mets[m.name()] = parse_metric(v.get())
-                nodes.append((n.name(), mets))
-            out.append({"id": eid, "desc": e.description(), "nodes": nodes})
+            for n in self._json(self.sql.planGraph(eid).allNodes()):
+                name = n["name"]
+                if not ("Scan" in name or name == "Exchange"
+                        or name in PYTHON_NODES):
+                    continue
+                mets = {m["name"]: parse_metric(values[acc])
+                        for m in n["metrics"]
+                        for acc in [str(m["accumulatorId"])]
+                        if m["name"] in SQL_METRICS and acc in values}
+                outs = node_outputs(n["desc"]) \
+                    if name in PYTHON_NODES else frozenset()
+                nodes.append((name, mets, outs))
+            out.append({"id": eid, "desc": e.get().description(),
+                        "nodes": nodes})
         return out
 
 
@@ -291,35 +313,39 @@ def layer_metrics(spans: list[Span], jobs: list[dict], stages: list[dict],
     def node_sum(metric, node_pred, exec_pred=lambda layer: True):
         return _sum(mets.get(metric, 0.0) for e in execs
                     if exec_pred(job_layer(e["desc"]))
-                    for name, mets in e["nodes"] if node_pred(name))
+                    for name, mets, outs in e["nodes"]
+                    if node_pred(name, outs))
 
-    def is_python(name):
+    def is_python(name, outs=None):
         return name in PYTHON_NODES
 
-    def scoring(layer):
-        return layer == "output.snapshot_write"
+    def is_scorer(name, outs):
+        return is_python(name) and any(c <= outs for c in SCORER_COLUMNS)
+
+    def is_scan(name, outs):
+        return "Scan" in name
 
     def is_gate(layer):
         return layer.startswith("gate.")
 
     m = {
-        "sources.scan_s": (node_sum("scan time", lambda n: "Scan" in n), "s"),
-        "sources.bytes_read": (node_sum("size of files read",
-                                        lambda n: "Scan" in n), "bytes"),
+        "sources.scan_s": (node_sum("scan time", is_scan), "s"),
+        "sources.bytes_read": (node_sum("size of files read", is_scan),
+                               "bytes"),
         "model.build_s": (span_self("refset.build")
                           + span_self("lm.count_tables"), "s"),
         "pipeline.prescore_s": ((min(snap) if snap else fresh.end)
                                 - fresh.start, "s"),
-        "scorer.python_s": (node_sum("time to run Python workers", is_python,
-                                     scoring), "s"),
+        "scorer.python_s": (node_sum("time to run Python workers",
+                                     is_scorer), "s"),
         "scorer.bytes_to_python": (node_sum("data sent to Python workers",
-                                            is_python, scoring), "bytes"),
+                                            is_scorer), "bytes"),
         "scorer.bytes_from_python": (node_sum(
-            "data returned from Python workers", is_python, scoring),
-            "bytes"),
-        "scorer.shuffle_bytes": (node_sum("shuffle bytes written",
-                                          lambda n: n == "Exchange", scoring),
-                                 "bytes"),
+            "data returned from Python workers", is_scorer), "bytes"),
+        # every shuffle of the lazy layers fused into the snapshot write
+        "snapshot_write.shuffle_bytes": (node_sum(
+            "shuffle bytes written", lambda n, outs: n == "Exchange",
+            lambda layer: layer == "output.snapshot_write"), "bytes"),
         "output.snapshot_write_s": (span_self("output.snapshot_write"), "s"),
         "output.lineage_s": (span_self("output.lineage"), "s"),
         "output.verify_s": (span_self("output.verify"), "s"),
@@ -349,7 +375,7 @@ def layer_metrics(spans: list[Span], jobs: list[dict], stages: list[dict],
         layer = job_layer(e["desc"])
         detail["layer_python_s"][layer] = detail["layer_python_s"].get(
             layer, 0.0) + _sum(mets.get("time to run Python workers", 0.0)
-                               for name, mets in e["nodes"]
+                               for name, mets, outs in e["nodes"]
                                if is_python(name))
     for j in jobs:
         detail["layer_jobs"][j["layer"]] = detail["layer_jobs"].get(

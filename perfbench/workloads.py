@@ -51,17 +51,13 @@ class Workload:
     why: str
     input_kind: str                   # inputs.materialize kind
     docs: int                         # timed input size
-    warm_docs: int                    # warm-up input size
-    oracle_docs: int                  # slice checked against oracle.py
+    oracle: bool                      # warm-up checked against oracle.py
+    warm_legs: int                    # untimed warm-up legs on a slice
     config: Callable[[], FilterConfig]
     self_reference: bool = False      # input is its own LM reference
-    warm: Callable[[], FilterConfig] | None = None  # warm-up config
 
     def ref_pages(self, pages):
         return pages if self.self_reference else None
-
-    def warm_config(self) -> FilterConfig:
-        return (self.warm or self.config)()
 
 
 WORKLOADS = {w.name: w for w in (
@@ -69,21 +65,19 @@ WORKLOADS = {w.name: w for w in (
         "web_intrinsic",
         "fused Arrow scorer (operators.score, functions.scoring) does most "
         "of the work; operators.lm and every gate do none",
-        "web", docs=8_000, warm_docs=100, oracle_docs=100,
+        "web", docs=8_000, oracle=True, warm_legs=2,
         config=north_rule_stack),
     Workload(
         "web_lm",
         "bigram LM token exchange and collect_list reassembly "
         "(operators.lm) dominate; the intrinsic scorer does nothing",
-        "web", docs=1_500, warm_docs=100, oracle_docs=60,
+        "web", docs=1_500, oracle=True, warm_legs=2,
         config=lm_stack, self_reference=True),
     Workload(
         "web_gated",
         "only workload where ingest quarantine and the blocklist, line-"
         "dedup, near-dup and classifier gates with their checkpoints work",
-        "gated", docs=1_500, warm_docs=100, oracle_docs=0,
-        config=gated_stack,
-        # a gated warm-up alone runs ~110 small Spark jobs (~20 s on 4
-        # cores), too long to repeat per set-up; warm up the scorer only
-        warm=lambda: north_rule_stack(vocab=inputs.VOCAB)),
+        # one gated leg is ~115 Spark jobs (≈45 s cold, ≈30 s warm at any
+        # slice size) and warms more than two ungated legs do
+        "gated", docs=1_500, oracle=False, warm_legs=1, config=gated_stack),
 )}
