@@ -4,9 +4,9 @@
         --seconds 10 --trace 0
 
 Run from the repository root. The benchmark generates its input from
-the seed (cached under .perfbench_work/), starts a local[nproc] Spark
+the seed (cached under .perfbench_work/), starts a local[nproc/2] Spark
 session in this process, sets it up (session start, Python worker
-spawn, untimed warm-up legs on a small slice) and then repeats the
+spawn, an untimed warm-up leg on a small slice) and then repeats the
 workload's iteration (workloads.py) for --seconds. Each iteration's
 survivors are fingerprinted and checked; see README.md for the metrics.
 
@@ -35,6 +35,7 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 EXPECTED = os.path.join(HERE, "expected.json")
 WARM_DOCS = 100        # size of the warm-up (and oracle-checked) slice
+WARM_LEGS = 1          # untimed warm-up legs on that slice
 RESUME_MIN_S = 4.0     # resume legs per iteration add up to at least this
 ORACLE_COLUMNS = ["url", "n_chars", "mean_q", "window_q", "final_score",
                   "text"]
@@ -52,14 +53,14 @@ def parse_args(argv):
     return p.parse_args(argv)
 
 
-def build_session(cpus: int):
+def build_session(slots: int):
     """bench.py's session settings, with every scratch path inside the
     work directory and a 1.5 GB driver heap."""
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder
-             .master(f"local[{cpus}]")
+             .master(f"local[{slots}]")
              .appName("filtlong_spark_perfbench")
-             .config("spark.sql.shuffle.partitions", str(cpus))
+             .config("spark.sql.shuffle.partitions", str(slots))
              .config("spark.sql.adaptive.enabled", "true")
              .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
              .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
@@ -101,11 +102,12 @@ def fingerprint(path: str) -> tuple[int, str]:
 
 
 def run_iteration(spark, wl, inp, jvm_pid: int, ck: str, tracer=None,
-                  resume: bool = True) -> dict:
+                  resume: bool = True,
+                  resume_min_s: float = RESUME_MIN_S) -> dict:
     """A fresh leg, then resume legs from the snapshot it committed until
-    they add up to RESUME_MIN_S (at least one), each through the survivor
-    write into the run directory ``ck``. Wall, CPU and peak RSS are per
-    leg; ``legs["resume"]`` is the resume leg of median wall."""
+    they add up to ``resume_min_s`` (at least one), each through the
+    survivor write into the run directory ``ck``. Wall, CPU and peak RSS
+    are per leg; ``legs["resume"]`` is the resume leg of median wall."""
     import procstat
     from filtlong_spark.plans.pipeline import run_filter
     cfg = wl.config()
@@ -133,7 +135,7 @@ def run_iteration(spark, wl, inp, jvm_pid: int, ck: str, tracer=None,
            "fresh_result": res}
     resumes = []
     while resume and (not resumes or sum(r["wall_s"] for r in resumes)
-                      < RESUME_MIN_S):
+                      < resume_min_s):
         resumes.append(run_leg("resume")[0])
     if resumes:
         median = sorted(resumes, key=lambda r: r["wall_s"])[
@@ -309,14 +311,17 @@ def main(argv=None) -> int:
     gen_s = time.time() - t
 
     cpus = len(os.sched_getaffinity(0))
+    # a task of a Python node keeps its JVM thread and its Python worker
+    # busy at once, so half as many task slots as cores fill the cores
+    slots = max(1, cpus // 2)
     spark = None
     try:
-        spark = build_session(cpus)
+        spark = build_session(slots)
         jvm_pid = spark.sparkContext._gateway.proc.pid
         # with --trace 1 the first, untraced iteration stands in for the
-        # last warm-up leg
+        # warm-up leg
         warm_s, kept = warm_up(spark, wl, warm, jvm_pid,
-                               wl.warm_legs - args.trace)
+                               WARM_LEGS - args.trace)
         setup_s = time.time() - T_PROCESS - gen_s
         result = measure(spark, wl, inp, jvm_pid, args,
                          oracle_check(wl, warm, kept))
@@ -331,6 +336,7 @@ def main(argv=None) -> int:
     result["metrics"] = {k: {"value": v, "unit": u}
                          for k, (v, u) in metrics.items()}
     print(f"# {wl.name} seed={args.seed} docs={wl.docs} cpus={cpus} "
+          f"task_slots={slots} "
           f"input_gen_s={gen_s:.2f} setup_s={setup_s:.2f} "
           f"warm_up_s={warm_s:.2f}")
     print(f"# fresh_s over {len(its)} untraced iterations: "
@@ -400,13 +406,17 @@ def measure(spark, wl, inp, jvm_pid: int, args, errors: list[str]) -> dict:
             if tracer:
                 tracer.install()
             try:
-                it = run_iteration(spark, wl, inp, jvm_pid, ck, tracer)
+                # traced runs do a fixed amount of work per iteration (one
+                # resume leg), so action counts and per-layer sums compare
+                it = run_iteration(
+                    spark, wl, inp, jvm_pid, ck, tracer,
+                    resume_min_s=0.0 if args.trace else RESUME_MIN_S)
             finally:
                 if tracer:
                     tracer.uninstall()
             check_iteration(wl, ck, it)
             if args.trace:
-                it["n_jobs"] = store.last_job_id() - job0
+                it["actions"] = store.actions(job0, exec0)
                 it["jobs"] = store.jobs(job0) if tracer else []
             if counted is None:   # once per run
                 count_drops(it)
@@ -463,8 +473,8 @@ def trace_report(wl, args, its, traced, counted, errors) -> dict:
 
     layers = {k: (statistics.median(it["layers"][k][0] for it in traced), u)
               for k, (_, u) in traced[0]["layers"].items()}
-    extra = max(it["n_jobs"] for it in traced) - min(
-        it["n_jobs"] for it in its)
+    extra = max(it["actions"] for it in traced) - min(
+        it["actions"] for it in its)
     layers["trace.extra_jobs"] = (extra, "count")
     # the tracer's own bookkeeping; the traced-minus-untraced wall is
     # printed too, but a later iteration of a process runs faster (the
@@ -486,7 +496,7 @@ def trace_report(wl, args, its, traced, counted, errors) -> dict:
     layers["scorer.rows_out_per_in"] = (traced[0]["snapshot_rows"] / wl.docs,
                                         "ratio")
     if extra:
-        errors.append(f"traced iteration ran {extra} more Spark jobs")
+        errors.append(f"traced iteration ran {extra} more Spark actions")
     # a timing ratio, not an output check: reported, but `correct` stays
     coverage = layers["trace.coverage"][0]
     if wl.input_kind == "web" and coverage < 0.9:

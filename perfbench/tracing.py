@@ -201,6 +201,18 @@ class StatusStore:
         return self._json(self.sql.executionsList(n - 1, 1))[0][
             "executionId"] if n else -1
 
+    def actions(self, after_job: int, after_exec: int) -> int:
+        """Spark actions since the two ids: SQL executions plus jobs that
+        belong to none of them. Unlike the job count, this does not move
+        when AQE splits one query's stages over one job more or fewer
+        (on web_lm, 2 of 30 identical iterations ran 49 jobs, not 48)."""
+        execs = [self.sql.execution(eid) for eid in
+                 range(after_exec + 1, self.last_execution_id() + 1)]
+        in_sql = {int(j) for e in execs if e.isDefined()
+                  for j in self._json(e.get().jobs())}
+        jobs = range(after_job + 1, self.last_job_id() + 1)
+        return len(execs) + sum(1 for j in jobs if j not in in_sql)
+
     def jobs(self, after: int) -> list[dict]:
         return sorted(({"id": j["jobId"], "desc": j["description"],
                         "start": (j["submissionTime"] or 0) / 1e3 or None,

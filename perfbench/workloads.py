@@ -52,7 +52,6 @@ class Workload:
     input_kind: str                   # inputs.materialize kind
     docs: int                         # timed input size
     oracle: bool                      # warm-up checked against oracle.py
-    warm_legs: int                    # untimed warm-up legs on a slice
     config: Callable[[], FilterConfig]
     self_reference: bool = False      # input is its own LM reference
 
@@ -65,19 +64,16 @@ WORKLOADS = {w.name: w for w in (
         "web_intrinsic",
         "fused Arrow scorer (operators.score, functions.scoring) does most "
         "of the work; operators.lm and every gate do none",
-        "web", docs=8_000, oracle=True, warm_legs=2,
-        config=north_rule_stack),
+        "web", docs=8_000, oracle=True, config=north_rule_stack),
     Workload(
         "web_lm",
         "bigram LM token exchange and collect_list reassembly "
         "(operators.lm) dominate; the intrinsic scorer does nothing",
-        "web", docs=1_500, oracle=True, warm_legs=2,
-        config=lm_stack, self_reference=True),
+        "web", docs=1_500, oracle=True, config=lm_stack,
+        self_reference=True),
     Workload(
         "web_gated",
         "only workload where ingest quarantine and the blocklist, line-"
         "dedup, near-dup and classifier gates with their checkpoints work",
-        # one gated leg is ~115 Spark jobs (≈45 s cold, ≈30 s warm at any
-        # slice size) and warms more than two ungated legs do
-        "gated", docs=1_500, oracle=False, warm_legs=1, config=gated_stack),
+        "gated", docs=1_500, oracle=False, config=gated_stack),
 )}
