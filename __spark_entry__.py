@@ -86,7 +86,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def q_hard_rules(spark, sf_dir):
     """D1: hard thresholds on raw metrics (src/read.cpp:64-73). Token
-    stats via explode + hash aggregate (codegen; no interpreted HOFs)."""
+    stats via the map-only textstats.token_stats pass."""
     d = _docs(spark, sf_dir)
     st = ts.token_stats(d, VOCAB)
     mean_q = 100.0 * F.col("good_tokens") / F.col("n_tokens")
@@ -263,7 +263,7 @@ def q_clf_score(spark, sf_dir):
     slot): linear logit over five per-doc features with checked-in
     coefficients (offline-trained weights fold into the plan as
     literals; operators/classifier.py documents the swap-in). Every doc
-    scored — guarded divides, left join."""
+    scored — one map-only feature pass, guarded divides."""
     from filtlong_spark.operators import classifier as clf
     return (clf.quality_classifier(_docs(spark, sf_dir), VOCAB)
             .orderBy("doc_id"))
@@ -445,27 +445,26 @@ LM_THRESHOLD = 0.01
 def q_lm_quality(spark, sf_dir):
     """Bigram-LM (KenLM-style perplexity slot) quality: self-corpus bigram
     model with unigram backoff; token good iff p(tok|prev) >= threshold.
-    Pure Catalyst: posexplode + lag window + two count aggs + joins —
-    integer-count-exact, so DuckDB produces identical doubles."""
-    from pyspark.sql import Window
+    Pure Catalyst: explode of the (tok, prev) zip + two count aggs +
+    joins — integer-count-exact, so DuckDB produces identical doubles."""
     d = _docs(spark, sf_dir)
-    # (pos, tok, prev) WITHOUT a lag window: prev is the token array
+    # (tok, prev) WITHOUT a lag window: prev is the token array
     # shifted by one (null-padded at position 0), zipped and exploded —
     # map-only, so the 7.5M-token exchange+sort the window paid is gone.
     # Rows are identical to lag() over (doc_id, pos): prev[i] =
     # toks[i-1], null at i=0. arrays_zip pads a zero-token doc to one
     # all-null row — real tokens are \S+ (never null), so the filter
-    # drops exactly those padding rows (empty docs emitted no row under
-    # posexplode either).
+    # drops exactly those padding rows (empty docs emit no row). No
+    # consumer reads the position, so the materialized table omits it.
     toks_arr = F.expr(ts.TOKENS)
     prevs = F.concat(
         F.array(F.lit(None).cast("string")),
         F.slice(toks_arr, 1, F.greatest(F.size(toks_arr) - 1, F.lit(0))))
     toks = (d.select(
         "doc_id",
-        F.posexplode(F.arrays_zip(toks_arr.alias("tok"),
-                                  prevs.alias("prev"))).alias("pos", "z"))
-        .select("doc_id", "pos", F.col("z.tok").alias("tok"),
+        F.explode(F.arrays_zip(toks_arr.alias("tok"),
+                               prevs.alias("prev"))).alias("z"))
+        .select("doc_id", F.col("z.tok").alias("tok"),
                 F.col("z.prev").alias("prev"))
         # the token table feeds THREE consumers (c1, c2, and the probe
         # side of the final join); without materialization the

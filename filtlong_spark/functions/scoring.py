@@ -18,6 +18,17 @@ from pyspark.sql import types as T
 from .. import core
 from ..config import FilterConfig
 
+# kernel modules whose UDF closures must pickle by value (see below)
+PICKLE_BY_VALUE_MODULES = (
+    "filtlong_spark.core", "filtlong_spark.functions.scoring",
+    "filtlong_spark.operators.similarity",
+    "filtlong_spark.operators.dedup",
+    "filtlong_spark.operators.lm",
+    "filtlong_spark.functions.seqscore",
+    "filtlong_spark.functions.textstats",
+    "filtlong_spark.sources.fastx",
+    "filtlong_spark.sources.warc")
+
 
 def _register_self_contained_pickling() -> None:
     """Ship the kernel code inside the UDF pickle itself.
@@ -33,18 +44,7 @@ def _register_self_contained_pickling() -> None:
         from pyspark import cloudpickle
     except ImportError:  # fall back to standalone cloudpickle
         import cloudpickle  # type: ignore
-    for mod in ("filtlong_spark.core", "filtlong_spark.functions.scoring",
-                "filtlong_spark.operators.similarity",
-                "filtlong_spark.operators.dedup",
-                "filtlong_spark.operators.lm",
-                "filtlong_spark.operators.multimodal",
-                "filtlong_spark.operators.jpeg",
-                "filtlong_spark.operators.mp4",
-                "filtlong_spark.operators.mkv",
-                "filtlong_spark.functions.seqscore",
-                "filtlong_spark.functions.textstats",
-                "filtlong_spark.sources.fastx",
-                "filtlong_spark.sources.warc"):
+    for mod in PICKLE_BY_VALUE_MODULES:
         if mod in sys.modules:
             cloudpickle.register_pickle_by_value(sys.modules[mod])
 

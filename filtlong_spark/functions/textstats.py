@@ -22,6 +22,8 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import core  # pickled by value with this module (scoring.py)
+
 TOKENS = r"regexp_extract_all(text, '\\S+', 0)"
 
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
@@ -35,47 +37,51 @@ def n_tokens_col() -> Column:
     return F.size(tokens_col())
 
 
-def exploded_tokens(docs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """(key, tok) — one shuffle-free narrow explode; every per-token stat
-    aggregates over this."""
-    return docs.select(key, F.explode(tokens_col()).alias("tok"))
+def token_stats_batch(texts: list[str], vocab_vs, stop_vs):
+    """Per-doc (n_tokens, good_tokens, sum_token_len, stop_count,
+    n_distinct) int64 arrays for EVERY doc of one Arrow batch (zeros for
+    token-less docs) — the body shared by token_stats and the
+    classifier's feature pass. Flat blob tokenize without Python token
+    strings (core.batch_tokenize_java: JAVA \\s semantics, so
+    NBSP/ideographic-space text tokenizes IDENTICALLY to the Catalyst
+    '\\S+' tokenizer), memberships probed on the per-batch DICTIONARY
+    (dictionary_encode: tens of distinct web tokens per thousand
+    occurrences) and gathered back by code, distincts counted from the
+    (doc, code) pairs. ``vocab_vs``/``stop_vs``: pa.string() value
+    sets."""
+    import numpy as np
+    import pyarrow.compute as pc
+    nd = len(texts)
+    arr, doc_of, counts, char_lens = core.batch_tokenize_java(texts)
+    if not len(arr):
+        z = np.zeros(nd, dtype=np.int64)
+        return counts, z, z, z, z
+    de = arr.dictionary_encode()
+    codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    vmask = pc.is_in(de.dictionary, value_set=vocab_vs).to_numpy(
+        zero_copy_only=False)
+    smask = pc.is_in(de.dictionary, value_set=stop_vs).to_numpy(
+        zero_copy_only=False)
+    good = np.bincount(doc_of[vmask[codes]], minlength=nd)
+    stop = np.bincount(doc_of[smask[codes]], minlength=nd)
+    c = np.concatenate(([0], np.cumsum(char_lens)))
+    off = np.zeros(nd + 1, dtype=np.int64)
+    np.cumsum(counts, out=off[1:])
+    sum_len = c[off[1:]] - c[off[:-1]]
+    ndict = len(de.dictionary)
+    pairs = np.unique(doc_of * ndict + codes)
+    n_distinct = np.bincount(pairs // ndict, minlength=nd)
+    return counts, good, sum_len, stop, n_distinct
 
 
-def token_stats(docs: DataFrame, vocab, key: str = "doc_id",
-                engine: str = "arrow") -> DataFrame:
+def token_stats(docs: DataFrame, vocab, key: str = "doc_id") -> DataFrame:
     """All per-token statistics per doc: n_tokens, good_tokens (vocab
     hits), sum_token_len, stop_count, n_distinct. Docs with zero tokens
     emit no row (the aggregate semantics every consumer joins against).
-
-    engine='arrow' (default): every statistic is doc-local, so ONE
-    map-only Arrow pass computes them with zero shuffle — flat blob
-    tokenize without Python token strings (core.batch_tokenize_java:
-    JAVA \\s semantics, so NBSP/ideographic-space text tokenizes
-    IDENTICALLY to the regexp aggregate — pytest-asserted in
-    test_classifier), memberships probed on the per-batch DICTIONARY
-    (dictionary_encode: tens of distinct web tokens per thousand
-    occurrences) and gathered back by code, distincts counted from the
-    (doc, code) pairs. engine='agg' keeps the explode + codegen hash
-    aggregate (the shape that pays a (doc)-grain exchange; retained
-    for comparison)."""
-    if engine == "agg":
-        toks = exploded_tokens(docs, key)
-        aggs = [
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.when(F.col("tok").isin(*vocab), 1).otherwise(0))
-            .alias("good_tokens"),
-            F.sum(F.length("tok").cast("long")).alias("sum_token_len"),
-            F.sum(F.when(F.col("tok").isin(*STOPWORDS), 1).otherwise(0))
-            .alias("stop_count"),
-            F.countDistinct("tok").alias("n_distinct"),
-        ]
-        return toks.groupBy(key).agg(*aggs)
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r}")
-
+    Every statistic is doc-local, so ONE map-only Arrow pass
+    (token_stats_batch) computes them with zero shuffle."""
     from .scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-    from .. import core  # definition-time capture -> pickled by value
     vocab_list = sorted(set(vocab))
     stop_list = sorted(set(STOPWORDS))
 
@@ -83,38 +89,18 @@ def token_stats(docs: DataFrame, vocab, key: str = "doc_id",
         import numpy as np
         import pandas as pd
         import pyarrow as pa
-        import pyarrow.compute as pc
         vocab_vs = pa.array(vocab_list, type=pa.string())
         stop_vs = pa.array(stop_list, type=pa.string())
         for pdf in batches:
-            keys = pdf[key]
             texts = [t if isinstance(t, str) else "" for t in pdf["text"]]
-            nd = len(texts)
-            arr, doc_of, counts, char_lens = core.batch_tokenize_java(
-                texts)
-            T = len(arr)
-            if not T:
+            n, good, sum_len, stop, n_distinct = token_stats_batch(
+                texts, vocab_vs, stop_vs)
+            has = n > 0
+            if not has.any():
                 continue
-            de = arr.dictionary_encode()
-            codes = de.indices.to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            vmask = pc.is_in(de.dictionary, value_set=vocab_vs).to_numpy(
-                zero_copy_only=False)
-            smask = pc.is_in(de.dictionary, value_set=stop_vs).to_numpy(
-                zero_copy_only=False)
-            good = np.bincount(doc_of[vmask[codes]], minlength=nd)
-            stop = np.bincount(doc_of[smask[codes]], minlength=nd)
-            c = np.concatenate(([0], np.cumsum(char_lens)))
-            off = np.zeros(nd + 1, dtype=np.int64)
-            np.cumsum(counts, out=off[1:])
-            sum_len = c[off[1:]] - c[off[:-1]]
-            ndict = len(de.dictionary)
-            pairs = np.unique(doc_of * ndict + codes)
-            n_distinct = np.bincount(pairs // ndict, minlength=nd)
-            has = counts > 0
             yield pd.DataFrame({
-                key: np.asarray(keys)[has],
-                "n_tokens": counts[has],
+                key: np.asarray(pdf[key])[has],
+                "n_tokens": n[has],
                 "good_tokens": good[has],
                 "sum_token_len": sum_len[has],
                 "stop_count": stop[has],
@@ -149,7 +135,6 @@ def langid_df(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     tiebreak, 'und' on zero hits — asserted by the langid driver row)."""
     from .scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-    from .. import core  # definition-time capture -> pickled by value
 
     def mapper(batches):
         import pandas as pd
@@ -180,7 +165,6 @@ def repetition_stats(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     divides -> the repetition oracle row stays bit-exact."""
     from .scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-    from .. import core  # definition-time capture -> pickled by value
 
     def mapper(batches):
         import numpy as np
@@ -224,23 +208,8 @@ def repetition_stats(docs: DataFrame, key: str = "doc_id") -> DataFrame:
                        "top_bigram_frac double, dup_token_frac double")
 
 
-def _ngram_col(n: int) -> Column:
-    """Space-joined token n-grams as one array column, built from
-    arrays_zip over n shifted slices — the same pure-codegen idiom as
-    repetition_stats (no interpreted HOF, no window shuffle)."""
-    toks = tokens_col()
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(toks, i + 1, m) for i in range(n)])
-    return zipped
-
-
-def _gram_string(n: int) -> Column:
-    return F.concat_ws(" ", *[F.col("bg")[str(i)] for i in range(n)])
-
-
 def ngram_repetition_stats(docs: DataFrame, key: str = "doc_id",
-                           top_n: int = 3, dup_n: int = 5,
-                           carry_gram_strings: bool = True) -> DataFrame:
+                           top_n: int = 3, dup_n: int = 5) -> DataFrame:
     """The character-grain half of Gopher's repetition table (Rae et al.
     2021 §A1.2; repetition_stats covers the token-grain half):
 
@@ -256,99 +225,16 @@ def ngram_repetition_stats(docs: DataFrame, key: str = "doc_id",
       as a percentage of doc chars — the overlap-insensitive rendering
       of Gopher's duplicate-n-gram character fraction.
 
-    Scale shape: two explodes to (doc, gram) grain + hash aggregates
-    (map-side partial combine on the compound key — a doc lives in one
-    partition, so all its repeated grams collapse BEFORE the exchange),
-    a doc-grain max and a doc-grain sum, then a left join back to the
-    doc list — no windows, no driver state. With the default
-    ``carry_gram_strings=True`` the exchange carries gram STRINGS
-    (~n x text for distinct windows) so the chosen ``top_gram`` can be
-    returned and oracle-asserted; ``carry_gram_strings=False`` is the
-    100 TB shape — the shuffle key becomes (doc, xxhash64(gram)) with
-    length(gram) as an integer payload, a TEXT-FREE shuffle: dup/top
-    percentages are computed from (count, length) alone and
-    ``top_gram`` is returned as '' (tie-break falls back to highest
-    count, then longest gram, then smallest hash — still a total
-    order, but ties of unequal length can pick a different gram than
-    the string mode, so the pct can differ exactly there).
-    All-integer counts; the single divide per ratio happens in the
-    same order in the DuckDB oracle, so values are bit-identical.
-
-    Physical shape (string mode): every statistic is doc-local, so the
-    default path is ONE map-only Arrow pass — flat batch tokenization,
-    n-gram windows via shifted-slice binary_join
-    (core.flat_ngram_windows), Arrow C++ hash group_by per (doc, gram),
-    and a (d asc, count desc, gram asc) sort for the deterministic
-    top-gram pick — zero shuffle (the previous two explode +
-    (doc, gram)-grain exchanges carried gram STRINGS). The text-free
-    hash mode below keeps its Catalyst shape (its exchange is the
-    point: it proves the 100 TB text-free shuffle)."""
-    if carry_gram_strings:
-        return _ngram_repetition_flat(docs, key, top_n, dup_n)
-    n_chars = F.length("text").alias("n_chars")
-    base = docs.select(key, n_chars)
-
-    def _counts(n: int):
-        g = (docs.select(key, F.explode(_ngram_col(n)).alias("bg"))
-             .select(key, _gram_string(n).alias("gram")))
-        if carry_gram_strings:
-            return (g.groupBy(key, "gram")
-                    .agg(F.count("*").alias("c"),
-                         F.length("gram").cast("long").alias("glen")))
-        # text-free: the string never reaches the exchange — only the
-        # 64-bit hash and the integer length do
-        g = g.select(key, F.xxhash64("gram").alias("gram"),
-                     F.length("gram").cast("long").alias("glen"))
-        return (g.groupBy(key, "gram")
-                .agg(F.count("*").alias("c"), F.first("glen").alias("glen")))
-
-    ct = _counts(top_n)
-    mt = ct.groupBy(key).agg(F.max("c").alias("mc"))
-    tied = ct.join(mt, key).filter(F.col("c") == F.col("mc"))
-    if carry_gram_strings:
-        topg = (tied.groupBy(key)
-                .agg(F.min("gram").alias("top_gram"),
-                     F.max("c").alias("top_c")))
-        topg = topg.withColumn("top_len",
-                               F.length("top_gram").cast("long"))
-    else:
-        # total order without strings: (c desc implicit, len desc,
-        # hash asc) via a struct max
-        topg = (tied.groupBy(key)
-                .agg(F.max(F.struct(F.col("glen"), -F.col("gram")))
-                     .alias("_pick"), F.max("c").alias("top_c")))
-        topg = (topg.withColumn("top_len", F.col("_pick.glen"))
-                .withColumn("top_gram", F.lit("")).drop("_pick"))
-
-    cd = _counts(dup_n)
-    dup = (cd.filter(F.col("c") >= 2)
-           .groupBy(key)
-           .agg(F.sum((F.col("c") - 1) * F.col("glen"))
-                .alias("dup_chars")))
-
-    return (base.join(topg, key, "left").join(dup, key, "left")
-            .select(
-                key,
-                F.coalesce("top_gram", F.lit("")).alias("top_gram"),
-                F.when(F.col("top_c").isNotNull() & (F.col("n_chars") > 0),
-                       (100.0 * F.col("top_c") * F.col("top_len"))
-                       / F.col("n_chars"))
-                .otherwise(F.lit(0.0)).alias(f"top_{top_n}gram_pct"),
-                F.when(F.col("dup_chars").isNotNull()
-                       & (F.col("n_chars") > 0),
-                       (100.0 * F.col("dup_chars")) / F.col("n_chars"))
-                .otherwise(F.lit(0.0)).alias(f"dup_{dup_n}gram_pct")))
-
-
-def _ngram_repetition_flat(docs: DataFrame, key: str,
-                           top_n: int, dup_n: int) -> DataFrame:
-    """Map-only Arrow rendering of ngram_repetition_stats' string mode
-    (see its docstring). Identical output: same windows, same counts,
-    same (count desc, gram asc) tie-break (Arrow's binary sort order ==
-    Spark's UTF8 binary compare), same divide order."""
+    Physical shape: every statistic is doc-local, so the operator is
+    ONE map-only Arrow pass — flat batch tokenization, n-gram windows
+    via shifted-slice binary_join (core.flat_ngram_windows), Arrow C++
+    hash group_by per (doc, gram), and a (d asc, count desc, gram asc)
+    sort for the deterministic top-gram pick (Arrow's binary sort order
+    == Spark's UTF8 binary compare) — zero shuffle. All-integer counts;
+    the single divide per ratio happens in the same order in the DuckDB
+    oracle, so values are bit-identical."""
     from .scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-    from .. import core  # definition-time capture -> pickled by value
 
     def mapper(batches):
         import numpy as np
@@ -429,7 +315,6 @@ def fingerprint_df(docs: DataFrame, key: str = "doc_id") -> DataFrame:
     int64), with ONE md5 per DISTINCT token per batch; identical to the
     sequential fold (and the DuckDB list_reduce oracle) bit-for-bit."""
     from .scoring import _register_self_contained_pickling
-    from .. import core
     from ..operators.dedup import _md5_60_arrow  # def-time capture
     _register_self_contained_pickling()
     P = FINGERPRINT_MOD

@@ -78,10 +78,12 @@ def pagerank_int(edges: DataFrame, iterations: int = 10,
     # deg is loop-invariant: attach it to the edge table ONCE instead
     # of re-joining it inside every iteration (10 broadcast joins ->
     # one pre-joined, materialized table; inner join is lossless here
-    # because every edge's src has a degree row by construction)
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = (edges.join(deg, "src")
-                 .select("src", "dst", "deg").localCheckpoint(eager=True))
+    # because every edge's src has a degree row by construction); an
+    # eager checkpoint is a Spark job, so skip it when no round reads it
+    if iterations:
+        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        edges_deg = (edges.join(deg, "src").select("src", "dst", "deg")
+                     .localCheckpoint(eager=True))
     base = (15 * PR_SCALE) // (100 * n)
     ranks = nodes.withColumn("rank", F.lit(PR_SCALE // n))
     for it in range(iterations):

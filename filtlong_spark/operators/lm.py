@@ -444,6 +444,10 @@ def make_reassemble_mapper(cfg: FilterConfig, eps_good: bool):
             doc_of_all = np.repeat(np.arange(nd), counts_all)
             if scrub:
                 _, se = flat(rb.column("se"), np.int64)
+                # packing invariant (see the pack in
+                # score_and_scrub_distributed): start/end are
+                # non-negative, so se never goes negative
+                assert (se >= 0).all(), "negative packed start/end"
                 order = np.lexsort((se, pf, doc_of_all))
                 pf, se = pf[order], se[order]
                 start, end = se >> 32, se & 0xFFFFFFFF

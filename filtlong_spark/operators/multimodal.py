@@ -1,73 +1,43 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""Still-image codecs: stdlib-only PNG and GIF pixel decode.
 
-What's REAL here (no media library needed):
-- container-header sniffing (PNG IHDR / GIF screen / JPEG SOF markers)
-- full PNG pixel decode: stdlib zlib inflate + scanline unfiltering
+- container-header sniffing (PNG IHDR / GIF logical screen)
+- full PNG pixel decode: zlib inflate + scanline unfiltering
   (filters 0-4), 8-bit depth, gray/RGB(+alpha)
 - full GIF pixel decode: LZW bitstream (variable code width, clear/EOI,
-  KwKwK case), global/local palettes, interlace passes — first frame
-- baseline AND progressive JPEG pixel decode (operators/jpeg.py):
-  marker walk, huffman entropy decode, spectral-selection +
-  successive-approximation scan accumulation for SOF2, dequantize +
-  IDCT, chroma upsampling, YCbCr->RGB — verified against real
-  libjpeg-produced files (both variants)
-- so ``real=True`` image features are computed from ACTUAL pixels for
-  PNG, GIF and baseline JPEG media
-- all Spark-side plumbing: schemas, Arrow batch shapes, mapInPandas
-  signatures, partitioning, the LSH near-dup join downstream
+  KwKwK case), global/local palettes, interlace passes, every frame
+  composited on the canvas with its graphic-control delay
+- minimal PNG/GIF writers that the decoder tests round-trip through
 
-- animated-GIF frame sampling (``frame_sample(real=True)``): frames
-  composited on the canvas (GCE delays/transparency/disposal), sampled
-  on the delay timeline, re-encoded as PNG for the downstream image
-  stages — the honest multi-frame/"video" path this environment admits
-
-Still faked (deterministic, clearly marked): arithmetic-coded JPEG
-(raises -> per-record quarantine) and true video codec decode
-(H.264/VP9 inside mp4/webm) — this container has no PIL/pyav.
-Production swap-in: replace the fallbacks in
-``decode_image_features`` / ``frame_sample`` with PIL/pyav calls
-inside the same mapInPandas mappers — the dataflow (binary in,
-fixed-size feature array / frame rows out, map-only, no shuffle)
-does not change.
+No query, pipeline stage or CLI path reads these yet; the web-text
+filter works on text columns only.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = ("doc_id long, kind string, media binary, "
-                "meta struct<mime:string, width:int, height:int, "
-                "duration_ms:int>")
-
-IMAGE_FEATURES = 16
+PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
-def attach_media_stub(docs: DataFrame) -> DataFrame:
-    """Derive a deterministic fake media column from the text (so tests
-    exercise real binary columns without external data): media = utf-8
-    bytes, meta from simple arithmetic."""
-    return docs.select(
-        "doc_id",
-        F.lit("image").alias("kind"),
-        F.encode(F.substring("text", 1, 64), "UTF-8").alias("media"),
-        F.struct(
-            F.lit("image/fake").alias("mime"),
-            (F.col("n_chars") % 640).cast("int").alias("width"),
-            (F.col("n_chars") % 480).cast("int").alias("height"),
-            F.lit(0).cast("int").alias("duration_ms"),
-        ).alias("meta"))
+def make_png_bytes(width: int, height: int) -> bytes:
+    """Minimal structurally-valid PNG header (magic + IHDR chunk) with no
+    pixel data."""
+    import struct
+    ihdr = struct.pack(">II5B", width, height, 8, 2, 0, 0, 0)
+    return PNG_MAGIC + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
 
 
-def _fake_decode_image(data: bytes) -> list[float]:
-    """Deterministic stand-in for image decode + feature extraction:
-    16 floats derived from the md5 of the bytes. Raises if asked to do a
-    real decode."""
-    h = hashlib.md5(data or b"").digest()
-    return [b / 255.0 for b in h]
+def sniff_bytes(data: bytes) -> tuple[str | None, int | None, int | None]:
+    """(mime, width, height) parsed from container headers:
+    - PNG: IHDR width/height, big-endian u32 at offsets 16/20
+    - GIF87a/89a: logical screen size, little-endian u16 at 6/8
+    Unknown containers -> (None, None, None)."""
+    import struct
+    if data[:8] == PNG_MAGIC and len(data) >= 24 and data[12:16] == b"IHDR":
+        w, h = struct.unpack(">II", data[16:24])
+        return "image/png", w, h
+    if data[:6] in GIF_MAGICS and len(data) >= 10:
+        w, h = struct.unpack("<HH", data[6:10])
+        return "image/gif", w, h
+    return None, None, None
 
 
 def png_decode_pixels(data: bytes):
@@ -467,426 +437,3 @@ def gif_encode_animated(frames, palette, delay_ms: int = 100) -> bytes:
     return bytes(out)
 
 
-def image_features_from_pixels(px) -> list[float]:
-    """(h, w, ch) pixels -> 16 features: grayscale, nearest-resample to
-    16x16, mean-pool 4x4 blocks, scale to [0,1]. Deterministic, and
-    robust to small pixel noise (so near-identical images land at
-    cos ~ 1 for the LSH near-dup join)."""
-    import numpy as np
-    px = np.asarray(px, dtype=np.float64)
-    gray = px[..., :3].mean(axis=2) if px.shape[2] >= 3 else px[..., 0]
-    h, w = gray.shape
-    ys = (np.arange(16) * h) // 16
-    xs = (np.arange(16) * w) // 16
-    g = gray[np.ix_(ys, xs)]
-    feats = g.reshape(4, 4, 4, 4).mean(axis=(1, 3)) / 255.0
-    return [float(v) for v in feats.reshape(-1)]
-
-
-def decode_image_features(media: DataFrame, real: bool = False) -> DataFrame:
-    """(doc_id, features: array<float>) via mapInPandas over binary media.
-
-    ``real=True``: PNG, GIF and baseline JPEG media are decoded to
-    actual pixels (stdlib — png_decode_pixels, gif_decode_pixels,
-    jpeg.jpeg_decode_pixels) and featurized from them; other containers
-    fall back to the byte-deterministic fake (production swaps the
-    fallback for PIL inside this same mapper)."""
-    from ..functions.scoring import _register_self_contained_pickling
-    _register_self_contained_pickling()
-    from . import jpeg as jpeg_mod
-
-    def one(data: bytes) -> list[float]:
-        if real and (data[:8] == PNG_MAGIC or data[:6] in GIF_MAGICS
-                     or data[:2] == b"\xff\xd8"):
-            # crawled media is routinely truncated/corrupt (and JPEGs
-            # may be progressive): a decode failure must quarantine the
-            # one record (fall back to the byte-deterministic
-            # featurizer), never kill the stage — same posture as the
-            # pipeline's ingest quarantine
-            try:
-                if data[:8] == PNG_MAGIC:
-                    px = png_decode_pixels(data)
-                elif data[:6] in GIF_MAGICS:
-                    px = gif_decode_pixels(data)
-                else:
-                    px = jpeg_mod.jpeg_decode_pixels(data)
-                return image_features_from_pixels(px)
-            except Exception:
-                return _fake_decode_image(data)
-        return _fake_decode_image(data)
-
-    def mapper(batches):
-        for pdf in batches:
-            feats = [one(bytes(m) if m is not None else b"")
-                     for m in pdf["media"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return media.select("doc_id", "media").mapInPandas(
-        mapper, schema="doc_id long, features array<double>")
-
-
-# ---------------------------------------------------------------------------
-# REAL audio: RIFF/WAVE PCM decode + features — no media library needed.
-# Compressed audio (MP3/AAC/Ogg/Opus) is identified by sniffing but NOT
-# decoded (no codec libs in the sandbox); those records quarantine to the
-# byte-deterministic fake, mirroring the image/video posture.
-# ---------------------------------------------------------------------------
-
-AUDIO_FEATURES = 8
-
-
-def wav_decode_samples(data: bytes):
-    """REAL stdlib+numpy WAV decode: RIFF chunk walk -> fmt (PCM u8/
-    s16/s24/s32 or IEEE float32) + data -> (samples float64 [n, ch] in
-    [-1, 1], sample_rate). Raises ValueError on non-WAV/compressed
-    formats (caller quarantines)."""
-    import struct
-    import numpy as np
-    if len(data) < 44 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    fmt = None
-    pcm = None
-    i = 12
-    while i + 8 <= len(data):
-        cid = data[i:i + 4]
-        size = struct.unpack("<I", data[i + 4:i + 8])[0]
-        body = data[i + 8:i + 8 + size]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("truncated WAV fmt chunk")
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            pcm = body
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or pcm is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_fmt, n_ch, rate, _, _, bits = fmt
-    if audio_fmt == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE
-        raise ValueError("extensible WAV not supported")
-    if audio_fmt == 1:   # integer PCM
-        if bits == 8:
-            s = (np.frombuffer(pcm, dtype=np.uint8).astype(np.float64)
-                 - 128.0) / 128.0
-        elif bits == 16:
-            s = np.frombuffer(pcm, dtype="<i2").astype(np.float64) / 32768.0
-        elif bits == 24:
-            raw = np.frombuffer(pcm, dtype=np.uint8)
-            raw = raw[:len(raw) - len(raw) % 3].reshape(-1, 3)
-            v = (raw[:, 0].astype(np.int32)
-                 | (raw[:, 1].astype(np.int32) << 8)
-                 | (raw[:, 2].astype(np.int32) << 16))
-            v = np.where(v >= 1 << 23, v - (1 << 24), v)
-            s = v.astype(np.float64) / float(1 << 23)
-        elif bits == 32:
-            s = np.frombuffer(pcm, dtype="<i4").astype(np.float64) \
-                / float(1 << 31)
-        else:
-            raise ValueError("unsupported PCM bit depth %d" % bits)
-    elif audio_fmt == 3 and bits == 32:  # IEEE float
-        s = np.frombuffer(pcm, dtype="<f4").astype(np.float64)
-    else:
-        raise ValueError("compressed WAV format %d not supported"
-                         % audio_fmt)
-    n_ch = max(1, n_ch)
-    s = s[:len(s) - len(s) % n_ch].reshape(-1, n_ch)
-    return s, rate
-
-
-def wav_encode(samples, rate: int) -> bytes:
-    """16-bit little-endian PCM WAV writer (fixture/test support)."""
-    import struct
-    import numpy as np
-    s = np.asarray(samples, dtype=np.float64)
-    if s.ndim == 1:
-        s = s[:, None]
-    pcm = np.clip(np.round(s * 32767.0), -32768, 32767) \
-        .astype("<i2").tobytes()
-    n_ch = s.shape[1]
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * n_ch * 2,
-                      n_ch * 2, 16)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def audio_features_from_samples(samples, rate: int) -> list[float]:
-    """8 deterministic features from decoded audio: duration_s, rms,
-    peak, zero-crossing rate, and 4 coarse FFT band energy fractions
-    (0-1/8, 1/8-1/4, 1/4-1/2, 1/2-1 of Nyquist) of the channel-mean
-    signal. Scale-stable so near-identical clips land near cos ~ 1 in
-    the embedding near-dup join (the audio analog of
-    image_features_from_pixels)."""
-    import numpy as np
-    s = np.asarray(samples, dtype=np.float64)
-    mono = s.mean(axis=1) if s.ndim == 2 else s
-    n = mono.size
-    if not n:
-        return [0.0] * AUDIO_FEATURES
-    dur = n / float(rate or 1)
-    rms = float(np.sqrt(np.mean(mono * mono)))
-    peak = float(np.abs(mono).max())
-    zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) \
-        if n > 1 else 0.0
-    spec = np.abs(np.fft.rfft(mono)) ** 2
-    tot = float(spec.sum()) or 1.0
-    m = spec.size
-    bands = [float(spec[a:b].sum()) / tot for a, b in
-             ((0, m // 8), (m // 8, m // 4), (m // 4, m // 2), (m // 2, m))]
-    return [dur, rms, peak, zcr] + bands
-
-
-def decode_audio_features(media: DataFrame, real: bool = False) -> DataFrame:
-    """(doc_id, features: array<double>) via mapInPandas over binary
-    audio media — map-only, no shuffle, same plumbing as
-    decode_image_features. ``real=True``: RIFF/WAVE PCM decodes for
-    real; compressed audio (MP3/Ogg/M4A — pyav/ffmpeg is the production
-    swap-in inside this same mapper) and corrupt records quarantine to
-    the byte-deterministic fake."""
-    from ..functions.scoring import _register_self_contained_pickling
-    _register_self_contained_pickling()
-
-    def one(data: bytes) -> list[float]:
-        if real and data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-            try:
-                s, rate = wav_decode_samples(data)
-                return audio_features_from_samples(s, rate)
-            except Exception:
-                pass  # truncated/compressed -> per-record quarantine
-        h = hashlib.md5(data or b"").digest()
-        return [b / 255.0 for b in h[:AUDIO_FEATURES]]
-
-    def mapper(batches):
-        for pdf in batches:
-            feats = [one(bytes(m) if m is not None else b"")
-                     for m in pdf["media"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return media.select("doc_id", "media").mapInPandas(
-        mapper, schema="doc_id long, features array<double>")
-
-
-# ---------------------------------------------------------------------------
-# REAL header sniffing: mime + pixel dimensions parsed from the actual
-# container bytes (PNG IHDR / GIF logical screen / JPEG SOF markers) — no
-# media library needed; only pixel DECODE is stubbed.
-# ---------------------------------------------------------------------------
-
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def make_png_bytes(width: int, height: int) -> bytes:
-    """Minimal structurally-valid PNG header (magic + IHDR chunk) — used
-    by tests/fixtures to exercise the sniffing on real container bytes."""
-    import struct
-    ihdr = struct.pack(">II5B", width, height, 8, 2, 0, 0, 0)
-    return PNG_MAGIC + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
-
-
-def sniff_bytes(data: bytes) -> tuple[str | None, int | None, int | None]:
-    """(mime, width, height) parsed from container headers:
-    - PNG: IHDR width/height, big-endian u32 at offsets 16/20
-    - GIF87a/89a: logical screen size, little-endian u16 at 6/8
-    - JPEG: walk the marker stream to the first SOF0-SOF15 frame header
-    - MP4/ISO-BMFF: ftyp magic; dims from the video track's sample
-      entry when the box walk succeeds (best-effort — a worker without
-      the mp4 module still reports the mime)
-    Unknown containers -> (None, None, None)."""
-    import struct
-    if not data:
-        return None, None, None
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        try:
-            from filtlong_spark.operators import mp4 as _mp4
-            trk = _mp4.parse_video_track(data)
-            if trk is not None and trk.width and trk.height:
-                return "video/mp4", trk.width, trk.height
-        except Exception:
-            pass
-        return "video/mp4", None, None
-    if data[:4] == b"\x1a\x45\xdf\xa3":  # EBML -> Matroska/WebM
-        try:
-            from filtlong_spark.operators import mkv as _mkv
-            # DocType decides the mime even when no video track parses
-            # (audio-only WebM is common in a crawl)
-            mime = ("video/webm"
-                    if _mkv.ebml_doc_type(data) == "webm"
-                    else "video/x-matroska")
-            trk = _mkv.parse_video_track(data)
-            if trk is not None and trk.width and trk.height:
-                return mime, trk.width, trk.height
-            return mime, None, None
-        except Exception:
-            pass
-        return "video/x-matroska", None, None
-    if data[:8] == PNG_MAGIC and len(data) >= 24 and data[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", data[16:24])
-        return "image/png", w, h
-    if data[:6] in (b"GIF87a", b"GIF89a") and len(data) >= 10:
-        w, h = struct.unpack("<HH", data[6:10])
-        return "image/gif", w, h
-    if data[:2] == b"\xff\xd8":  # JPEG SOI
-        i = 2
-        while i + 9 < len(data):
-            if data[i] != 0xFF:
-                break
-            marker = data[i + 1]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", data[i + 5:i + 9])
-                return "image/jpeg", w, h
-            seg_len = struct.unpack(">H", data[i + 2:i + 4])[0]
-            i += 2 + seg_len
-        return "image/jpeg", None, None
-    # audio containers (dims are N/A -> None, None)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        return "audio/wav", None, None
-    if data[:4] == b"OggS":
-        return "audio/ogg", None, None
-    if data[:3] == b"ID3" or data[:2] in (b"\xff\xfb", b"\xff\xf3",
-                                          b"\xff\xf2"):
-        return "audio/mpeg", None, None
-    if data[:4] == b"fLaC":
-        return "audio/flac", None, None
-    return None, None, None
-
-
-def sniff_media_meta(media: DataFrame) -> DataFrame:
-    """(doc_id, mime, width, height) from the binary column via one
-    map-only Arrow pass — REAL header parsing, not a fake."""
-    from ..functions.scoring import _register_self_contained_pickling
-    _register_self_contained_pickling()
-
-    def mapper(batches):
-        for pdf in batches:
-            mimes, ws, hs = [], [], []
-            for m in pdf["media"]:
-                mime, w, h = sniff_bytes(bytes(m) if m is not None else b"")
-                mimes.append(mime)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "mime": mimes,
-                                "width": ws, "height": hs})
-
-    return media.select("doc_id", "media").mapInPandas(
-        mapper, schema="doc_id long, mime string, width int, height int")
-
-
-def media_near_dups(media: DataFrame, threshold: float = 0.99,
-                    real: bool = False) -> DataFrame:
-    """End-to-end media dedup: binary -> feature vector (real pixel
-    features for PNG under real=True; byte-deterministic fake otherwise)
-    -> the SAME banded sign-LSH self-join as text embeddings
-    (similarity.near_dup_pairs). Swap the featurizer for a real CNN/CLIP
-    embedding and nothing downstream changes."""
-    from .similarity import near_dup_pairs
-    feats = decode_image_features(media, real=real).select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("features").alias("embedding"))
-    return near_dup_pairs(feats, threshold=threshold)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000,
-                 real: bool = False) -> DataFrame:
-    """Frame sampling: emits (doc_id, frame_idx, frame binary) rows —
-    one-to-many mapInPandas, map-only, no shuffle.
-
-    ``real=True``: the multi-frame containers decodable without a media
-    library decode for REAL —
-    - animated GIFs: frames composited on the canvas, sampled along the
-      GCE-delay timeline (first frame of each ``every_ms`` bucket);
-    - MJPEG-in-MP4: the ISO BMFF sample tables (operators/mp4.py)
-      locate the per-frame JPEG samples, sampled along the stts
-      duration timeline and pixel-decoded by operators/jpeg.py;
-    - MJPEG-in-Matroska/WebM: the EBML SimpleBlock walk
-      (operators/mkv.py) does the same from cluster timestamps;
-    both re-encode sampled frames as PNG bytes so every downstream
-    image stage (decode_image_features, media_near_dups) consumes them
-    unchanged. Compressed-codec video (H.264/VP9 — pyav is the
-    production swap-in inside this same mapper) keeps the
-    deterministic byte-slice fake; a corrupt container quarantines to
-    the fake rather than failing the stage."""
-    from ..functions.scoring import _register_self_contained_pickling
-    _register_self_contained_pickling()
-    from . import jpeg as jpeg_mod
-    from . import mp4 as mp4_mod
-    from . import mkv as mkv_mod
-
-    def fake_frames(doc_id, m, meta):
-        n_frames = max(1, (meta["duration_ms"] or 0) // every_ms) \
-            if isinstance(meta, dict) else 1
-        data = m or b""
-        return [(doc_id, i, data[i::max(1, int(n_frames))])
-                for i in range(int(n_frames))]
-
-    def gif_frames(doc_id, data):
-        frames, delays = gif_decode_frames(data)
-        out = []
-        t = 0
-        next_sample = 0
-        for j, (fr, d) in enumerate(zip(frames, delays)):
-            if t >= next_sample:
-                out.append((doc_id, len(out), png_encode(fr)))
-                next_sample = (t // every_ms + 1) * every_ms
-            # zero-delay GCEs are rampant in crawled GIFs; browsers
-            # clamp 0 to ~100 ms, so mirror that — otherwise the
-            # timeline never advances and the whole animation
-            # collapses into one sampled frame.
-            t += d if d > 0 else 100
-        return out
-
-    def mjpeg_timeline_frames(doc_id, samples):
-        # sampling mirrors the GIF timeline (first frame of each
-        # every_ms bucket, zero durations clamped like zero GCE delays)
-        out = []
-        t = 0
-        next_sample = 0
-        for sample, dur in samples:
-            if t >= next_sample:
-                px = jpeg_mod.jpeg_decode_pixels(sample)
-                out.append((doc_id, len(out), png_encode(px)))
-                next_sample = (t // every_ms + 1) * every_ms
-            t += dur if dur > 0 else 100
-        return out
-
-    def mp4_frames(doc_id, data):
-        # raises for compressed codecs / broken boxes -> caller falls back
-        return mjpeg_timeline_frames(doc_id, mp4_mod.mjpeg_frames(data))
-
-    def mkv_frames(doc_id, data):
-        # raises for compressed codecs / broken EBML -> caller falls back
-        return mjpeg_timeline_frames(doc_id, mkv_mod.mjpeg_frames(data))
-
-    def mapper(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, m, meta in zip(pdf["doc_id"], pdf["media"],
-                                       pdf["meta"]):
-                data = bytes(m) if m is not None else b""
-                if real and data[:6] in GIF_MAGICS:
-                    try:
-                        rows.extend(gif_frames(doc_id, data))
-                        continue
-                    except Exception:
-                        pass  # corrupt animation -> deterministic fake
-                if real and len(data) >= 12 and data[4:8] == b"ftyp":
-                    try:
-                        rows.extend(mp4_frames(doc_id, data))
-                        continue
-                    except Exception:
-                        pass  # compressed codec / corrupt -> fake
-                if real and data[:4] == mkv_mod.EBML_MAGIC:
-                    try:
-                        rows.extend(mkv_frames(doc_id, data))
-                        continue
-                    except Exception:
-                        pass  # compressed codec / corrupt -> fake
-                rows.extend(fake_frames(doc_id, m, meta))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx",
-                                              "frame"])
-
-    return media.mapInPandas(
-        mapper, schema="doc_id long, frame_idx int, frame binary")
-
-
-def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Back-compat alias: frame_sample with the deterministic fake."""
-    return frame_sample(media, every_ms, real=False)

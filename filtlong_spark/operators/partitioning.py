@@ -72,7 +72,7 @@ def host_quality_gate(docs: DataFrame, vocab,
     SEO link mills) are cut wholesale even when individual pages squeak
     past per-doc thresholds.
 
-    Scale shape: one explode + hash aggregate at doc grain, a host-grain
+    Scale shape: one map-only token-stats pass at doc grain, a host-grain
     re-aggregate (rows = distinct hosts, tiny), and an AQE-broadcast
     join back to doc grain — host skew never concentrates load because
     the per-host row is built by partial aggregation, not by grouping
@@ -80,8 +80,8 @@ def host_quality_gate(docs: DataFrame, vocab,
     Exact integer-count ratios -> mirrored bit-for-bit by the
     host_gate DuckDB oracle."""
     from ..functions import textstats as ts
-    # doc-grain token counting is map-only (textstats.token_stats arrow
-    # engine — no explode exchange); zero-token docs emit no stats row,
+    # doc-grain token counting is map-only (textstats.token_stats — no
+    # explode exchange); zero-token docs emit no stats row,
     # so rejoin the doc list for EVERY doc's verdict (and oracle row
     # counts)
     st = ts.token_stats(docs, vocab)

@@ -233,8 +233,8 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
             valid = valid.join(dup_urls, "url", "left_anti")
         # 3. model-based quality gate (DCLM order: dedup -> classifier):
         #    linear logit over guarded-ratio features, weights folded
-        #    into the plan as literals — one explode + hash agg + doc-
-        #    grain join, no broadcast variable, no Python stage
+        #    into the plan as literals — one map-only Arrow feature
+        #    pass, no join, no broadcast variable
         if cfg.clf_threshold is not None:
             from ..operators import classifier as clf_op
             w = (clf_op.weights_from_tuple(cfg.clf_weights)

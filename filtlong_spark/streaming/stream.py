@@ -41,22 +41,20 @@ def score_stream(spark: SparkSession, pages_stream: DataFrame,
 def pages_stream_clf_gate(spark: SparkSession, source_dir: str,
                           vocab, threshold: float = 0.0,
                           weights: dict | None = None) -> DataFrame:
-    """Streaming model-based quality gate: the classifier logit is a
-    stateless per-row expression (one explode + per-microbatch hash
-    aggregate on the doc key + literal-folded linear combination), so
-    it runs unchanged under Structured Streaming — ingest-time
-    classifier gating into the staging table, the DCLM order rendered
-    as a stream. Emits (url, <features>, clf_score, keep) in append
-    mode; availableNow backfill == the batch operator (pytest-
-    asserted)."""
+    """Streaming model-based quality gate: the classifier is stateless
+    per row (one map-only Arrow feature pass + literal-folded linear
+    combination), so it runs unchanged under Structured Streaming —
+    ingest-time classifier gating into the staging table, the DCLM
+    order rendered as a stream. Emits (url, <features>, clf_score,
+    keep) in append mode; availableNow backfill == the batch operator
+    (pytest-asserted)."""
     from ..operators import classifier as clf_op
     pages = (spark.readStream.schema(
         "url string, warc_ts timestamp, html binary, "
         "text string, lang string").parquet(source_dir))
     return clf_op.quality_classifier(pages, sorted(vocab),
                                      weights=weights,
-                                     threshold=threshold, key="url",
-                                     engine="arrow")
+                                     threshold=threshold, key="url")
 
 
 def events_stream_rollup(spark: SparkSession, source_dir: str,

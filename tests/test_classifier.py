@@ -4,6 +4,9 @@ these pin the semantics — every doc scored, guarded divides, and the
 offline fit_weights -> literal-fold -> map-only scoring loop actually
 separates classes."""
 
+import re
+
+from filtlong_spark.functions.textstats import STOPWORDS
 from filtlong_spark.operators import classifier as clf
 
 VOCAB = ("alpha", "beta", "gamma", "delta")
@@ -58,10 +61,35 @@ def test_fit_weights_separates_and_feeds_scorer(spark):
     assert clf.fit_weights(X, y) == w
 
 
-def test_arrow_engine_bit_identical_to_agg(spark):
-    """engine='arrow' (streaming-safe map-only pass) reproduces the
-    codegen aggregate path bit-for-bit across varied shapes: unicode,
-    symbols, repeated tokens, empties, whitespace-only."""
+def _reference_row(doc_id, text):
+    """Pure-Python reference for one output row: ASCII \\S+ tokens
+    (Java and RE2 treat \\s as ASCII-only) and the same guarded
+    ratios and left-associative logit chain as the engine."""
+    t = text or ""
+    toks = re.findall(r"\S+", t, re.ASCII)
+    n = len(toks)
+
+    def ratio(num, den):
+        return num / den if den > 0 else 0.0
+
+    feats = {
+        "mean_word_len": ratio(sum(len(x) for x in toks), n),
+        "stopword_frac": ratio(sum(x in STOPWORDS for x in toks), n),
+        "vocab_frac": ratio(sum(x in VOCAB for x in toks), n),
+        "symbol_ratio": ratio(len(re.sub("[A-Za-z0-9 ]", "", t)), len(t)),
+        "dup_frac": 1.0 - len(set(toks)) / n if n else 0.0,
+    }
+    w = clf.DEFAULT_WEIGHTS
+    logit = w["bias"]
+    for f in clf.FEATURES:
+        logit = logit + w[f] * feats[f]
+    return (doc_id, *(feats[f] for f in clf.FEATURES), logit, logit >= 0.0)
+
+
+def test_features_match_python_reference(spark):
+    """The map-only feature pass reproduces the pure-Python reference
+    bit-for-bit across varied shapes: unicode, symbols, repeated
+    tokens, empties, whitespace-only, non-BMP chars and NULL text."""
     rows = [(1, "alpha beta the of gamma delta"),
             (2, ""), (3, "   \t  "),
             (4, "z" * 50), (5, "a b c d e f g a b c"),
@@ -69,12 +97,25 @@ def test_arrow_engine_bit_identical_to_agg(spark):
             (7, "$$$ alpha $$$ beta %%%"),
             (8, "the the the the the"),
             # Unicode whitespace: NBSP / ideographic space / line sep are
-            # TOKEN chars under ASCII \S (Java + RE2 semantics) — the
-            # arrow path must agree, not split on them (Python default \s)
-            (9, "alpha beta gamma　delta the of")]
-    df = _df(spark, rows)
-    agg = {r["doc_id"]: tuple(r) for r in
-           clf.quality_classifier(df, VOCAB).collect()}
-    arrow = {r["doc_id"]: tuple(r) for r in
-             clf.quality_classifier(df, VOCAB, engine="arrow").collect()}
-    assert agg == arrow
+            # TOKEN chars under ASCII \S (Java + RE2 semantics), not
+            # separators (Python's default Unicode \s)
+            (9, "alpha\u00a0beta gamma\u3000delta the\u2028of"),
+            # non-BMP: one char each, though Java strings hold each as
+            # a surrogate pair
+            (10, "\U0001d518\U0001d52b\U0001d526 alpha"),
+            (11, None)]
+    got = {r["doc_id"]: tuple(r) for r in
+           clf.quality_classifier(_df(spark, rows), VOCAB).collect()}
+    assert got == {i: _reference_row(i, t) for i, t in rows}
+
+
+def test_plan_is_one_python_map_without_join(spark):
+    """Features come from ONE Arrow map over the input — no aggregate
+    joined back to a second scan of the same docs."""
+    df = clf.quality_classifier(_df(spark, [(1, "alpha beta")]), VOCAB)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    nodes = [re.sub(r"^[\s:+\-]*", "", ln).split(" ")[0]
+             for ln in plan.splitlines()]
+    assert "Join" not in nodes, plan
+    assert sum(n.startswith("MapIn") or "Python" in n
+               for n in nodes) == 1, plan

@@ -252,3 +252,13 @@ def test_batch_tokenize_surrogate_fallback():
     assert tb.tokens == [t for d in exp for t, _, _ in d]
     assert tb.counts.tolist() == [len(d) for d in exp]
     assert tb.starts.tolist() == [s for d in exp for _, s, _ in d]
+
+
+def test_pickle_by_value_modules_import():
+    """Every module the UDF pickling registry names must exist: the
+    registry skips names missing from sys.modules, so a stale entry
+    would otherwise go unnoticed."""
+    import importlib
+    from filtlong_spark.functions.scoring import PICKLE_BY_VALUE_MODULES
+    for mod in PICKLE_BY_VALUE_MODULES:
+        importlib.import_module(mod)

@@ -172,10 +172,9 @@ def test_streaming_near_dedup_by_simhash(spark, tmp_path):
 
 
 def test_streaming_clf_gate_matches_batch(spark, tmp_path):
-    """Streaming classifier gate: the Arrow map-only feature path runs
-    under availableNow and produces EXACTLY the batch aggregate path's
-    rows (features, logit, keep) — the engine='arrow' == engine='agg'
-    equivalence plus the stream drive in one assertion."""
+    """Streaming classifier gate: the map-only feature pass runs under
+    availableNow and produces EXACTLY the batch classifier's rows
+    (features, logit, keep)."""
     import datetime
     from filtlong_spark.operators import classifier as clf
     from filtlong_spark.streaming import stream as st

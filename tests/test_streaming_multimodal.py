@@ -1,4 +1,4 @@
-"""Structured Streaming scorer + multimodal plumbing."""
+"""Structured Streaming scorer + the still-image (PNG/GIF) codecs."""
 
 import pytest
 
@@ -40,32 +40,12 @@ def test_stream_matches_batch(spark, tmp_path):
     assert len(streamed) > 0
 
 
-def test_media_schema_and_decode(spark, sf_dir="/root/testdata/sf0.001"):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    media = mm.attach_media_stub(docs)
-    assert media.schema.simpleString() == (
-        "struct<doc_id:bigint,kind:string,media:binary,"
-        "meta:struct<mime:string,width:int,height:int,duration_ms:int>>")
-    feats = mm.decode_image_features(media).collect()
-    assert len(feats) == 50
-    assert all(len(r["features"]) == 16 for r in feats)
-    # deterministic: same input -> same features
-    again = mm.decode_image_features(media).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, again))
-
-
-def _checker_pixels(w=32, h=32, noise_seed=None):
-    """8x8-checkerboard RGB image (+ optional tiny noise)."""
+def _checker_pixels(w=32, h=32):
+    """8x8-checkerboard RGB image."""
     import numpy as np
     yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
     base = (((yy // 8) + (xx // 8)) % 2) * 200 + 20
-    px = np.stack([base, base // 2, 255 - base], axis=2).astype(np.uint8)
-    if noise_seed is not None:
-        rng = np.random.default_rng(noise_seed)
-        px = np.clip(px.astype(np.int32)
-                     + rng.integers(-2, 3, size=px.shape), 0, 255
-                     ).astype(np.uint8)
-    return px
+    return np.stack([base, base // 2, 255 - base], axis=2).astype(np.uint8)
 
 
 class TestPngDecode:
@@ -102,20 +82,6 @@ class TestPngDecode:
         data = mm.png_encode(_checker_pixels(24, 16))
         assert mm.sniff_bytes(data) == ("image/png", 24, 16)
         assert mm.png_decode_pixels(data).shape == (16, 24, 3)
-
-
-def test_real_decode_from_actual_pixels(spark):
-    """real=True featurizes PNG media from DECODED pixels: the Spark
-    features equal the driver-side pixel featurization."""
-    px = _checker_pixels()
-    data = mm.png_encode(px, filter_type=4)
-    media = spark.createDataFrame([(1, "image", data)],
-                                  "doc_id long, kind string, media binary")
-    [row] = mm.decode_image_features(media, real=True).collect()
-    assert row["features"] == pytest.approx(
-        mm.image_features_from_pixels(px))
-    # and the fake would have produced something different
-    assert row["features"] != pytest.approx(mm._fake_decode_image(data))
 
 
 class TestGifDecode:
@@ -198,438 +164,11 @@ class TestGifDecode:
             assert (frames[k] == pal_a[fr[k]]).all()
 
 
-def test_frame_sample_real_animated_gif(spark):
-    """frame_sample(real=True): an animated GIF's frames are REALLY
-    decoded, sampled on the delay timeline (every_ms buckets), and
-    emitted as PNG bytes the downstream image path can decode; corrupt
-    media falls back to the deterministic fake."""
-    import numpy as np
-    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    fr = [np.full((6, 8), k % 4, dtype=np.uint8) for k in range(5)]
-    data = mm.gif_encode_animated(fr, pal, delay_ms=500)  # 2.5s timeline
-    media = spark.createDataFrame(
-        [(1, "video", data,
-          {"mime": "image/gif", "width": 8, "height": 6,
-           "duration_ms": 2500})],
-        mm.MEDIA_SCHEMA)
-    rows = sorted(mm.frame_sample(media, every_ms=1000, real=True)
-                  .collect(), key=lambda r: r["frame_idx"])
-    # delays 0/500/1000/1500/2000 -> first frame of each 1000ms bucket:
-    # t=0 (frame 0), t=1000 (frame 2), t=2000 (frame 4)
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2]
-    pal_a = np.array(pal, dtype=np.uint8)
-    for r, src in zip(rows, (fr[0], fr[2], fr[4])):
-        px = mm.png_decode_pixels(bytes(r["frame"]))
-        assert (px == pal_a[src]).all()
-
-
-def test_frame_sample_zero_delay_gif_advances_timeline(spark):
-    """Zero-delay GCEs (rampant in crawled GIFs; browsers clamp to
-    ~100 ms) must still advance the sampling timeline — a 30-frame
-    all-zero-delay animation samples multiple frames, not one."""
-    import numpy as np
-    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    fr = [np.full((4, 4), k % 4, dtype=np.uint8) for k in range(30)]
-    data = mm.gif_encode_animated(fr, pal, delay_ms=0)
-    media = spark.createDataFrame(
-        [(1, "video", data,
-          {"mime": "image/gif", "width": 4, "height": 4,
-           "duration_ms": 0})],
-        mm.MEDIA_SCHEMA)
-    rows = mm.frame_sample(media, every_ms=1000, real=True).collect()
-    # 30 frames at the 100ms clamp = 3.0s timeline -> buckets at
-    # t=0, t=1000, t=2000: frames 0, 10, 20
-    assert sorted(r["frame_idx"] for r in rows) == [0, 1, 2]
-    pal_a = np.array(pal, dtype=np.uint8)
-    by_idx = {r["frame_idx"]: r for r in rows}
-    for i, src in zip((0, 1, 2), (fr[0], fr[10], fr[20])):
-        px = mm.png_decode_pixels(bytes(by_idx[i]["frame"]))
-        assert (px == pal_a[src]).all()
-
-
-def _mjpeg_mp4(n_frames=3, dur_ms=500, w=24, h=16, shift=0):
-    """MJPEG-in-MP4 fixture: n distinct near-lossless JPEG frames."""
-    import numpy as np
-    from filtlong_spark.operators import jpeg, mp4
-    frames = []
-    for i in range(n_frames):
-        px = np.full((h, w, 3), 40 + 60 * ((i + shift) % 4),
-                     dtype=np.uint8)
-        px[4:h - 4, 6:w - 6, (i + shift) % 3] = 250
-        frames.append(px)
-    jpegs = [jpeg.jpeg_encode(f) for f in frames]
-    return mp4.mp4_encode_mjpeg(jpegs, [dur_ms] * n_frames, w, h), \
-        frames, jpegs
-
-
-def test_frame_sample_real_mjpeg_mp4(spark):
-    """frame_sample(real=True): an MJPEG-in-MP4's samples are located
-    via the ISO BMFF sample tables, decoded by the JPEG codec, sampled
-    on the stts duration timeline, and emitted as PNG bytes the
-    downstream image path consumes unchanged."""
-    from filtlong_spark.operators import jpeg
-    data, frames, jpegs = _mjpeg_mp4(n_frames=3, dur_ms=500)
-    media = spark.createDataFrame(
-        [(1, "video", data,
-          {"mime": "video/mp4", "width": 24, "height": 16,
-           "duration_ms": 1500})],
-        mm.MEDIA_SCHEMA)
-    rows = sorted(mm.frame_sample(media, every_ms=1000, real=True)
-                  .collect(), key=lambda r: r["frame_idx"])
-    # durations 500ms -> t=0 (sample 0) and t=1000 (sample 2)
-    assert [r["frame_idx"] for r in rows] == [0, 1]
-    for r, src_jpeg in zip(rows, (jpegs[0], jpegs[2])):
-        px = mm.png_decode_pixels(bytes(r["frame"]))
-        assert (px == jpeg.jpeg_decode_pixels(src_jpeg)).all()
-
-
-def test_mp4_compressed_codec_quarantines(spark):
-    """An avc1 (H.264) track is identified but NOT decoded — the
-    record falls back to the deterministic byte-slice fake instead of
-    failing the stage."""
-    data, _, _ = _mjpeg_mp4()
-    avc = data.replace(b"jpeg", b"avc1")  # fourcc lives in stsd only
-    meta = {"mime": "video/mp4", "width": 24, "height": 16,
-            "duration_ms": 1500}
-    media = spark.createDataFrame(
-        [(1, "video", avc, meta)], mm.MEDIA_SCHEMA)
-    rows = mm.frame_sample(media, every_ms=1000, real=True).collect()
-    fake = mm.frame_sample(media, every_ms=1000, real=False).collect()
-    assert sorted((r["frame_idx"], bytes(r["frame"])) for r in rows) \
-        == sorted((r["frame_idx"], bytes(r["frame"])) for r in fake)
-
-
-def test_mp4_sniff_and_near_dup_pipeline(spark):
-    """End-to-end: two MJPEG MP4s sharing one identical frame ->
-    frame_sample -> decode_image_features(real=True) -> the banded LSH
-    near-dup join finds the cross-video duplicate frame."""
-    from pyspark.sql import functions as F
-    data_a, _, _ = _mjpeg_mp4(n_frames=2, dur_ms=1000, shift=0)
-    data_b, _, _ = _mjpeg_mp4(n_frames=2, dur_ms=1000, shift=1)
-    assert mm.sniff_bytes(data_a) == ("video/mp4", 24, 16)
-    media = spark.createDataFrame(
-        [(1, "video", data_a, None), (2, "video", data_b, None)],
-        mm.MEDIA_SCHEMA)
-    frames = mm.frame_sample(media, every_ms=1000, real=True)
-    # every sampled frame becomes a standalone image document
-    frame_media = frames.select(
-        (F.col("doc_id") * 10 + F.col("frame_idx")).alias("doc_id"),
-        F.col("frame").alias("media"))
-    pairs = {(r["probe_id"], r["vec_id"])
-             for r in mm.media_near_dups(frame_media, threshold=0.999,
-                                         real=True).collect()}
-    # video 1 samples frames (0,1); video 2 frames (1,2) of the same
-    # cycle -> doc 11 (video 1, frame 1) == doc 20 (video 2, frame 0)
-    assert (11, 20) in pairs
-
-
-# CPython's own 16x16 test JPEG (Lib/test/imghdrdata/python.jpg) — a
-# real libjpeg-produced baseline file (standard quant + huffman tables,
-# subsampled chroma): the decoder must handle files we did not write.
-REAL_JPEG_B64 = (
-    "/9j/4AAQSkZJRgABAQEAAQABAAD/2wBDAAMCAgICAgMCAgIDAwMDBAYEBAQEBAgG"
-    "BgUGCQgKCgkICQkKDA8MCgsOCwkJDRENDg8QEBEQCgwSExIQEw8QEBD/2wBDAQMD"
-    "AwQDBAgEBAgQCwkLEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQEBAQ"
-    "EBAQEBAQEBAQEBAQEBD/wAARCAAQABADASIAAhEBAxEB/8QAFgABAQEAAAAAAAAA"
-    "AAAAAAAABwQF/8QAJBAAAQQBBAICAwAAAAAAAAAAAQIDBAYFBwgSExEiABQJMTL/"
-    "xAAVAQEBAAAAAAAAAAAAAAAAAAAABv/EACMRAAECBQMFAAAAAAAAAAAAAAECEQME"
-    "BQYhABIxFRZhgeH/2gAMAwEAAhEDEQA/ABSm0mobc8HmExLUlRzzEWPkJWW+ulrs"
-    "aUVAseUgslSlH9LKuPryIKuWPZdskzXmm3fX5m2nF4GlVxx/HOpx4ks51+MiU/Ia"
-    "ad7UcUo4tILoS4kqcWkezS0hO/HvuRp0rO6hWnWO1UisZVuFi4GFeyEpmGepa5S5"
-    "SWVPuciFKRFLgSrwetnyPIB+Vb4N9mKhQMzo5po9XLdDs9d6ZVix2VEhiL9kuNPx"
-    "w2gEKcDQ/rs8AuA8VAe0vdl7VOYn+27flGAUgmITjbhSmCg3BYlyeWDkMolvw4KO"
-    "p1KM6iCNvngZHwetf//Z")
-
-
-class TestJpegCodec:
-    def _px(self):
-        import numpy as np
-        rng = np.random.default_rng(7)
-        yy, xx = np.mgrid[0:24, 0:33]
-        px = np.zeros((24, 33, 3), dtype=np.uint8)
-        px[..., 0] = (yy * 7 + xx * 3) % 256
-        px[..., 1] = ((yy // 8) * 60 + (xx // 8) * 20) % 256
-        px[..., 2] = rng.integers(0, 256, (24, 33))
-        return px
-
-    def test_roundtrip_444_near_lossless(self):
-        """All-ones quant tables: the only error left is DCT float
-        rounding + color-space rounding — within +-3 per channel."""
-        import numpy as np
-        from filtlong_spark.operators import jpeg
-        px = self._px()
-        out = jpeg.jpeg_decode_pixels(jpeg.jpeg_encode(px))
-        assert out.shape == px.shape
-        assert int(np.abs(out.astype(int) - px.astype(int)).max()) <= 3
-
-    def test_roundtrip_420_with_restarts(self):
-        """2x2 chroma subsampling + DRI restart intervals: luma must
-        stay near-exact (it is never subsampled); chroma is lossy."""
-        import numpy as np
-        from filtlong_spark.operators import jpeg
-        px = self._px()
-        data = jpeg.jpeg_encode(px, subsample=(2, 2), restart_interval=2)
-        out = jpeg.jpeg_decode_pixels(data)
-        luma = lambda a: (0.299 * a[..., 0] + 0.587 * a[..., 1]
-                          + 0.114 * a[..., 2])
-        err = np.abs(luma(out.astype(float)) - luma(px.astype(float)))
-        assert float(err.mean()) < 3.0
-
-    def test_decodes_real_libjpeg_file(self):
-        """A file produced by libjpeg (standard Annex-K tables,
-        subsampled) — not by our encoder."""
-        import base64
-        from filtlong_spark.operators import jpeg, multimodal as m2
-        data = base64.b64decode(REAL_JPEG_B64)
-        assert m2.sniff_bytes(data) == ("image/jpeg", 16, 16)
-        px = jpeg.jpeg_decode_pixels(data)
-        assert px.shape == (16, 16, 3)
-        assert px.std() > 0  # actual image content, not a flat fill
-
-    def test_rejects_arithmetic_and_corrupt(self):
-        import base64
-
-        import pytest as _pytest
-        from filtlong_spark.operators import jpeg
-        data = bytearray(base64.b64decode(REAL_JPEG_B64))
-        sof = data.find(b"\xff\xc0")
-        # a baseline file whose frame marker is rewritten to SOF2 has a
-        # baseline-shaped SOS (Ss=0, Se=63) — an invalid progressive
-        # scan script the decoder must reject, not misdecode
-        data[sof + 1] = 0xC2
-        with _pytest.raises(ValueError):
-            jpeg.jpeg_decode_pixels(bytes(data))
-        data[sof + 1] = 0xCA  # SOF10: arithmetic coding — unsupported
-        with _pytest.raises(ValueError):
-            jpeg.jpeg_decode_pixels(bytes(data))
-        with _pytest.raises(ValueError):
-            jpeg.jpeg_decode_pixels(b"\xff\xd8truncated")
-        good = base64.b64decode(REAL_JPEG_B64)
-        with _pytest.raises(ValueError):
-            jpeg.jpeg_decode_pixels(good[: len(good) // 2])
-
-
-# a real libjpeg-produced PROGRESSIVE file shipped with the Rust
-# toolchain docs in this environment (720x477 photo, 10-scan script:
-# interleaved DC first, spectral-band AC firsts, DC refine, AC
-# refines — with cross-block EOB runs throughout)
-REAL_PROGRESSIVE_PATHS = [
-    "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/"
-    "doc/rust/html/embedded-book/assets/f3.jpg",
-    "/root/.rustup/toolchains/nightly-x86_64-unknown-linux-gnu/share/"
-    "doc/rust/html/embedded-book/assets/f3.jpg",
-]
-
-
-class TestJpegProgressive:
-    def _px(self):
-        import numpy as np
-        rng = np.random.default_rng(7)
-        yy, xx = np.mgrid[0:24, 0:33]
-        px = np.zeros((24, 33, 3), dtype=np.uint8)
-        px[..., 0] = (yy * 7 + xx * 3) % 256
-        px[..., 1] = ((yy // 8) * 60 + (xx // 8) * 20) % 256
-        px[..., 2] = rng.integers(0, 256, (24, 33))
-        return px
-
-    QT = [16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60,
-          55, 14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87,
-          80, 62, 18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81,
-          104, 113, 92, 49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95,
-          98, 112, 100, 103, 99]
-
-    def test_roundtrip_bit_identical_to_baseline(self):
-        """The successive-approximation split is lossless, so a
-        progressive encode of the same quantized coefficients must
-        decode to pixels BIT-identical to the baseline encode — across
-        subsampling modes and quant tables (the real table exercises
-        newly-significant refinement coefficients and cross-block EOB
-        runs; all-ones exercises dense high-magnitude bands)."""
-        import numpy as np
-        from filtlong_spark.operators import jpeg
-        px = self._px()
-        qt = np.asarray(self.QT)
-        for sub in [(1, 1), (2, 2), (2, 1)]:
-            for tabs in [None, (qt, qt)]:
-                base = jpeg.jpeg_decode_pixels(
-                    jpeg.jpeg_encode(px, quality_tables=tabs,
-                                     subsample=sub))
-                prog = jpeg.jpeg_decode_pixels(
-                    jpeg.jpeg_encode_progressive(px, quality_tables=tabs,
-                                                 subsample=sub))
-                assert (base == prog).all(), (sub, tabs is not None)
-
-    def test_eob_runs_span_blocks(self):
-        """Brutal quantization makes most AC bands all-zero -> the
-        encoder emits multi-block EOBn runs and the decoder's
-        eobrun-skip path must reproduce baseline exactly."""
-        import numpy as np
-        from filtlong_spark.operators import jpeg
-        flatq = np.full(64, 200)
-        px = self._px()
-        base = jpeg.jpeg_decode_pixels(
-            jpeg.jpeg_encode(px, quality_tables=(flatq, flatq),
-                             subsample=(2, 2)))
-        data = jpeg.jpeg_encode_progressive(
-            px, quality_tables=(flatq, flatq), subsample=(2, 2))
-        assert (base == jpeg.jpeg_decode_pixels(data)).all()
-        # the stream really contains an EOBn (r>0) symbol: every band
-        # of a flat-ish block quantized by 200 is zero, so runs >= 2
-        # must arise across the 12 luma blocks
-        flat = np.full((48, 64, 3), 130, dtype=np.uint8)
-        d2 = jpeg.jpeg_encode_progressive(
-            flat, quality_tables=(flatq, flatq), subsample=(2, 2))
-        assert (jpeg.jpeg_decode_pixels(d2)
-                == jpeg.jpeg_decode_pixels(
-                    jpeg.jpeg_encode(flat, quality_tables=(flatq, flatq),
-                                     subsample=(2, 2)))).all()
-
-    def test_decodes_real_libjpeg_progressive_file(self):
-        """A 10-scan progressive photo produced by libjpeg (spectral
-        selection + successive approximation + cross-block EOB runs) —
-        not by our encoder. Any desync in the scan decoders surfaces as
-        an invalid-Huffman ValueError within a few symbols; a clean
-        full decode with photographic statistics is the pass."""
-        import os
-
-        import numpy as np
-        import pytest as _pytest
-        path = next((p for p in REAL_PROGRESSIVE_PATHS
-                     if os.path.exists(p)), None)
-        if path is None:
-            _pytest.skip("no real progressive JPEG available on disk")
-        from filtlong_spark.operators import jpeg, multimodal as m2
-        data = open(path, "rb").read()
-        assert m2.sniff_bytes(data) == ("image/jpeg", 720, 477)
-        px = jpeg.jpeg_decode_pixels(data)
-        assert px.shape == (477, 720, 3)
-        assert float(px.std()) > 30.0  # photographic content
-        # every 8x8 tile has SOME structure (no dropped/blank MCU rows
-        # — the classic symptom of a mis-advanced scan)
-        tiles = px[: 472, : 720, :].reshape(59, 8, 90, 8, 3)
-        tile_std = tiles.std(axis=(1, 3, 4))
-        assert (tile_std > 0).all()
-
-
-def test_real_decode_from_jpeg_pixels(spark):
-    """real=True featurizes JPEG media (baseline and progressive) from
-    DECODED pixels; corrupt JPEGs quarantine to the fake."""
-    import base64
-    from filtlong_spark.operators import jpeg
-    data = base64.b64decode(REAL_JPEG_B64)
-    corrupt = data[: len(data) // 2]
-    media = spark.createDataFrame(
-        [(1, "image", data), (2, "image", corrupt)],
-        "doc_id long, kind string, media binary")
-    rows = {r["doc_id"]: r["features"]
-            for r in mm.decode_image_features(media, real=True).collect()}
-    assert rows[1] == pytest.approx(
-        mm.image_features_from_pixels(jpeg.jpeg_decode_pixels(data)))
-    assert rows[2] == pytest.approx(mm._fake_decode_image(corrupt))
-
-
-def test_real_decode_from_gif_pixels(spark):
-    """real=True featurizes GIF media from DECODED pixels (parity with
-    the PNG path); corrupt GIFs quarantine to the fake."""
-    import numpy as np
-    idx = (np.arange(32 * 24).reshape(24, 32) % 4).astype(np.uint8)
-    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    data = mm.gif_encode(idx, pal)
-    corrupt = data[: len(data) // 2]
-    media = spark.createDataFrame(
-        [(1, "image", data), (2, "image", corrupt)],
-        "doc_id long, kind string, media binary")
-    rows = {r["doc_id"]: r["features"]
-            for r in mm.decode_image_features(media, real=True).collect()}
-    px = np.array(pal, dtype=np.uint8)[idx]
-    assert rows[1] == pytest.approx(mm.image_features_from_pixels(px))
-    assert rows[2] == pytest.approx(mm._fake_decode_image(corrupt))
-
-
-def test_real_decode_quarantines_corrupt_png(spark):
-    """A truncated/corrupt PNG (crawled media routinely is) must NOT kill
-    the stage: the record falls back to the byte-deterministic featurizer
-    while intact records still decode from real pixels."""
-    px = _checker_pixels()
-    good = mm.png_encode(px)
-    corrupt = good[: len(good) // 2]          # truncated mid-IDAT
-    header_only = mm.make_png_bytes(4, 4)     # IHDR with no pixel data
-    media = spark.createDataFrame(
-        [(1, "image", good), (2, "image", corrupt), (3, "image", header_only)],
-        "doc_id long, kind string, media binary")
-    rows = {r["doc_id"]: r["features"]
-            for r in mm.decode_image_features(media, real=True).collect()}
-    assert rows[1] == pytest.approx(mm.image_features_from_pixels(px))
-    assert rows[2] == pytest.approx(mm._fake_decode_image(corrupt))
-    assert rows[3] == pytest.approx(mm._fake_decode_image(header_only))
-
-
-def test_frame_sampling_shape(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(10)
-    media = mm.attach_media_stub(docs)
-    frames = mm.frame_sample_stub(media).collect()
-    assert len(frames) >= 10
-    assert {f["frame_idx"] for f in frames} == {0}  # duration 0 -> 1 frame
-
-
-def test_sniff_real_container_headers(spark):
-    """mime + dimensions parsed from REAL container bytes (PNG IHDR, GIF
-    screen descriptor, JPEG SOF marker walk)."""
-    import struct
-    png = mm.make_png_bytes(640, 480)
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 4
-    # APP0 length 16 = 2 length bytes + 14 payload bytes, then SOF0
-    jpeg = (b"\xff\xd8"
-            + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-            + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-            + struct.pack(">HH", 1080, 1920) + b"\x03" + b"\x00" * 9)
-    rows = [(1, "image", png), (2, "image", gif), (3, "image", jpeg),
-            (4, "image", b"not an image")]
-    media = spark.createDataFrame(rows, "doc_id long, kind string, media binary")
-    got = {r["doc_id"]: (r["mime"], r["width"], r["height"])
-           for r in mm.sniff_media_meta(media).collect()}
-    assert got[1] == ("image/png", 640, 480)
-    assert got[2] == ("image/gif", 320, 200)
-    assert got[3] == ("image/jpeg", 1920, 1080)
-    assert got[4] == (None, None, None)
-
-
-def test_media_near_dups_pipeline(spark):
-    """binary media -> features -> the SAME bucketed near-dup join as text
-    embeddings: identical media must pair at cos == 1.0."""
-    blob_a = mm.make_png_bytes(100, 100)
-    blob_b = mm.make_png_bytes(200, 50)
-    rows = [(1, "image", blob_a), (2, "image", blob_a),  # exact dup
-            (3, "image", blob_b)]
-    media = spark.createDataFrame(rows, "doc_id long, kind string, media binary")
-    pairs = {(r["probe_id"], r["vec_id"]): r["cos"]
-             for r in mm.media_near_dups(media).collect()}
-    assert pairs.get((1, 2)) == 1.0
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_media_near_dups_real_pixels(spark):
-    """real=True end to end: two PNGs whose PIXELS are near-identical
-    (tiny noise) pair at cos ~ 1 through decode -> featurize -> banded
-    LSH join; a structurally different image does not pair."""
-    import numpy as np
-    a = mm.png_encode(_checker_pixels(), filter_type=1)
-    b = mm.png_encode(_checker_pixels(noise_seed=5), filter_type=3)
-    other = mm.png_encode(
-        np.full((32, 32, 3), 7, dtype=np.uint8))
-    rows = [(1, "image", a), (2, "image", b), (3, "image", other)]
-    media = spark.createDataFrame(rows,
-                                  "doc_id long, kind string, media binary")
-    pairs = {(r["probe_id"], r["vec_id"]): r["cos"]
-             for r in mm.media_near_dups(media, threshold=0.999,
-                                         real=True).collect()}
-    assert pairs.get((1, 2), 0.0) >= 0.999
-    assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
 # ---------------------------------------------------------------------------
-# Property tests: the image codecs are fresh hand-written code — fuzz the
-# round-trips over random shapes/contents (no Spark; pure kernels).
+# Property tests: the image codecs are hand-written — fuzz the round-trips
+# over random shapes/contents (no Spark; pure kernels).
 # ---------------------------------------------------------------------------
 
 from hypothesis import given, settings, strategies as hst
@@ -662,266 +201,3 @@ def test_gif_roundtrip_property(h, w, ncolors, interlaced, seed):
     assert (out == np.array(pal, dtype=np.uint8)[idx]).all()
 
 
-@settings(max_examples=15, deadline=None)
-@given(hst.integers(1, 24), hst.integers(1, 24), hst.integers(0, 2**32 - 1))
-def test_jpeg_roundtrip_property(h, w, seed):
-    """4:4:4 + all-ones quant: decode(encode(px)) within +-3 of px for
-    ANY content (the only loss is DCT/color-space float rounding)."""
-    import numpy as np
-    from filtlong_spark.operators import jpeg
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    out = jpeg.jpeg_decode_pixels(jpeg.jpeg_encode(px))
-    assert out.shape == (h, w, 3)
-    assert int(np.abs(out.astype(int) - px.astype(int)).max()) <= 3
-
-
-def _mjpeg_mkv(n_frames=3, dur_ms=500, w=24, h=16, shift=0):
-    """MJPEG-in-Matroska fixture: n distinct near-lossless JPEG frames."""
-    import numpy as np
-    from filtlong_spark.operators import jpeg, mkv
-    frames = []
-    for i in range(n_frames):
-        px = np.full((h, w, 3), 40 + 60 * ((i + shift) % 4),
-                     dtype=np.uint8)
-        px[4:h - 4, 6:w - 6, (i + shift) % 3] = 250
-        frames.append(px)
-    jpegs = [jpeg.jpeg_encode(f) for f in frames]
-    return mkv.mkv_encode_mjpeg(jpegs, [dur_ms] * n_frames, w, h), \
-        frames, jpegs
-
-
-def test_mkv_roundtrip_parse():
-    """The EBML writer's output parses back to the same track metadata
-    and frame stream (byte-identical JPEGs, duration-correct)."""
-    from filtlong_spark.operators import mkv
-    data, _, jpegs = _mjpeg_mkv(n_frames=3, dur_ms=500)
-    trk = mkv.parse_video_track(data)
-    assert trk.codec == "V_MJPEG" and (trk.width, trk.height) == (24, 16)
-    assert trk.doc_type == "matroska" and trk.track_num == 1
-    frames = mkv.mjpeg_frames(data)
-    assert [f for f, _ in frames] == jpegs
-    assert [d for _, d in frames] == [500, 500, 500]
-
-
-def test_frame_sample_real_mjpeg_mkv(spark):
-    """frame_sample(real=True): MJPEG-in-Matroska blocks are located
-    via the EBML cluster walk, decoded by the JPEG codec, sampled on
-    the timestamp timeline, and emitted as PNG bytes."""
-    from filtlong_spark.operators import jpeg
-    data, _, jpegs = _mjpeg_mkv(n_frames=3, dur_ms=500)
-    assert mm.sniff_bytes(data) == ("video/x-matroska", 24, 16)
-    media = spark.createDataFrame(
-        [(1, "video", data,
-          {"mime": "video/x-matroska", "width": 24, "height": 16,
-           "duration_ms": 1500})],
-        mm.MEDIA_SCHEMA)
-    rows = sorted(mm.frame_sample(media, every_ms=1000, real=True)
-                  .collect(), key=lambda r: r["frame_idx"])
-    # durations 500ms -> t=0 (block 0) and t=1000 (block 2)
-    assert [r["frame_idx"] for r in rows] == [0, 1]
-    for r, src_jpeg in zip(rows, (jpegs[0], jpegs[2])):
-        px = mm.png_decode_pixels(bytes(r["frame"]))
-        assert (px == jpeg.jpeg_decode_pixels(src_jpeg)).all()
-
-
-def test_mkv_compressed_codec_quarantines(spark):
-    """A V_VP9 track is identified but NOT decoded — the record falls
-    back to the deterministic byte-slice fake instead of failing."""
-    data, _, _ = _mjpeg_mkv()
-    vp9 = data.replace(b"V_MJPEG", b"V_VP9\x00\x00")  # CodecID only
-    from filtlong_spark.operators import mkv
-    assert mkv.parse_video_track(vp9).codec == "V_VP9"
-    meta = {"mime": "video/x-matroska", "width": 24, "height": 16,
-            "duration_ms": 1500}
-    media = spark.createDataFrame(
-        [(1, "video", vp9, meta)], mm.MEDIA_SCHEMA)
-    rows = mm.frame_sample(media, every_ms=1000, real=True).collect()
-    fake = mm.frame_sample(media, every_ms=1000, real=False).collect()
-    assert sorted((r["frame_idx"], bytes(r["frame"])) for r in rows) \
-        == sorted((r["frame_idx"], bytes(r["frame"])) for r in fake)
-
-
-class TestAudio:
-    def test_wav_roundtrip_and_features(self):
-        """16-bit PCM round-trip: a 440 Hz tone encodes -> decodes to
-        the same samples (quantization-close), and the features are the
-        physically right ones (duration, rms, dominant low band)."""
-        import numpy as np
-        rate = 8000
-        t = np.arange(rate) / rate            # 1 second
-        tone = 0.5 * np.sin(2 * np.pi * 440 * t)
-        data = mm.wav_encode(tone, rate)
-        assert mm.sniff_bytes(data) == ("audio/wav", None, None)
-        s, r = mm.wav_decode_samples(data)
-        assert r == rate and s.shape == (rate, 1)
-        assert np.abs(s[:, 0] - tone).max() < 1e-3
-        dur, rms, peak, zcr, *bands = \
-            mm.audio_features_from_samples(s, r)
-        assert abs(dur - 1.0) < 1e-9
-        assert abs(rms - 0.5 / np.sqrt(2)) < 1e-3
-        assert abs(peak - 0.5) < 1e-3
-        # 440 Hz of a 4000 Hz Nyquist -> lowest band (0-500 Hz)
-        assert bands[0] > 0.99
-        # zero crossings of a 440 Hz tone: ~880 per second
-        assert abs(zcr - 880 / rate) < 0.01
-
-    def test_wav_bit_depths(self):
-        """8/24/32-bit PCM and float32 decode to the same waveform."""
-        import numpy as np
-        import struct
-        rate = 4000
-        tone = (0.25 * np.sin(2 * np.pi * 100 *
-                              np.arange(rate // 2) / rate))
-        ref, _ = mm.wav_decode_samples(mm.wav_encode(tone, rate))
-
-        def wav_raw(fmt_code, bits, pcm):
-            fmt = struct.pack("<HHIIHH", fmt_code, 1, rate,
-                              rate * bits // 8, bits // 8, bits)
-            body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt))
-                    + fmt + b"data" + struct.pack("<I", len(pcm)) + pcm)
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        s8, _ = mm.wav_decode_samples(wav_raw(
-            1, 8, (np.round(tone * 128) + 128).astype(np.uint8)
-            .tobytes()))
-        v24 = np.round(tone * (1 << 23)).astype(np.int64)
-        b24 = np.zeros((v24.size, 3), dtype=np.uint8)
-        u = np.where(v24 < 0, v24 + (1 << 24), v24)
-        b24[:, 0] = u & 0xFF
-        b24[:, 1] = (u >> 8) & 0xFF
-        b24[:, 2] = (u >> 16) & 0xFF
-        s24, _ = mm.wav_decode_samples(wav_raw(1, 24, b24.tobytes()))
-        s32, _ = mm.wav_decode_samples(wav_raw(
-            1, 32, np.round(tone * (1 << 31)).clip(-(1 << 31),
-                                                   (1 << 31) - 1)
-            .astype("<i4").tobytes()))
-        sf, _ = mm.wav_decode_samples(wav_raw(
-            3, 32, tone.astype("<f4").tobytes()))
-        for s in (s8, s24, s32, sf):
-            assert np.abs(s[:, 0] - ref[:, 0]).max() < 1e-2
-
-    def test_audio_features_spark_real_vs_quarantine(self, spark):
-        """decode_audio_features(real=True): WAV records featurize from
-        decoded samples; an MP3-magic record quarantines to the
-        byte-deterministic fake (same posture as images/video)."""
-        import numpy as np
-        rate = 8000
-        wav = mm.wav_encode(
-            0.3 * np.sin(2 * np.pi * 220 * np.arange(rate) / rate), rate)
-        mp3ish = b"ID3\x04\x00" + b"\x00" * 64
-        media = spark.createDataFrame(
-            [(1, "audio", wav, None), (2, "audio", mp3ish, None)],
-            mm.MEDIA_SCHEMA)
-        rows = {r["doc_id"]: list(r["features"])
-                for r in mm.decode_audio_features(media, real=True)
-                .collect()}
-        s, r = mm.wav_decode_samples(wav)
-        assert rows[1] == mm.audio_features_from_samples(s, r)
-        import hashlib
-        h = hashlib.md5(mp3ish).digest()
-        assert rows[2] == [b / 255.0 for b in h[:mm.AUDIO_FEATURES]]
-        assert mm.sniff_bytes(mp3ish) == ("audio/mpeg", None, None)
-
-
-def test_audio_features_feed_embedding_near_dup(spark):
-    """Composition: audio features are just embeddings — two encodings
-    of the same tone (16-bit round-trip noise apart) land as a near-dup
-    pair in the SAME banded-LSH join the text/image embeddings use,
-    while a different tone does not pair with them."""
-    import numpy as np
-    from filtlong_spark.operators.similarity import near_dup_pairs
-    from pyspark.sql import functions as F
-    rate = 8000
-    t = np.arange(rate) / rate
-    tone_a = 0.5 * np.sin(2 * np.pi * 440 * t)
-    # re-encode of a's decode: differs only by 16-bit quantization
-    a2, _ = mm.wav_decode_samples(mm.wav_encode(tone_a, rate))
-    tone_c = 0.4 * np.sin(2 * np.pi * 1900 * t)  # different band profile
-    media = spark.createDataFrame(
-        [(1, "audio", mm.wav_encode(tone_a, rate), None),
-         (2, "audio", mm.wav_encode(a2[:, 0], rate), None),
-         (3, "audio", mm.wav_encode(tone_c, rate), None)],
-        mm.MEDIA_SCHEMA)
-    feats = mm.decode_audio_features(media, real=True).select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("features").alias("embedding"))
-    pairs = {(r["probe_id"], r["vec_id"])
-             for r in near_dup_pairs(feats, threshold=0.999).collect()}
-    assert (1, 2) in pairs or (2, 1) in pairs
-    assert not any(3 in p for p in pairs)
-
-
-def test_streaming_feature_extraction(spark, tmp_path):
-    """decode_image_features / decode_audio_features are map-only, so
-    they compose with readStream unchanged: an availableNow pass over a
-    parquet media directory produces the same features as batch."""
-    import numpy as np
-    src = str(tmp_path / "media_src")
-    ckpt = str(tmp_path / "media_ckpt")
-    sink = str(tmp_path / "media_sink")
-    rate = 4000
-    rows = [(i, "audio",
-             bytearray(mm.wav_encode(
-                 0.3 * np.sin(2 * np.pi * (200 + 50 * i)
-                              * np.arange(rate) / rate), rate)),
-             None) for i in range(8)]
-    spark.createDataFrame(rows, mm.MEDIA_SCHEMA).write.parquet(src)
-
-    stream = spark.readStream.schema(mm.MEDIA_SCHEMA).parquet(src)
-    q = (mm.decode_audio_features(stream, real=True)
-         .writeStream.format("parquet")
-         .option("path", sink).option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    streamed = {r["doc_id"]: list(r["features"])
-                for r in spark.read.parquet(sink).collect()}
-    batch = {r["doc_id"]: list(r["features"])
-             for r in mm.decode_audio_features(
-                 spark.read.parquet(src), real=True).collect()}
-    assert streamed == batch and len(batch) == 8
-
-
-def test_mp4_crafted_counts_rejected_fast():
-    """A tiny crafted MP4 declaring 2^32-ish sample counts must raise
-    promptly (count capped by file size) — an executor OOM from an
-    untrusted 32-bit field is not catchable by the record quarantine."""
-    import struct
-    import time
-    from filtlong_spark.operators import mp4
-    data, _, _ = _mjpeg_mp4(n_frames=2, dur_ms=500)
-    # stts payload: fullbox(ver/flags) + entry_count + (count, delta);
-    # blow up the first run's sample count
-    i = data.find(b"stts")
-    assert i > 0
-    entry = i + 4 + 4 + 4  # type + fullbox header + entry_count
-    bombed = (data[:entry] + struct.pack(">I", 0xFFFF0000)
-              + data[entry + 4:])
-    t0 = time.time()
-    try:
-        mp4.mjpeg_frames(bombed)
-        assert False, "crafted stts count must not parse"
-    except ValueError:
-        pass
-    assert time.time() - t0 < 1.0
-
-
-def test_jpeg_dimension_bomb_rejected():
-    """A JPEG header declaring 65535x65535 must raise before allocating
-    coefficient grids (decompression-bomb guard), for baseline AND
-    progressive frames."""
-    import struct
-    from filtlong_spark.operators import jpeg
-    ok = jpeg.jpeg_encode(__import__("numpy").full((16, 24, 3), 128,
-                                                   dtype="uint8"))
-    for sof in (b"\xff\xc0", b"\xff\xc2"):
-        i = ok.find(b"\xff\xc0")
-        assert i > 0
-        bomb = (ok[:i] + sof + ok[i + 2:i + 5]
-                + struct.pack(">HH", 65535, 65535) + ok[i + 9:])
-        try:
-            jpeg.jpeg_decode_pixels(bomb)
-            assert False, "dimension bomb must not decode"
-        except ValueError as e:
-            assert "MPixel" in str(e)

@@ -56,27 +56,3 @@ def test_ngram_repetition_short_and_empty_docs(spark):
         assert out[i]["dup_5gram_pct"] == 0.0
     assert out[3]["top_gram"] == "one two three"
     assert out[3]["dup_5gram_pct"] == 0.0
-
-
-def test_ngram_repetition_hash_mode_matches_string_mode(spark):
-    """carry_gram_strings=False (the 100 TB text-free shuffle: keys are
-    xxhash64(gram), payload is the integer length) reproduces both
-    percentage columns exactly — equal-length count ties may pick a
-    different gram but never a different value; top_gram is '' by
-    contract."""
-    rows = [(1, "a b c a b c a b c"),
-            (2, "x1 x2 x3 x4 x5 q x1 x2 x3 x4 x5"),
-            (3, "p q r s p q r s"),
-            (4, ""), (5, "one two"),
-            (6, "w " * 30 + "unique tail words here")]
-    docs = _df(spark, rows)
-    s = {r["doc_id"]: r for r in
-         ts.ngram_repetition_stats(docs).collect()}
-    h = {r["doc_id"]: r for r in
-         ts.ngram_repetition_stats(
-             docs, carry_gram_strings=False).collect()}
-    assert set(s) == set(h)
-    for i in s:
-        assert h[i]["top_gram"] == ""
-        assert h[i]["top_3gram_pct"] == s[i]["top_3gram_pct"], i
-        assert h[i]["dup_5gram_pct"] == s[i]["dup_5gram_pct"], i
