@@ -373,60 +373,53 @@ def near_dup_url_labels(pages: DataFrame, method: str) -> DataFrame:
 
 
 def line_clean_pages(pages: DataFrame, min_df: int,
-                     text_col: str = "text") -> DataFrame:
+                     text_col: str = "text", hot=None) -> DataFrame:
     """Replace each page's text with its line-dedup-cleaned text (see
-    line_dedup), preserving every other column. One extra doc-grain
-    equi-join on url to reattach the cleaned text — the cleaned side
-    carries text only, so at scale AQE plans it as a plain shuffled
-    hash join keyed on the url (both sides corpus-sized, no broadcast
-    expectation)."""
-    docs = pages.select(F.col("url").alias("doc_id"), F.col(text_col))
-    cleaned = line_dedup(docs, min_df, text_col=text_col)
-    return (pages.drop(text_col)
-            .join(cleaned.withColumnRenamed("doc_id", "url")
-                  .withColumnRenamed("text_clean", text_col), "url"))
+    line_dedup), preserving every other column and its order. ``hot``:
+    a precomputed boilerplate hash set (line_hot_hashes) — the cleaning
+    is then one map-only Arrow pass with no line-grain count; without it
+    the set is counted over ``pages`` (distinct urls per line). Every
+    column rides through the mapper, so there is no join back on url."""
+    if hot is None:
+        hot = line_hot_hashes(pages, min_df, key="url", text_col=text_col)
+    return pages.mapInArrow(_line_clean_mapper(pages, hot, text_col,
+                                               text_col),
+                            schema=pages.schema)
 
 
 LINE_DEDUP_MIN_DF = 50
 
 
-def line_dedup(docs: DataFrame, min_df: int = LINE_DEDUP_MIN_DF,
-               text_col: str = "text") -> DataFrame:
-    """(doc_id, text_clean): LINE-level boilerplate removal — the
-    CCNet/RefinedWeb dedup grain between exact-doc and near-doc: a line
-    occurring in >= min_df DISTINCT documents (cookie banners,
-    nav/footer boilerplate) is removed from every document; surviving
-    lines re-join in original order. Blank lines are never counted as
-    boilerplate (they'd all collapse onto one key).
+def line_hot_hashes(docs: DataFrame, min_df: int, key: str = "doc_id",
+                    text_col: str = "text") -> "np.ndarray":
+    """Sorted int64 md5-60 hashes of the lines occurring in >= min_df
+    distinct ``key`` values — the boilerplate set line_dedup removes.
+    ONE line-grain shuffle of (hash, key) pairs (line text never rides
+    an exchange); blank lines are never counted. The set is tiny by
+    construction (<= total_lines / min_df entries) and collects to the
+    driver."""
+    import numpy as np
+    lines = docs.select(
+        key, F.explode(F.split(F.col(text_col), "\n", -1)).alias("line"))
+    hline = F.conv(F.substring(F.md5(F.col("line").cast("binary")), 1, 15),
+                   16, 10).cast("long")
+    hot_rows = (lines.filter(F.trim(F.col("line")) != "")
+                .select(hline.alias("h"), key)
+                .groupBy("h").agg(F.countDistinct(key).alias("df"))
+                .filter(F.col("df") >= min_df)
+                .select("h").collect())
+    return np.sort(np.array([r["h"] for r in hot_rows], dtype=np.int64))
 
-    Scale shape: ONE line-grain shuffle of (md5-60 hash, doc_id) int
-    pairs — line TEXT never rides an exchange (the round-5 shape
-    shuffled line strings through the count, an anti-join, and a
-    collect_list reassembly) — then the boilerplate hash set (tiny by
-    construction: <= total_lines / min_df entries) collects to the
-    driver, broadcasts, and one map-only Arrow pass splits, hashes
-    (dedup._md5_60_arrow over the value buffer), drops members, and
-    re-joins survivors in order. The 60-bit key follows the
-    url_doc_key precedent: a collision (expected ~n^2/2^61 line pairs)
-    can only misclassify one line as boilerplate — acceptable for a
-    dedup verdict. Mirrored by the dedup_lines DuckDB oracle (same
-    split, same trim-blank exclusion, same min_df)."""
+
+def _line_clean_mapper(docs: DataFrame, hot, text_col: str, out_col: str):
+    """mapInArrow function: ``text_col`` of every batch replaced by its
+    text with the ``hot`` lines dropped (renamed ``out_col``), all other
+    columns passed through. One split, one md5 over the value buffer
+    (dedup._md5_60_arrow) and a sorted-set probe per batch."""
     import numpy as np
 
     from ..functions.scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-
-    lines = docs.select(
-        "doc_id",
-        F.explode(F.split(F.col(text_col), "\n", -1)).alias("line"))
-    hline = F.conv(F.substring(F.md5(F.col("line").cast("binary")), 1, 15),
-                   16, 10).cast("long")
-    hot_rows = (lines.filter(F.trim(F.col("line")) != "")
-                .select(hline.alias("h"), "doc_id")
-                .groupBy("h").agg(F.countDistinct("doc_id").alias("df"))
-                .filter(F.col("df") >= min_df)
-                .select("h").collect())
-    hot = np.sort(np.array([r["h"] for r in hot_rows], dtype=np.int64))
     bc = docs.sparkSession.sparkContext.broadcast(hot)
 
     def mapper(batches):
@@ -436,7 +429,6 @@ def line_dedup(docs: DataFrame, min_df: int = LINE_DEDUP_MIN_DF,
         for rb in batches:
             if not rb.num_rows:
                 continue
-            key_col = rb.column("doc_id")
             txt = pc.fill_null(rb.column(text_col), "")
             parts = pc.split_pattern(txt, "\n")
             counts = pc.list_value_length(parts).to_numpy(
@@ -462,12 +454,38 @@ def line_dedup(docs: DataFrame, min_df: int = LINE_DEDUP_MIN_DF,
             clean = pc.binary_join(
                 pa.ListArray.from_arrays(
                     pa.array(soff, type=pa.int32()), values), "\n")
-            yield pa.record_batch([key_col, clean],
-                                  names=["doc_id", "text_clean"])
+            names = rb.schema.names
+            yield pa.record_batch(
+                [clean if n == text_col else rb.column(n) for n in names],
+                names=[out_col if n == text_col else n for n in names])
 
+    return mapper
+
+
+def line_dedup(docs: DataFrame, min_df: int = LINE_DEDUP_MIN_DF,
+               text_col: str = "text") -> DataFrame:
+    """(doc_id, text_clean): LINE-level boilerplate removal — the
+    CCNet/RefinedWeb dedup grain between exact-doc and near-doc: a line
+    occurring in >= min_df DISTINCT documents (cookie banners,
+    nav/footer boilerplate) is removed from every document; surviving
+    lines re-join in original order. Blank lines are never counted as
+    boilerplate (they'd all collapse onto one key).
+
+    Scale shape: ONE line-grain shuffle of (md5-60 hash, doc_id) int
+    pairs (line_hot_hashes) — line TEXT never rides an exchange — then
+    the boilerplate hash set broadcasts and one map-only Arrow pass
+    splits, hashes, drops members, and re-joins survivors in order. The
+    60-bit key follows the url_doc_key precedent: a collision (expected
+    ~n^2/2^61 line pairs) can only misclassify one line as boilerplate
+    — acceptable for a dedup verdict. Mirrored by the dedup_lines
+    DuckDB oracle (same split, same trim-blank exclusion, same
+    min_df)."""
+    hot = line_hot_hashes(docs, min_df, text_col=text_col)
     key_type = dict(docs.dtypes)["doc_id"]
-    return docs.select("doc_id", text_col).mapInArrow(
-        mapper, schema=f"doc_id {key_type}, text_clean string")
+    docs = docs.select("doc_id", text_col)
+    return docs.mapInArrow(
+        _line_clean_mapper(docs, hot, text_col, "text_clean"),
+        schema=f"doc_id {key_type}, text_clean string")
 
 
 SIMHASH_BITS = 60     # production width: first 15 md5 hex chars -> exact

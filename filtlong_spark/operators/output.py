@@ -11,6 +11,16 @@ parquet-dir commits are the sandbox rendering).
 
 Lineage (A8, reference stderr counters src/misc.cpp:42-49): per-run
 metrics are persisted as JSON next to the scratch data.
+
+Commit layout of a checkpoint dir, in write order:
+
+- ``verdicts/`` — the (url, reason) gate verdicts, parquet (any gate on);
+- ``line_hot`` — the line-dedup boilerplate hash set (line dedup on);
+- ``reads2/`` — the scored post-scrub set; its ``_SUCCESS`` commits;
+- ``lineage.json`` — metrics and the snapshot log.
+
+Resume needs every member the config writes (verify_snapshot_chain):
+a committed ``reads2`` without them is a torn commit.
 """
 
 from __future__ import annotations
@@ -44,6 +54,41 @@ def checkpoint(df: DataFrame, spark: SparkSession, path: str,
 
 
 DATA_SUBDIR = "reads2"
+VERDICTS_SUBDIR = "verdicts"
+LINE_HOT_FILE = "line_hot"
+VERDICT_SCHEMA = "url string, reason string"
+
+
+def write_verdicts(df: DataFrame, path: str) -> DataFrame:
+    """Write the (url, reason) gate verdicts under ``path`` and return
+    them read back (column-pruned parquet, exact size for the planner)."""
+    out = os.path.join(path, VERDICTS_SUBDIR)
+    df.select("url", "reason").write.mode("overwrite").parquet(out)
+    return read_verdicts(df.sparkSession, path)
+
+
+def read_verdicts(spark: SparkSession, path: str) -> DataFrame:
+    # explicit schema: an empty verdict table may have no data files
+    return spark.read.schema(VERDICT_SCHEMA).parquet(
+        os.path.join(path, VERDICTS_SUBDIR))
+
+
+def write_line_hot(path: str, hot) -> None:
+    """Persist the sorted line-dedup hash set (driver-side, no Spark
+    job), atomically: a crash leaves the old file or the new one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    os.makedirs(path, exist_ok=True)
+    dst = os.path.join(path, LINE_HOT_FILE)
+    pq.write_table(pa.table({"h": pa.array(hot, type=pa.int64())}),
+                   dst + ".tmp")
+    os.replace(dst + ".tmp", dst)
+
+
+def read_line_hot(path: str):
+    import pyarrow.parquet as pq
+    return pq.read_table(os.path.join(path, LINE_HOT_FILE)).column(
+        "h").to_numpy()
 
 
 def _manifest(path: str, data_subdir: str = DATA_SUBDIR) -> dict[str, int]:
@@ -80,12 +125,22 @@ def write_lineage(path: str, metrics: dict,
 
 
 def verify_snapshot_chain(path: str,
-                          data_subdir: str = DATA_SUBDIR) -> None:
-    """Refuse to resume from a checkpoint whose snapshot log is broken or
-    whose data files no longer match the committed manifest (a torn or
-    tampered commit must re-score, not silently relabel)."""
+                          data_subdir: str = DATA_SUBDIR,
+                          required: tuple[str, ...] = ()) -> None:
+    """Refuse to resume from a checkpoint whose snapshot log is broken,
+    whose data files no longer match the committed manifest, or that
+    lacks lineage.json or one of the ``required`` commit members (a torn
+    or tampered commit must re-score, not silently relabel)."""
+    missing = [name for name in ("lineage.json", *required)
+               if not (os.path.isfile(os.path.join(path, name))
+                       or is_committed(os.path.join(path, name)))]
+    if missing:
+        raise RuntimeError(
+            f"Error: cannot resume — torn commit: {data_subdir} is "
+            f"committed but {', '.join(missing)} is missing; use a new "
+            "checkpoint_dir or resume=False")
     lin = read_lineage(path)
-    if lin is None or "snapshots" not in lin:
+    if "snapshots" not in lin:
         return  # pre-snapshot-log checkpoint: nothing to verify against
     snaps = lin["snapshots"]
     if not snaps or lin.get("snapshot_id") != snaps[-1]["snapshot_id"]:

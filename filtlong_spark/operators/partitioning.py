@@ -204,14 +204,16 @@ def blocklist_gate(docs: DataFrame, blocked_hosts: DataFrame,
                    blocked_words: tuple[str, ...] = (),
                    host_col: str = "source",
                    text_col: str = "text",
-                   key_col: str = "doc_id") -> DataFrame:
+                   key_col: str = "doc_id",
+                   carry: tuple[str, ...] = ()) -> DataFrame:
     """UT1-style blocklist gate — the externally-supplied deny-list
     stage (Universite Toulouse 1 blacklists in C4/RefinedWeb/FineWeb):
     a doc is dropped when its host appears in ``blocked_hosts`` (a
     one-column DataFrame(host)) OR its text contains any of
     ``blocked_words`` (lower-cased substring match, the word-filter
     category). Returns (doc_id, host, blocked_host, blocked_word, keep)
-    for EVERY input doc, keep = neither rule fired.
+    for EVERY input doc, keep = neither rule fired, followed by the
+    ``carry`` columns of the input passed through unchanged.
 
     Scale shape: the deny list is millions of domains vs 10^12 docs, so
     it broadcasts (UT1 is ~100 MB of hostnames; above the broadcast
@@ -228,10 +230,10 @@ def blocklist_gate(docs: DataFrame, blocked_hosts: DataFrame,
     for w in blocked_words:
         word_hit = word_hit | lowered.contains(w.lower())
     return (docs.select(key_col, F.col(host_col).alias("host"),
-                        word_hit.alias("blocked_word"))
+                        word_hit.alias("blocked_word"), *carry)
             .join(F.broadcast(hosts), "host", "left")
             .select(key_col, "host",
                     F.coalesce("_blk", F.lit(False)).alias("blocked_host"),
                     "blocked_word",
                     (~(F.coalesce("_blk", F.lit(False))
-                       | F.col("blocked_word"))).alias("keep")))
+                       | F.col("blocked_word"))).alias("keep"), *carry))

@@ -1,30 +1,40 @@
 """End-to-end filter pipeline (SURVEY.md §3 query lifecycle).
 
-Stage order mirrors the reference exactly (src/main.cpp:40-311):
+Stage order mirrors the reference (src/main.cpp:40-311), with the web
+gates in front of scoring:
 
-  ingest/validate -> [refset build] -> fused score+scrub (one mapInPandas
-  pass emitting the post-scrub set) -> normalize over the POST-scrub set
-  -> budget (target measured against RAW input chars) -> ordered survivors
+  ingest/validate -> [gate stage: blocklist -> line dedup -> near-dup ->
+  classifier, one verdict table] -> [refset build] -> fused score+scrub
+  (one mapInPandas pass emitting the post-scrub set) -> normalize over the
+  POST-scrub set -> budget (target measured against RAW input chars) ->
+  ordered survivors
 
 Physical plan discipline (the 100 TB posture):
-- ONE Python stage total (the fused scorer); everything else is columnar.
-- total raw input chars ride an Observation on the scoring job — no
-  separate input traversal.
+- Python runs in the fused scorer, in ingest's canonical-URL pandas UDF
+  (canonical_url_dedup) and in the gates' Arrow mappers (line clean,
+  shingling, classifier features); everything else is columnar.
+- with any gate on, the gated, line-cleaned corpus is materialized ONCE;
+  the gates, the scorer and the survivor reattach read it, so ingest and
+  the line-clean mapper run twice per fresh run (line-frequency count,
+  corpus build) instead of once per consumer.
+- total raw input chars ride an Observation on the first action over
+  the ingest rows — no separate input traversal.
 - E1 stats + the budget's passed-chars sum share ONE aggregate job over
-  the cached post-scrub set.
+  the committed post-scrub set.
 - approx budget adds one histogram aggregate + a boundary-bucket-only
   window; there is NO global sort of the data.
-- cached-plan AQE is enabled so the persisted set coalesces to sane
-  partition counts (persist otherwise pins the raw shuffle partitioning).
 
-Job count: 1 (materialize+stats+observation) + [budget: 1 histogram +
-boundary] + the consumer's action.
+Job count without gates: the snapshot write + the stats aggregate +
+[budget: 1 histogram + boundary] + the consumer's action. The gate stage
+adds the line-frequency collect, the corpus checkpoint, near-dup's own
+LSH and connected-components jobs, the verdict write and its count.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -106,6 +116,93 @@ def _combine_stats(part_rows) -> dict:
             "passed_chars": passed}
 
 
+# the page columns the gate stage materializes and the output reattaches
+PAGE_COLS = ("url", "warc_ts", "lang", "text")
+DROP_COUNTERS = ("blocklist_dropped", "near_dup_dropped", "clf_dropped")
+
+
+def _blocklist_on(cfg: FilterConfig, blocklist_hosts_df) -> bool:
+    return bool(cfg.blocklist_hosts or cfg.blocklist_words
+                or blocklist_hosts_df is not None)
+
+
+def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
+                blocklist_hosts_df: DataFrame | None, scratch: str):
+    """The pre-scoring gates as one stage: (corpus, verdicts, drops).
+
+    ``corpus`` is the post-blocklist, line-cleaned pages (PAGE_COLS),
+    materialized ONCE by an eager localCheckpoint that also carries the
+    blocklist verdict; near-dup, the classifier, the scorer and the
+    survivor reattach all read it, so ingest, the blocklist probe and
+    the line-clean mapper run at most twice (the line-frequency count,
+    then this build). ``verdicts`` is the one (url, reason) table every
+    gate writes to, committed under ``scratch`` before the snapshot; a
+    url flagged twice keeps the first reason in DCLM order: deny list,
+    then near-dup, then the classifier. Near-dup and the classifier see
+    only unblocked pages. The line-dedup hash set is committed next to
+    it, so resume cleans with the same decision.
+    ``drops``: rows each enabled gate dropped, by lineage counter."""
+    from ..operators import dedup as dedup_op
+    blocklist = _blocklist_on(cfg, blocklist_hosts_df)
+    pages = valid.select(*PAGE_COLS, F.lit(True).alias("keep"))
+    if blocklist:
+        # UT1-style deny list: map-only broadcast probe on the host;
+        # blocked pages keep no text (they are quarantined from the raw
+        # ingest rows, never cleaned or scored)
+        from ..operators import partitioning as part_op
+        hosts_df = spark.createDataFrame(
+            [(h,) for h in cfg.blocklist_hosts], "host string")
+        if blocklist_hosts_df is not None:
+            hosts_df = hosts_df.unionByName(blocklist_hosts_df.toDF("host"))
+        pages = part_op.blocklist_gate(
+            valid.withColumn("_bl_host", part_op.host_of(F.col("url"))),
+            hosts_df, tuple(cfg.blocklist_words), host_col="_bl_host",
+            key_col="url", carry=PAGE_COLS[1:])
+        pages = pages.select(*PAGE_COLS[:3], F.when(
+            F.col("keep"), F.col("text")).alias("text"), "keep")
+    if cfg.line_dedup_min_df is not None:
+        # line frequencies count over the unblocked pages only
+        hot = dedup_op.line_hot_hashes(pages.filter(F.col("keep")),
+                                       cfg.line_dedup_min_df, key="url")
+        output_op.write_line_hot(scratch, hot)
+        pages = dedup_op.line_clean_pages(pages, cfg.line_dedup_min_df,
+                                          hot=hot)
+    pages = pages.localCheckpoint(eager=True)
+    corpus = pages.filter(F.col("keep")).select(*PAGE_COLS)
+
+    # (lineage counter, reason, flagged pages) in precedence order
+    gates = [("blocklist_dropped", "blocklisted",
+              pages.filter(~F.col("keep")))] if blocklist else []
+    if cfg.near_dup_dedup is not None:
+        nd = dedup_op.near_dup_url_labels(corpus, cfg.near_dup_dedup)
+        gates.append(("near_dup_dropped",
+                      f"near_duplicate_{cfg.near_dup_dedup}",
+                      nd.filter(F.col("is_dup"))))
+    if cfg.clf_threshold is not None:
+        # linear logit over guarded-ratio features, weights folded into
+        # the plan as literals — one map-only Arrow feature pass
+        from ..operators import classifier as clf_op
+        w = (clf_op.weights_from_tuple(cfg.clf_weights)
+             if cfg.clf_weights else None)
+        clf = clf_op.quality_classifier(corpus, sorted(cfg.vocab), weights=w,
+                                        threshold=cfg.clf_threshold,
+                                        key="url")
+        gates.append(("clf_dropped", "classifier_rejected",
+                      clf.filter(~F.col("keep"))))
+    flagged = reduce(
+        DataFrame.unionByName,
+        [df.select("url", F.lit(reason).alias("reason"),
+                   F.lit(rank).alias("rank"))
+         for rank, (_, reason, df) in enumerate(gates)],
+        spark.createDataFrame([], "url string, reason string, rank int"))
+    verdicts = output_op.write_verdicts(
+        flagged.groupBy("url").agg(F.min_by("reason", "rank")
+                                   .alias("reason")), scratch)
+    counts = dict(verdicts.groupBy("reason").count().collect())
+    return corpus, verdicts, {counter: counts.get(reason, 0)
+                              for counter, reason, _ in gates}
+
+
 def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
                ref_pages: DataFrame | None = None,
                checkpoint_dir: str | None = None,
@@ -120,45 +217,47 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
     cfg.blocklist_hosts (UT1 scale); unioned with the config tuple."""
     cfg.validate()
     scratch = checkpoint_dir or output_op.new_scratch_dir()
+    gated = (_blocklist_on(cfg, blocklist_hosts_df)
+             or cfg.line_dedup_min_df is not None
+             or cfg.near_dup_dedup is not None
+             or cfg.clf_threshold is not None)
 
-    # ingest always runs — the source table is re-read at output time to
-    # reattach survivor text (the reference's second input pass,
-    # src/main.cpp:263-311); the committed snapshot holds metrics only
+    # ingest always runs — on resume, and without gates, the source table
+    # is re-read at output time to reattach survivor text (the reference's
+    # second input pass, src/main.cpp:263-311); the committed snapshot
+    # holds metrics only
     ing = ingest_op.ingest(
         pages, canonical_url_dedup=cfg.canonical_url_dedup)
     quarantine = ing.quarantine
 
-    def _line_clean(pages_df):
-        """Line-level boilerplate dedup stage (cfg.line_dedup_min_df):
-        runs on the SAME lineage in the scoring pass and the output
-        text-reattach pass — deterministic, so both see identical
-        cleaned text (the byte-identity contract holds for the cleaned
-        corpus, which is what this stage defines as the corpus)."""
-        if cfg.line_dedup_min_df is None:
-            return pages_df
-        from ..operators import dedup as dedup_op
-        return dedup_op.line_clean_pages(pages_df, cfg.line_dedup_min_df)
-
-    near_dup_dropped = None
-    blocklist_dropped = None
-    clf_dropped = None
+    drops = {}
     resumed = resume and output_op.is_committed(os.path.join(scratch, "reads2"))
     if resumed:
-        output_op.verify_snapshot_chain(scratch)
+        required = ()
+        if gated:
+            required += (output_op.VERDICTS_SUBDIR,)
+        if cfg.line_dedup_min_df is not None:
+            required += (output_op.LINE_HOT_FILE,)
         lineage = output_op.read_lineage(scratch) or {}
         _check_resume_config(cfg, lineage.get("config") or {})
+        output_op.verify_snapshot_chain(scratch, required=required)
         reads2 = spark.read.parquet(os.path.join(scratch, "reads2"))
         total_input_chars = lineage.get("total_input_chars", 0)
-        near_dup_dropped = lineage.get("near_dup_dropped")
-        blocklist_dropped = lineage.get("blocklist_dropped")
-        clf_dropped = lineage.get("clf_dropped")
-        # survivors reattach the line-CLEANED text; the near-dup drop
-        # set needs no recompute (dropped docs were never scored, so the
-        # inner label join below cannot resurrect them)
-        src_pages = _line_clean(ing.valid)
+        drops = lineage
+        # survivors reattach the line-CLEANED text under the fresh leg's
+        # boilerplate set; gated docs were never scored, so the inner
+        # label join below cannot resurrect them
+        src_pages = ing.valid.select(*PAGE_COLS)
+        if cfg.line_dedup_min_df is not None:
+            from ..operators import dedup as dedup_op
+            src_pages = dedup_op.line_clean_pages(
+                src_pages, cfg.line_dedup_min_df,
+                hot=output_op.read_line_hot(scratch))
+        if gated:
+            verdicts = output_op.read_verdicts(spark, scratch)
     else:
-        # raw input char total (src/main.cpp:89) — observed on the scoring
-        # job instead of a separate input traversal
+        # raw input char total (src/main.cpp:89) — observed on the first
+        # action over the ingest rows instead of a separate traversal
         obs = Observation()
         valid = ing.valid.observe(
             obs, F.sum(F.length("text")).alias("total_chars"),
@@ -183,74 +282,12 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         if nparts < par:
             valid = valid.repartition(par)
 
-        # dedup stages (north_rule pipeline composition; all observe-
-        # downstream, so total_input_chars stays the RAW pre-dedup
-        # figure the budget is measured against — the reference's
-        # target-vs-raw-input semantics, src/main.cpp:89,228-237):
-        # 0. UT1-style deny-list gate runs FIRST — no dedup/scoring work
-        #    is spent on blocklisted documents
-        if cfg.blocklist_hosts or cfg.blocklist_words \
-                or blocklist_hosts_df is not None:
-            from ..operators import partitioning as part_op
-            hosts_df = spark.createDataFrame(
-                [(h,) for h in cfg.blocklist_hosts], "host string")
-            if blocklist_hosts_df is not None:
-                hosts_df = hosts_df.unionByName(
-                    blocklist_hosts_df.toDF("host"))
-            verdict = part_op.blocklist_gate(
-                valid.withColumn("_bl_host",
-                                 part_op.host_of(F.col("url"))),
-                hosts_df, tuple(cfg.blocklist_words),
-                host_col="_bl_host", key_col="url")
-            # eager: the checkpoint action itself fires the raw-char
-            # Observation with the full-input totals (a lazy one would
-            # permanently poison it with an empty accumulator); the
-            # count after it is a cheap cached-RDD count
-            blocked_urls = (verdict.filter(~F.col("keep")).select("url")
-                            .localCheckpoint(eager=True))
-            blocklist_dropped = blocked_urls.count()
-            quarantine = quarantine.unionByName(
-                ing.valid.join(blocked_urls, "url")
-                .withColumn("reason", F.lit("blocklisted")))
-            valid = valid.join(blocked_urls, "url", "left_anti")
-        # 1. line-level boilerplate removal rewrites text
-        valid = _line_clean(valid)
-        # 2. near-dup dedup quarantines whole documents before scoring
-        if cfg.near_dup_dedup is not None:
-            from ..operators import dedup as dedup_op
-            nd = dedup_op.near_dup_url_labels(valid, cfg.near_dup_dedup)
-            # the verdict table is url+bool — tiny next to the corpus —
-            # and is consumed twice (quarantine + anti-join): pin it so
-            # the banded-LSH pass runs once (eager, for the same
-            # Observation-poisoning reason as the blocklist stage)
-            dup_urls = (nd.filter(F.col("is_dup")).select("url")
-                        .localCheckpoint(eager=True))
-            near_dup_dropped = dup_urls.count()
-            quarantine = quarantine.unionByName(
-                ing.valid.join(dup_urls, "url").withColumn(
-                    "reason",
-                    F.lit(f"near_duplicate_{cfg.near_dup_dedup}")))
-            valid = valid.join(dup_urls, "url", "left_anti")
-        # 3. model-based quality gate (DCLM order: dedup -> classifier):
-        #    linear logit over guarded-ratio features, weights folded
-        #    into the plan as literals — one map-only Arrow feature
-        #    pass, no join, no broadcast variable
-        if cfg.clf_threshold is not None:
-            from ..operators import classifier as clf_op
-            w = (clf_op.weights_from_tuple(cfg.clf_weights)
-                 if cfg.clf_weights else None)
-            verdict = clf_op.quality_classifier(
-                valid, sorted(cfg.vocab), weights=w,
-                threshold=cfg.clf_threshold, key="url")
-            # eager, for the same Observation-poisoning reason as the
-            # blocklist stage above
-            rejected = (verdict.filter(~F.col("keep")).select("url")
-                        .localCheckpoint(eager=True))
-            clf_dropped = rejected.count()
-            quarantine = quarantine.unionByName(
-                ing.valid.join(rejected, "url")
-                .withColumn("reason", F.lit("classifier_rejected")))
-            valid = valid.join(rejected, "url", "left_anti")
+        if gated:
+            # the Observation sits below the gates, so the budget still
+            # measures against the RAW input chars (src/main.cpp:89,228)
+            corpus, verdicts, drops = _gate_stage(
+                spark, valid, cfg, blocklist_hosts_df, scratch)
+            valid = corpus.join(verdicts, "url", "left_anti")
 
         lm_strategy, lm_tables = None, None
         if cfg.mode == "bigram_lm":
@@ -284,10 +321,9 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
                 # failed) — either way the cached count tables must not
                 # stay pinned in executor storage
                 lm_tables.release()
-        # survivors reattach text from the post-dedup cleaned lineage
-        # (identical plan to what was scored; the observation re-fires
-        # harmlessly on the output job)
-        src_pages = valid
+        # survivors reattach text from the gated corpus checkpoint, or
+        # (no gate) from the source lineage that was scored
+        src_pages = corpus if gated else valid
         try:
             total_input_chars = obs.get["total_chars"] or 0
         except Exception:
@@ -296,6 +332,8 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
             # node never runs and Observation.get raises — zero docs means
             # zero chars
             total_input_chars = 0
+    if gated:
+        quarantine = quarantine.unionByName(ing.valid.join(verdicts, "url"))
 
     # langid gate (A2 analog): rejected docs never enter normalization
     lang_rejected = reads2.filter(~F.col("lang_ok"))
@@ -332,11 +370,9 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         "passed_chars_pre_budget": int(stats["passed_chars"] or 0),
         "target": target,
         "resumed": resumed,
-        # near-dup quarantine lineage counter (None when the stage is
-        # off; on resume, read back from the committed lineage)
-        "near_dup_dropped": near_dup_dropped,
-        "blocklist_dropped": blocklist_dropped,
-        "clf_dropped": clf_dropped,
+        # per-gate drop counters (None when the gate is off; on resume,
+        # read back from the committed lineage)
+        **{k: drops.get(k) for k in DROP_COUNTERS},
         "config": {k: (list(v) if isinstance(v, frozenset) else v)
                    for k, v in cfg.__dict__.items()},
     }

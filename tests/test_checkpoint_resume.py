@@ -118,6 +118,27 @@ def test_resume_refuses_manifest_mismatch(spark, tmp_path):
         run_filter(spark, df, _cfg(min_length=100), checkpoint_dir=ckpt)
 
 
+def test_resume_refuses_torn_commit(spark, tmp_path):
+    """A committed reads2 without the rest of its commit — lineage.json
+    (the budget's raw-char base) or, with gates on, the verdict table
+    and the line-dedup hash set — must refuse resume, not budget
+    against a zero input or re-derive the gate decisions."""
+    import pytest
+    ckpt = str(tmp_path / "ckpt7")
+    df = fx.to_spark_df(spark, fx.volume(sf=0.0002))
+    cfg = _cfg(min_length=100, keep_percent=50.0, line_dedup_min_df=2,
+               blocklist_words=("no-such-word",))
+    run_filter(spark, df, cfg, checkpoint_dir=ckpt)
+    for member in ("lineage.json", "verdicts", "line_hot"):
+        path = os.path.join(ckpt, member)
+        os.rename(path, path + ".away")
+        with pytest.raises(RuntimeError, match="cannot resume.*"
+                           "use a new checkpoint_dir or resume=False"):
+            run_filter(spark, df, cfg, checkpoint_dir=ckpt)
+        os.rename(path + ".away", path)
+    assert run_filter(spark, df, cfg, checkpoint_dir=ckpt).resumed
+
+
 def test_lineage_has_per_partition_counters(spark, tmp_path):
     """north_rule: per-partition lineage rows — counters per language
     partition persisted with the committed snapshot."""

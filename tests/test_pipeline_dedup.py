@@ -322,3 +322,29 @@ def test_all_gates_composed_with_resume(spark, tmp_path):
     assert (r2.metrics["blocklist_dropped"],
             r2.metrics["near_dup_dropped"],
             r2.metrics["clf_dropped"]) == (4, 2, 1)
+    # resume rebuilds the gate quarantine from the committed verdicts
+    assert {r["url"]: r["reason"] for r in r2.quarantine.collect()} == q
+
+
+def test_resume_reuses_line_dedup_decision(spark, tmp_path):
+    """Resume cleans lines with the boilerplate set the fresh leg
+    committed. A footer sits on three pages, one of them deny-listed:
+    it occurs on two unblocked pages, so min_df=3 keeps it in the fresh
+    leg; a resume that recounted over the pre-blocklist pages would
+    strip it."""
+    footer = "CONTACT US ABOUT THIS SITE"
+    rows = []
+    for i in range(6):
+        host = "bad.ex.com" if i == 0 else f"h{i}.ex.com"
+        body = " ".join(["AAAA CCCC GGGG TTTT"]
+                        + [f"w{i}x{j}" for j in range(30)])
+        rows.append((f"https://{host}/p{i}", f"2024-01-01T00:00:{i:02d}",
+                     "en", body + ("\n" + footer if i < 3 else "")))
+    ck = str(tmp_path / "ck")
+    cfg = _cfg(blocklist_hosts=("bad.ex.com",), line_dedup_min_df=3)
+    r1 = run_filter(spark, _pages(spark, rows), cfg, checkpoint_dir=ck)
+    k1 = {r["url"]: r["text"] for r in r1.kept.collect()}
+    assert sum(t.endswith(footer) for t in k1.values()) == 2
+    r2 = run_filter(spark, _pages(spark, rows), cfg, checkpoint_dir=ck)
+    assert r2.resumed
+    assert {r["url"]: r["text"] for r in r2.kept.collect()} == k1

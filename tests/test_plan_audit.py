@@ -85,3 +85,71 @@ def test_quality_buckets_exact_plan_single_window(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") == 1, plan
     assert "Join" not in plan, plan
+
+
+def _gate_source(spark, tmp_path):
+    """A small parquet page source: a shared footer line, a deny-listed
+    host, a near-copy pair, a symbol-soup page and a URL variant."""
+    body = "AAAA CCCC GGGG TTTT the quick brown fox jumps over the lazy dog"
+    rows = [(f"https://h{i}.ex.com/p{i}", f"2024-01-01T00:00:{i:02d}", "en",
+             f"{body} w{i}a w{i}b w{i}c\nFOOTER LINE") for i in range(6)]
+    rows += [("https://bad.ex.com/x", "2024-01-02T00:00:00", "en", body),
+             ("https://h0.ex.com/p0?utm_source=x", "2024-01-02T00:00:01",
+              "en", body),
+             ("https://h1.ex.com/copy", "2024-01-02T00:00:02", "en",
+              f"{body} w1a w1b w1c\nFOOTER LINE"),
+             ("https://h2.ex.com/junk", "2024-01-02T00:00:03", "en",
+              "$$$$ %%%% ^^^^ &&&& " * 10)]
+    path = str(tmp_path / "src")
+    spark.createDataFrame(
+        rows, "url string, warc_ts string, lang string, text string"
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _gate_cfg(**kw):
+    from filtlong_spark import FilterConfig
+    base = dict(min_length=10, mode="intrinsic",
+                vocab=frozenset({"AAAA", "CCCC", "GGGG", "TTTT"}),
+                budget_algorithm="approx")
+    base.update(kw)
+    return FilterConfig(**base)
+
+
+def test_gated_corpus_is_built_once(spark, tmp_path, monkeypatch):
+    """With every gate on, the scorer reads the gated corpus through ONE
+    anti-join against the verdict table, and the survivor write reads
+    the corpus checkpoint: neither the canonical-URL UDF nor the
+    line-clean mapper, nor the source scan, runs again for it."""
+    from filtlong_spark.operators import score as score_op
+    from filtlong_spark.plans.pipeline import run_filter
+    seen = []
+    real = score_op.score_and_scrub
+
+    def spy(pages, cfg, accepted_bc):
+        seen.append(pages)
+        return real(pages, cfg, accepted_bc)
+
+    monkeypatch.setattr(score_op, "score_and_scrub", spy)
+    cfg = _gate_cfg(canonical_url_dedup=True, blocklist_hosts=("bad.ex.com",),
+                    line_dedup_min_df=3, near_dup_dedup="simhash",
+                    clf_threshold=0.0,
+                    clf_weights=(1.0, 0.0, 0.0, 0.0, -10.0, 0.0))
+    src = _gate_source(spark, tmp_path)
+    res = run_filter(spark, src, cfg)
+    scorer_in = seen[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert scorer_in.count("LeftAnti") == 1, scorer_in
+    plan = res.kept._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "MapInArrow"):
+        assert node not in plan, plan
+    assert not set(src.inputFiles()) & set(res.kept.inputFiles())
+    assert res.kept.count() > 0
+
+
+def test_ungated_survivors_read_the_source(spark, tmp_path):
+    """Without a gate nothing is materialized before scoring: the
+    survivor write reattaches text from the source scan."""
+    from filtlong_spark.plans.pipeline import run_filter
+    src = _gate_source(spark, tmp_path)
+    res = run_filter(spark, src, _gate_cfg())
+    assert set(src.inputFiles()) <= set(res.kept.inputFiles())
