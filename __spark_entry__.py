@@ -51,7 +51,7 @@ _STOP_SQL = ", ".join(f"'{w}'" for w in ts.STOPWORDS)
 
 def _docs(spark, sf_dir, spread=True):
     """``spread=False`` skips the unsplittable-input repartition guard
-    (tables.spread) for queries whose plan is a single cheap map or
+    (tables.load's ``_should_spread`` check) for queries whose plan is a single cheap map or
     aggregation — there the extra exchange costs more than the
     parallelism it buys (measured: dedup_exact 0.44 -> 0.98 s with the
     guard, events_rollup 0.55 -> 1.93 s)."""

@@ -14,10 +14,12 @@ metrics are persisted as JSON next to the scratch data.
 
 Commit layout of a checkpoint dir, in write order:
 
+- ``corpus/`` — the gated, line-cleaned pages with the blocklist flag,
+  parquet (any gate on); resume reattaches survivor text from it;
 - ``verdicts/`` — the (url, reason) gate verdicts, parquet (any gate on);
-- ``line_hot`` — the line-dedup boilerplate hash set (line dedup on);
 - ``reads2/`` — the scored post-scrub set; its ``_SUCCESS`` commits;
-- ``lineage.json`` — metrics and the snapshot log.
+- ``lineage.json`` — metrics and the snapshot log, with the part-file
+  manifests of ``reads2``, ``corpus`` and ``verdicts``.
 
 Resume needs every member the config writes (verify_snapshot_chain):
 a committed ``reads2`` without them is a torn commit.
@@ -55,7 +57,7 @@ def checkpoint(df: DataFrame, spark: SparkSession, path: str,
 
 DATA_SUBDIR = "reads2"
 VERDICTS_SUBDIR = "verdicts"
-LINE_HOT_FILE = "line_hot"
+CORPUS_SUBDIR = "corpus"
 VERDICT_SCHEMA = "url string, reason string"
 
 
@@ -73,49 +75,33 @@ def read_verdicts(spark: SparkSession, path: str) -> DataFrame:
         os.path.join(path, VERDICTS_SUBDIR))
 
 
-def write_line_hot(path: str, hot) -> None:
-    """Persist the sorted line-dedup hash set (driver-side, no Spark
-    job), atomically: a crash leaves the old file or the new one."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    os.makedirs(path, exist_ok=True)
-    dst = os.path.join(path, LINE_HOT_FILE)
-    pq.write_table(pa.table({"h": pa.array(hot, type=pa.int64())}),
-                   dst + ".tmp")
-    os.replace(dst + ".tmp", dst)
-
-
-def read_line_hot(path: str):
-    import pyarrow.parquet as pq
-    return pq.read_table(os.path.join(path, LINE_HOT_FILE)).column(
-        "h").to_numpy()
-
-
-def _manifest(path: str, data_subdir: str = DATA_SUBDIR) -> dict[str, int]:
+def _manifest(path: str, subdir: str) -> dict[str, int]:
     """Per-data-file row counts from the parquet footers (driver-side,
     no Spark job) — the parquet-dir rendering of an Iceberg manifest."""
     import glob
 
     import pyarrow.parquet as pq
-    files = sorted(glob.glob(os.path.join(path, data_subdir, "part-*")))
+    files = sorted(glob.glob(os.path.join(path, subdir, "part-*")))
     return {os.path.basename(f): pq.ParquetFile(f).metadata.num_rows
             for f in files}
 
 
 def write_lineage(path: str, metrics: dict,
-                  data_subdir: str = DATA_SUBDIR) -> None:
+                  members: tuple[str, ...] = ()) -> None:
     """Commit lineage + a CHAINED snapshot entry: each commit records a
     fresh snapshot_id, its parent (the previously committed snapshot, if
-    any), and the data-file manifest (per-file row counts). This is the
+    any), and the data-file manifests (per-file row counts) of reads2
+    and of each parquet commit member in ``members``. This is the
     parquet-dir rendering of Iceberg's snapshot log + manifests; resume
-    verifies the chain and the manifest (verify_snapshot_chain)."""
+    verifies the chain and the manifests (verify_snapshot_chain)."""
     os.makedirs(path, exist_ok=True)
     prev = read_lineage(path)
     snap = {
         "snapshot_id": uuid.uuid4().hex,
         "parent_snapshot_id": (prev or {}).get("snapshot_id"),
         "ts": time.time(),
-        "files": _manifest(path, data_subdir),
+        "files": _manifest(path, DATA_SUBDIR),
+        "member_files": {m: _manifest(path, m) for m in members},
     }
     snapshots = list((prev or {}).get("snapshots") or []) + [snap]
     with open(os.path.join(path, "lineage.json"), "w") as f:
@@ -125,10 +111,9 @@ def write_lineage(path: str, metrics: dict,
 
 
 def verify_snapshot_chain(path: str,
-                          data_subdir: str = DATA_SUBDIR,
                           required: tuple[str, ...] = ()) -> None:
     """Refuse to resume from a checkpoint whose snapshot log is broken,
-    whose data files no longer match the committed manifest, or that
+    whose data files no longer match the committed manifests, or that
     lacks lineage.json or one of the ``required`` commit members (a torn
     or tampered commit must re-score, not silently relabel)."""
     missing = [name for name in ("lineage.json", *required)
@@ -136,7 +121,7 @@ def verify_snapshot_chain(path: str,
                        or is_committed(os.path.join(path, name)))]
     if missing:
         raise RuntimeError(
-            f"Error: cannot resume — torn commit: {data_subdir} is "
+            f"Error: cannot resume — torn commit: {DATA_SUBDIR} is "
             f"committed but {', '.join(missing)} is missing; use a new "
             "checkpoint_dir or resume=False")
     lin = read_lineage(path)
@@ -153,15 +138,17 @@ def verify_snapshot_chain(path: str,
                 "Error: cannot resume — broken snapshot parent chain at "
                 f"{s.get('snapshot_id')}")
         parent = s["snapshot_id"]
-    manifest = snaps[-1].get("files") or {}
-    actual = _manifest(path, data_subdir)
-    if actual != manifest:
-        raise RuntimeError(
-            "Error: cannot resume — data files do not match the committed "
-            f"manifest (expected {len(manifest)} files/"
-            f"{sum(manifest.values())} rows, found {len(actual)}/"
-            f"{sum(actual.values())}); use a new checkpoint_dir or "
-            "resume=False")
+    head = snaps[-1]
+    for subdir, manifest in ((DATA_SUBDIR, head.get("files") or {}),
+                             *(head.get("member_files") or {}).items()):
+        actual = _manifest(path, subdir)
+        if actual != manifest:
+            raise RuntimeError(
+                f"Error: cannot resume — {subdir} data files do not match "
+                f"the committed manifest (expected {len(manifest)} files/"
+                f"{sum(manifest.values())} rows, found {len(actual)}/"
+                f"{sum(actual.values())}); use a new checkpoint_dir or "
+                "resume=False")
 
 
 def read_lineage(path: str) -> dict | None:

@@ -16,7 +16,9 @@ Physical plan discipline (the 100 TB posture):
 - with any gate on, the gated, line-cleaned corpus is materialized ONCE;
   the gates, the scorer and the survivor reattach read it, so ingest and
   the line-clean mapper run twice per fresh run (line-frequency count,
-  corpus build) instead of once per consumer.
+  corpus build) instead of once per consumer. It is committed with the
+  snapshot, so a resume reattaches survivor text from it with one scan
+  and never re-reads the source or re-runs a gate.
 - total raw input chars ride an Observation on the first action over
   the ingest rows — no separate input traversal.
 - E1 stats + the budget's passed-chars sum share ONE aggregate job over
@@ -27,7 +29,8 @@ Physical plan discipline (the 100 TB posture):
 Job count without gates: the snapshot write + the stats aggregate +
 [budget: 1 histogram + boundary] + the consumer's action. The gate stage
 adds the line-frequency collect, the corpus checkpoint, near-dup's own
-LSH and connected-components jobs, the verdict write and its count.
+LSH and connected-components jobs, the corpus and verdict writes and
+the verdict count.
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ from ..operators import normalize as normalize_op
 from ..operators import output as output_op
 from ..operators import refset as refset_op
 from ..operators import score as score_op
+from ..sources import tables
 
 
 @dataclass
@@ -135,12 +139,13 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
     blocklist verdict; near-dup, the classifier, the scorer and the
     survivor reattach all read it, so ingest, the blocklist probe and
     the line-clean mapper run at most twice (the line-frequency count,
-    then this build). ``verdicts`` is the one (url, reason) table every
-    gate writes to, committed under ``scratch`` before the snapshot; a
-    url flagged twice keeps the first reason in DCLM order: deny list,
-    then near-dup, then the classifier. Near-dup and the classifier see
-    only unblocked pages. The line-dedup hash set is committed next to
-    it, so resume cleans with the same decision.
+    then this build). The checkpoint is also committed under
+    ``scratch`` as ``corpus/`` (a write that reads it back, nothing
+    upstream reruns), so resume reattaches survivor text from it.
+    ``verdicts`` is the one (url, reason) table every gate writes to,
+    committed under ``scratch`` before the snapshot; a url flagged twice
+    keeps the first reason in DCLM order: deny list, then near-dup, then
+    the classifier. Near-dup and the classifier see only unblocked pages.
     ``drops``: rows each enabled gate dropped, by lineage counter."""
     from ..operators import dedup as dedup_op
     blocklist = _blocklist_on(cfg, blocklist_hosts_df)
@@ -164,10 +169,11 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
         # line frequencies count over the unblocked pages only
         hot = dedup_op.line_hot_hashes(pages.filter(F.col("keep")),
                                        cfg.line_dedup_min_df, key="url")
-        output_op.write_line_hot(scratch, hot)
         pages = dedup_op.line_clean_pages(pages, cfg.line_dedup_min_df,
                                           hot=hot)
     pages = pages.localCheckpoint(eager=True)
+    pages.write.mode("overwrite").parquet(
+        os.path.join(scratch, output_op.CORPUS_SUBDIR))
     corpus = pages.filter(F.col("keep")).select(*PAGE_COLS)
 
     # (lineage counter, reason, flagged pages) in precedence order
@@ -221,11 +227,16 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
              or cfg.line_dedup_min_df is not None
              or cfg.near_dup_dedup is not None
              or cfg.clf_threshold is not None)
+    # the gate stage's commit members: resume requires them, and the
+    # snapshot manifest covers their part files
+    members = ((output_op.CORPUS_SUBDIR, output_op.VERDICTS_SUBDIR)
+               if gated else ())
 
-    # ingest always runs — on resume, and without gates, the source table
-    # is re-read at output time to reattach survivor text (the reference's
-    # second input pass, src/main.cpp:263-311); the committed snapshot
-    # holds metrics only
+    # without gates the committed snapshot holds metrics only, and the
+    # source table is re-read at output time to reattach survivor text
+    # (the reference's second input pass, src/main.cpp:263-311); with a
+    # gate on, a resume reads the committed corpus instead, and ingest
+    # feeds only the lazy quarantine
     ing = ingest_op.ingest(
         pages, canonical_url_dedup=cfg.canonical_url_dedup)
     quarantine = ing.quarantine
@@ -233,28 +244,23 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
     drops = {}
     resumed = resume and output_op.is_committed(os.path.join(scratch, "reads2"))
     if resumed:
-        required = ()
-        if gated:
-            required += (output_op.VERDICTS_SUBDIR,)
-        if cfg.line_dedup_min_df is not None:
-            required += (output_op.LINE_HOT_FILE,)
         lineage = output_op.read_lineage(scratch) or {}
         _check_resume_config(cfg, lineage.get("config") or {})
-        output_op.verify_snapshot_chain(scratch, required=required)
+        output_op.verify_snapshot_chain(scratch, required=members)
         reads2 = spark.read.parquet(os.path.join(scratch, "reads2"))
         total_input_chars = lineage.get("total_input_chars", 0)
         drops = lineage
-        # survivors reattach the line-CLEANED text under the fresh leg's
-        # boilerplate set; gated docs were never scored, so the inner
-        # label join below cannot resurrect them
-        src_pages = ing.valid.select(*PAGE_COLS)
-        if cfg.line_dedup_min_df is not None:
-            from ..operators import dedup as dedup_op
-            src_pages = dedup_op.line_clean_pages(
-                src_pages, cfg.line_dedup_min_df,
-                hot=output_op.read_line_hot(scratch))
+        # survivors reattach the fresh leg's line-CLEANED text from the
+        # committed corpus (one parquet scan, no gate reruns); gated docs
+        # were never scored, so the inner label join below cannot
+        # resurrect them
         if gated:
+            src_pages = (spark.read.parquet(
+                os.path.join(scratch, output_op.CORPUS_SUBDIR))
+                .filter(F.col("keep")).select(*PAGE_COLS))
             verdicts = output_op.read_verdicts(spark, scratch)
+        else:
+            src_pages = ing.valid.select(*PAGE_COLS)
     else:
         # raw input char total (src/main.cpp:89) — observed on the first
         # action over the ingest rows instead of a separate traversal
@@ -262,25 +268,14 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         valid = ing.valid.observe(
             obs, F.sum(F.length("text")).alias("total_chars"),
             F.count(F.lit(1)).alias("n_docs"))
-        # small inputs arrive as fewer splits than cores (one ~16 MB file
-        # at bench SF) and would run the CPU-heavy Python scoring stage
-        # on a single task; fan them out first. At corpus scale the
-        # source has >> defaultParallelism splits, so this is a no-op —
-        # no extra shuffle of text is ever paid where it would hurt.
-        # The partition probe converts the plan to an RDD through py4j
-        # (~0.15 s); repeated run_filter calls over the SAME pages
-        # DataFrame (the bench's min-of-N loops) reuse the first
-        # answer via an attribute on that object.
-        par = spark.sparkContext.defaultParallelism
-        nparts = getattr(pages, "_filtlong_src_nparts", None)
-        if nparts is None:
-            nparts = ing.valid.rdd.getNumPartitions()
-            try:
-                pages._filtlong_src_nparts = nparts
-            except Exception:
-                pass
-        if nparts < par:
-            valid = valid.repartition(par)
+        # a large source in fewer files than cores (one ~16 MB file at
+        # bench SF) would run the CPU-heavy Python scoring stage on a
+        # few tasks; fan it out first. At corpus scale the source has
+        # >> defaultParallelism files, so this is a no-op — no extra
+        # shuffle of text is ever paid where it would hurt. Decided from
+        # the source's files alone: no Spark job, no RDD conversion.
+        if tables._should_spread(spark, pages.inputFiles()):
+            valid = valid.repartition(spark.sparkContext.defaultParallelism)
 
         if gated:
             # the Observation sits below the gates, so the budget still
@@ -387,7 +382,7 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
                                   "hard_passed_docs": int(
                                       r["hard_passed_docs"] or 0)}
             for r in part_rows}
-        output_op.write_lineage(scratch, metrics)
+        output_op.write_lineage(scratch, metrics, members=members)
 
     # output: reattach text by joining labels back to the source table —
     # the labels side is small (metrics only) so AQE turns this into a

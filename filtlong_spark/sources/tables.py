@@ -9,6 +9,7 @@
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,40 +20,36 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 
 def load(spark: SparkSession, sf_dir: str, name: str,
          spread: bool = True) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    if spread and _should_spread(spark, path):
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if spread and _should_spread(spark, df.inputFiles()):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
 
-def _should_spread(spark: SparkSession, path: str) -> bool:
-    """Whether the unsplittable-input repartition pays for itself,
-    decided from os.stat alone (an earlier draft probed
-    df.rdd.getNumPartitions(), but that converts the plan to an RDD
-    through py4j at ~0.15-0.2 s per QUERY CONSTRUCTION — a pure latency
-    tax at any scale). Two conditions:
+def _should_spread(spark: SparkSession, files: list[str]) -> bool:
+    """Whether a round-robin repartition right after the scan of
+    ``files`` (DataFrame.inputFiles() URIs) pays for itself, decided
+    from os.stat alone: a df.rdd.getNumPartitions() probe converts the
+    plan to an RDD through py4j (~0.15-0.2 s per call) and, under AQE,
+    executes the plan's query stages. Three conditions:
 
+    - the scan reads files at all (an in-memory source has none) and
+      they are local (a remote table is not stat-ed);
     - fewer data files than cores (a single file is the testdata shape;
       a real at-scale table has >= one file per split of parallelism),
       AND
-    - the table is at least maxPartitionBytes/8 on disk — below that,
+    - the files are at least maxPartitionBytes/8 on disk — below that,
       the whole table fits comfortably inside a fraction of ONE scan
       split, and the extra AQE shuffle stage's fixed latency (~0.4 s
       measured: stage materialization + task launches) exceeds any
       parallelism gain. Both bounds derive from session config, not
       from a bench constant."""
-    files, total = 1, 0
-    if os.path.isdir(path):
-        names = [f for f in os.listdir(path)
-                 if not f.startswith(("_", "."))]
-        files = max(1, len(names))
-        total = sum(os.path.getsize(os.path.join(path, f))
-                    for f in names)
-    else:
-        total = os.path.getsize(path)
-    if files >= spark.sparkContext.defaultParallelism:
+    urls = [urlparse(f) for f in files]
+    if not urls or any(u.scheme not in ("", "file") for u in urls):
         return False
+    if len(urls) >= spark.sparkContext.defaultParallelism:
+        return False
+    total = sum(os.path.getsize(unquote(u.path)) for u in urls)
     return total >= _max_partition_bytes(spark) // 8
 
 
@@ -63,26 +60,6 @@ def _max_partition_bytes(spark: SparkSession) -> int:
     if raw and raw[-1] in mult:
         return int(raw[:-1]) * mult[raw[-1]]
     return int(raw)
-
-
-def spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Unsplittable-input guard (optimization guide §2.5, 'input skew:
-    one huge unsplittable file ... repartition immediately after the
-    read'): the testdata tables are single-file, single-row-group
-    parquet, so the scan yields 1-2 partitions and every downstream
-    per-doc stage (Arrow mappers, explode+partial-agg) runs on 1-2 of
-    the cluster's cores. A round-robin repartition to the session's
-    default parallelism right after the read costs one tiny exchange
-    (the tables are MBs) and restores full-width execution. No-op for
-    inputs that already split into enough tasks (any real multi-file
-    table at scale), so the guard is scale-adaptive, not tuned to
-    local[32]. Prefer load()'s path-based estimate; this DataFrame
-    variant pays an RDD-conversion probe and exists for callers that
-    hold only a computed plan."""
-    target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,6 +81,3 @@ def documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.col("lang"),
     )
-
-
-_spread = spread  # load()'s keyword arg shadows the function name

@@ -118,18 +118,36 @@ def test_resume_refuses_manifest_mismatch(spark, tmp_path):
         run_filter(spark, df, _cfg(min_length=100), checkpoint_dir=ckpt)
 
 
+def test_resume_refuses_corpus_manifest_mismatch(spark, tmp_path):
+    """With a gate on, resume reattaches survivor text from the committed
+    corpus; a corpus part file vanishing must refuse resume instead of
+    silently dropping the survivors whose text it held."""
+    import glob
+
+    import pytest
+    ckpt = str(tmp_path / "ckpt8")
+    df = fx.to_spark_df(spark, fx.volume(sf=0.0002))
+    cfg = _cfg(min_length=100, line_dedup_min_df=2)
+    run_filter(spark, df, cfg, checkpoint_dir=ckpt)
+    victim = sorted(glob.glob(os.path.join(ckpt, "corpus", "part-*")))[0]
+    os.remove(victim)
+    with pytest.raises(RuntimeError, match="corpus data files do not match "
+                       "the committed manifest"):
+        run_filter(spark, df, cfg, checkpoint_dir=ckpt)
+
+
 def test_resume_refuses_torn_commit(spark, tmp_path):
     """A committed reads2 without the rest of its commit — lineage.json
     (the budget's raw-char base) or, with gates on, the verdict table
-    and the line-dedup hash set — must refuse resume, not budget
-    against a zero input or re-derive the gate decisions."""
+    and the gated corpus — must refuse resume, not budget against a
+    zero input or re-derive the gate decisions."""
     import pytest
     ckpt = str(tmp_path / "ckpt7")
     df = fx.to_spark_df(spark, fx.volume(sf=0.0002))
     cfg = _cfg(min_length=100, keep_percent=50.0, line_dedup_min_df=2,
                blocklist_words=("no-such-word",))
     run_filter(spark, df, cfg, checkpoint_dir=ckpt)
-    for member in ("lineage.json", "verdicts", "line_hot"):
+    for member in ("lineage.json", "verdicts", "corpus"):
         path = os.path.join(ckpt, member)
         os.rename(path, path + ".away")
         with pytest.raises(RuntimeError, match="cannot resume.*"

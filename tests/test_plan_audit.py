@@ -146,6 +146,50 @@ def test_gated_corpus_is_built_once(spark, tmp_path, monkeypatch):
     assert res.kept.count() > 0
 
 
+def test_resumed_gated_run_reads_the_committed_corpus(spark, tmp_path):
+    """A resume with gates on reattaches survivor text from the corpus
+    the fresh leg committed: neither the canonical-URL UDF nor the
+    line-clean mapper runs again, and the source is not scanned for
+    it. The survivors equal the fresh leg's."""
+    from filtlong_spark.plans.pipeline import run_filter
+    cfg = _gate_cfg(canonical_url_dedup=True, blocklist_hosts=("bad.ex.com",),
+                    line_dedup_min_df=3, near_dup_dedup="simhash")
+    src = _gate_source(spark, tmp_path)
+    ck = str(tmp_path / "ck")
+    fresh = run_filter(spark, src, cfg, checkpoint_dir=ck).kept.collect()
+    res = run_filter(spark, src, cfg, checkpoint_dir=ck)
+    assert res.resumed
+    plan = res.kept._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "MapInArrow"):
+        assert node not in plan, plan
+    assert not set(src.inputFiles()) & set(res.kept.inputFiles())
+    assert res.kept.collect() == fresh and fresh
+
+
+def test_source_spread_needs_no_plan_probe(spark, tmp_path, monkeypatch):
+    """Whether run_filter fans a small source out is decided from the
+    source's files alone: with DataFrame.rdd raising, a fresh run over a
+    one-file parquet source keeps the survivors of an unpatched run."""
+    from filtlong_spark.plans.pipeline import run_filter
+    from filtlong_spark.sources import tables
+    path = str(tmp_path / "one")
+    _gate_source(spark, tmp_path).coalesce(1).write.parquet(path)
+    src = spark.read.parquet(path)
+    assert len(src.inputFiles()) == 1
+    want = run_filter(spark, src, _gate_cfg()).kept.collect()
+
+    def no_probe(self):
+        raise AssertionError("DataFrame.rdd probed")
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # its abstract base)
+    monkeypatch.setattr(type(src), "rdd", property(no_probe))
+    assert run_filter(spark, spark.read.parquet(path),
+                      _gate_cfg()).kept.collect() == want and want
+    # an in-memory source has no files and never spreads
+    assert not tables._should_spread(spark, [])
+
+
 def test_ungated_survivors_read_the_source(spark, tmp_path):
     """Without a gate nothing is materialized before scoring: the
     survivor write reattaches text from the source scan."""
