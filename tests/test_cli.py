@@ -1,4 +1,11 @@
-"""Filtlong-compatible CLI: same flags, same stdout/stderr contract."""
+"""Filtlong-compatible CLI: same flags, same stdout/stderr contract.
+
+None of these checks needs Filtlong's own ``test/`` fixture directory: the
+FASTX cases run on the seeded read set that the ``fastx_set`` fixture
+(tests/conftest.py) writes, and compare the CLI with the library pipeline
+on the same files. Filtlong's golden outputs are checked in
+tests/test_fastx_parity.py, which skips them where that directory is
+absent."""
 
 import pytest
 
@@ -6,8 +13,6 @@ from filtlong_spark import cli
 from filtlong_spark.config import FilterConfig
 from filtlong_spark.plans import fastx_pipeline as fp
 from filtlong_spark.sources import fastx
-
-REF = "/root/reference/test"
 
 
 def test_version(capsys):
@@ -20,8 +25,8 @@ def test_no_input(capsys):
     assert "Error: no input reads" in capsys.readouterr().err
 
 
-def test_no_thresholds_error(capsys, spark):
-    assert cli.main([f"{REF}/test_sort.fastq"]) == 1
+def test_no_thresholds_error(capsys, spark, fastx_set):
+    assert cli.main([fastx_set.fastq]) == 1
     err = capsys.readouterr().err
     assert err.startswith("Error: no thresholds set")
 
@@ -32,14 +37,14 @@ def test_missing_file_error(capsys, spark):
         capsys.readouterr().err
 
 
-def test_cli_matches_library_phred_mode(capsys, spark):
+def test_cli_matches_library_phred_mode(capsys, spark, fastx_set):
     """CLI stdout == the library pipeline's driver formatter for the
     same flags (unit-suffix parsing included)."""
     rc = cli.main(["--min_length", "0.01k", "--target_bases", "10k",
-                   f"{REF}/test_sort.fastq"])
+                   fastx_set.fastq])
     out, err = capsys.readouterr()
     assert rc == 0
-    reads = fastx.read_fastx(spark, f"{REF}/test_sort.fastq")
+    reads = fastx.read_fastx(spark, fastx_set.fastq)
     cfg = FilterConfig(min_length="0.01k", target_chars="10k",
                        mode="intrinsic")
     res = fp.run_filtlong(spark, reads, cfg)
@@ -48,24 +53,25 @@ def test_cli_matches_library_phred_mode(capsys, spark):
     assert "target: 10,000 bp" in err
 
 
-def test_cli_refset_trim_split_and_out_dir(capsys, spark, tmp_path):
+def test_cli_refset_trim_split_and_out_dir(capsys, spark, tmp_path,
+                                           fastx_set):
     """Reference mode (-a) + --trim/--split through the CLI; --out_dir
     writes the distributed sink byte-identically to stdout mode."""
     out_dir = str(tmp_path / "cli_out")
-    rc = cli.main(["--min_length", "1", "-a", f"{REF}/test_reference.fasta",
+    rc = cli.main(["--min_length", "1", "-a", fastx_set.asm,
                    "--split", "25", "--out_dir", out_dir,
-                   f"{REF}/test_split.fastq"])
+                   fastx_set.fastq])
     assert rc == 0
-    reads = fastx.read_fastx(spark, f"{REF}/test_split.fastq")
-    assembly = fastx.read_fastx(spark, f"{REF}/test_reference.fasta")
+    reads = fastx.read_fastx(spark, fastx_set.fastq)
+    assembly = fastx.read_fastx(spark, fastx_set.asm)
     cfg = FilterConfig(min_length=1, split=25, mode="refset")
     res = fp.run_filtlong(spark, reads, cfg, assembly=assembly)
     assert fp.read_fastx_output(out_dir) == "".join(fp.to_fastx_lines(res))
 
 
-def test_cli_verbose_blocks(capsys, spark):
+def test_cli_verbose_blocks(capsys, spark, fastx_set):
     rc = cli.main(["--min_length", "1", "--verbose", "-a",
-                   f"{REF}/test_reference.fasta", f"{REF}/test_sort.fastq"])
+                   fastx_set.asm, fastx_set.fastq])
     out, err = capsys.readouterr()
     assert rc == 0
     assert "mean quality" in err  # per-read verbose block on stderr

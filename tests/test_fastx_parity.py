@@ -1,8 +1,21 @@
-"""FULL-PARITY golden tests: run this engine on the REFERENCE'S OWN test
-fixtures with the reference's own flag combinations and assert the exact
-outputs its test suite asserts (test/test_sort.py, test_trim.py,
-test_split.py). A Filtlong user could switch engines and re-run these
-workloads unchanged."""
+"""FASTX parity tests, in two kinds.
+
+Golden tests run this engine on the REFERENCE'S OWN test fixtures (the
+files of Filtlong's ``test/`` directory, read from ``REF``) with the
+reference's own flag combinations and assert the exact outputs its test
+suite asserts (test/test_sort.py, test_trim.py, test_split.py): TestParser,
+TestTrimParity, TestSplitParity and every TestSortParity case but
+``test_fasta_without_reference_errors``. A Filtlong user could switch
+engines and re-run these workloads unchanged. They skip where ``REF`` is
+absent, and run unchanged wherever it is present.
+
+The error checks (TestErrorParity, TestSortParity's
+``test_fasta_without_reference_errors``) and the distributed-sink checks
+(TestDistributedSink) depend on no golden value; they run everywhere, on
+the seeded read set that the ``fastx_set`` fixture (tests/conftest.py)
+writes."""
+
+import os
 
 import numpy as np
 import pytest
@@ -12,6 +25,10 @@ from filtlong_spark.plans import fastx_pipeline as fp
 from filtlong_spark.sources import fastx
 
 REF = "/root/reference/test"
+
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason=f"Filtlong's test fixture directory {REF} is absent")
 
 
 @pytest.fixture(scope="module")
@@ -35,10 +52,26 @@ def illumina(spark):
                                     f"{REF}/test_reference_2.fastq.gz"]).cache()
 
 
+@pytest.fixture(scope="module")
+def seeded_reads(spark, fastx_set):
+    return fastx.read_fastx(spark, fastx_set.fastq).cache()
+
+
+@pytest.fixture(scope="module")
+def seeded_fasta(spark, fastx_set):
+    return fastx.read_fastx(spark, fastx_set.fasta).cache()
+
+
+@pytest.fixture(scope="module")
+def seeded_assembly(spark, fastx_set):
+    return fastx.read_fastx(spark, fastx_set.asm).cache()
+
+
 def kept_names(res):
     return [r["name"] for r in res.kept.collect()]
 
 
+@needs_ref
 class TestParser:
     def test_fastq_records(self, spark, sort_reads):
         rows = sort_reads.collect()
@@ -57,6 +90,7 @@ class TestSortParity:
     """reference test/test_sort.py sweep: Phred ranking (2,3,1) inverts to
     (1,3,2) under either reference type; budget boundaries incl. overshoot."""
 
+    @needs_ref
     @pytest.mark.parametrize("target,expect_phred,expect_ref", [
         (100_000, ["test_sort_1", "test_sort_2", "test_sort_3"],
                   ["test_sort_1", "test_sort_2", "test_sort_3"]),
@@ -77,12 +111,14 @@ class TestSortParity:
         assert kept_names(fp.run_filtlong(spark, sort_reads, cfg,
                                           assembly=assembly)) == expect_ref
 
+    @needs_ref
     def test_read_reference_mode(self, spark, sort_reads, illumina):
         cfg = FilterConfig(target_chars=10_000)
         assert kept_names(fp.run_filtlong(spark, sort_reads, cfg,
                                           ref_reads=illumina)) \
             == ["test_sort_1", "test_sort_3"]
 
+    @needs_ref
     def test_fasta_input_with_assembly(self, spark, sort_fasta, assembly):
         cfg = FilterConfig(target_chars=10_000)
         res = fp.run_filtlong(spark, sort_fasta, cfg, assembly=assembly)
@@ -91,11 +127,12 @@ class TestSortParity:
         lines = fp.to_fastx_lines(res)
         assert lines[0].startswith(">test_sort_1")
 
-    def test_fasta_without_reference_errors(self, spark, sort_fasta):
+    def test_fasta_without_reference_errors(self, spark, seeded_fasta):
         with pytest.raises(ValueError, match="FASTA input not supported"):
-            fp.run_filtlong(spark, sort_fasta, FilterConfig(target_chars=1))
+            fp.run_filtlong(spark, seeded_fasta, FilterConfig(target_chars=1))
 
 
+@needs_ref
 class TestTrimParity:
     """reference test/test_trim.py: names, lengths, first/last 8 bases."""
 
@@ -116,6 +153,7 @@ class TestTrimParity:
         assert sum(x[1] for x in got) == 4824
 
 
+@needs_ref
 class TestSplitParity:
     """reference test/test_split.py threshold sweep + names."""
 
@@ -149,38 +187,38 @@ class TestSplitParity:
 
 
 class TestErrorParity:
-    def test_bad_fastq(self, spark):
+    def test_bad_fastq(self, spark, fastx_set):
         with pytest.raises(Exception, match="incorrect FASTQ format"):
-            fastx.read_fastx(spark, f"{REF}/test_bad_fastq.fastq").collect()
+            fastx.read_fastx(spark, fastx_set.bad).collect()
 
-    def test_duplicate_names(self, spark, sort_reads):
-        dup = sort_reads.union(sort_reads.limit(1))
+    def test_duplicate_names(self, spark, seeded_reads):
+        dup = seeded_reads.union(seeded_reads.limit(1))
         with pytest.raises(ValueError, match="duplicate read name"):
             fp.run_filtlong(spark, dup, FilterConfig(target_chars=1))
 
-    def test_trim_without_reference(self, spark, sort_reads):
+    def test_trim_without_reference(self, spark, seeded_reads):
         # src/arguments.cpp:299-306 / test/test_error_messages.py:134-143
         with pytest.raises(ValueError, match=(
                 r"Error: assembly or read reference is required to use "
                 r"--trim")):
-            fp.run_filtlong(spark, sort_reads, FilterConfig(trim=True))
+            fp.run_filtlong(spark, seeded_reads, FilterConfig(trim=True))
 
-    def test_split_without_reference(self, spark, sort_reads):
+    def test_split_without_reference(self, spark, seeded_reads):
         with pytest.raises(ValueError, match=(
                 r"Error: assembly or read reference is required to use "
                 r"--split")):
-            fp.run_filtlong(spark, sort_reads, FilterConfig(split=250))
+            fp.run_filtlong(spark, seeded_reads, FilterConfig(split=250))
 
 
 class TestDistributedSink:
-    def test_write_fastx_matches_driver_formatter(self, spark, assembly,
-                                                  tmp_path):
+    def test_write_fastx_matches_driver_formatter(self, spark, fastx_set,
+                                                  seeded_assembly, tmp_path):
         """Multi-partition distributed write == the driver-side stdout
         formatter byte-for-byte (parts concatenated in filename order),
         incl. children ordered by (file, rec_idx, child_start)."""
-        reads = fastx.read_fastx(spark, f"{REF}/test_split.fastq")
+        reads = fastx.read_fastx(spark, fastx_set.fastq)
         cfg = FilterConfig(split=25, mode="refset")
-        res = fp.run_filtlong(spark, reads, cfg, assembly=assembly)
+        res = fp.run_filtlong(spark, reads, cfg, assembly=seeded_assembly)
         expected = "".join(fp.to_fastx_lines(res))
         out = str(tmp_path / "fastx_out")
         fp.write_fastx(res, out, n_partitions=4)
@@ -188,24 +226,26 @@ class TestDistributedSink:
         assert len(_glob.glob(out + "/part-*")) >= 1
         assert fp.read_fastx_output(out) == expected
 
-    def test_write_fastx_fasta_format(self, spark, sort_fasta, assembly,
-                                      tmp_path):
+    def test_write_fastx_fasta_format(self, spark, seeded_fasta,
+                                      seeded_assembly, tmp_path):
         cfg = FilterConfig(min_length=1, mode="refset")
-        res = fp.run_filtlong(spark, sort_fasta, cfg, assembly=assembly)
+        res = fp.run_filtlong(spark, seeded_fasta, cfg,
+                              assembly=seeded_assembly)
         out = str(tmp_path / "fasta_out")
         fp.write_fastx(res, out, n_partitions=3)
         text = fp.read_fastx_output(out)
         assert text == "".join(fp.to_fastx_lines(res))
         assert text.startswith(">")
 
-    def test_sink_plan_single_exchange_and_sort(self, spark, assembly):
+    def test_sink_plan_single_exchange_and_sort(self, spark, fastx_set,
+                                                seeded_assembly):
         """The sink plan must pay exactly ONE exchange (the range
         partitioning) and ONE sort (within output tasks): consuming the
         globally-ordered `kept` here would bake a second range exchange
         + sort under the repartitionByRange (the round-2 double sort)."""
-        reads = fastx.read_fastx(spark, f"{REF}/test_split.fastq")
+        reads = fastx.read_fastx(spark, fastx_set.fastq)
         cfg = FilterConfig(split=25, mode="refset")
-        res = fp.run_filtlong(spark, reads, cfg, assembly=assembly)
+        res = fp.run_filtlong(spark, reads, cfg, assembly=seeded_assembly)
         plan = (fp.sink_df(res, n_partitions=4)
                 ._jdf.queryExecution().optimizedPlan().toString())
         # the upstream budget window contributes its own exchanges; the
