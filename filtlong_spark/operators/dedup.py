@@ -272,17 +272,67 @@ def jaccard_pairs(docs: DataFrame, shingle_n: int = 5,
     return out
 
 
+# most candidate pairs connected_components resolves on the driver:
+# 16 MiB as two int64 ids per pair
+DRIVER_CC_PAIRS = 1 << 20
+
+
+def _components_local(a, b):
+    """(node, rep) numpy arrays for the pair arrays ``a``/``b``: min-label
+    propagation as in the Spark loop, with each round's pointer jumping
+    run to every chain's root, over dense node indices (np.unique sorts,
+    so the smallest index is the smallest doc_id). Labels only ever fall
+    to a smaller node of the same component, so the loop ends, and it
+    ends with every component on its minimum."""
+    import numpy as np
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    src, dst = idx[:len(a)], idx[len(a):]
+    lab = np.arange(len(nodes))
+    while True:
+        m = np.minimum(lab[src], lab[dst])
+        new = lab.copy()
+        np.minimum.at(new, src, m)
+        np.minimum.at(new, dst, m)
+        hop = new[new]
+        while (hop != new).any():  # pointer jumping to each chain's root
+            new, hop = hop, hop[hop]
+        if (new == lab).all():
+            return nodes, nodes[lab]
+        lab = new
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """(node, rep): connected components of the near-dup pair graph via
     min-label propagation to fixpoint — the step that turns candidate
     PAIRS into keep/drop GROUPS (rep = smallest doc_id reachable).
 
-    Scale shape: each iteration is one equi-join of the (pairs-only) edge
-    list with the label table, a min-aggregate, and a pointer-jump
-    (rep := rep's rep — path halving, so even long chains converge in
-    O(log n) rounds); only docs that appear in a pair participate.
-    localCheckpoint truncates the lineage each round (the iterative-Spark
-    requirement — without it the logical plan grows without bound)."""
+    Size gate: the selected (doc_a, doc_b) pairs are evaluated once, into
+    a lazy localCheckpoint that a limit(DRIVER_CC_PAIRS + 1) Arrow probe
+    fills. A graph within DRIVER_CC_PAIRS is resolved on the driver
+    (_components_local) and its labels come back as a local relation.
+    The perfbench workloads all take this path; none builds a graph
+    large enough for the loop below, so its cost is unmeasured there.
+
+    Above DRIVER_CC_PAIRS, each round is one equi-join of the (pairs-only)
+    edge list with the label table, a min-aggregate, and one pointer hop
+    (rep := rep's rep); only docs that appear in a pair participate.
+    Along a chain whose ids are in random order the minimum still moves
+    about one edge per round, so max_iter bounds the rounds and a loop
+    that has not converged raises. localCheckpoint truncates the lineage
+    each round (the iterative-Spark requirement — without it the
+    logical plan grows without bound)."""
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
+    probe = pairs.limit(DRIVER_CC_PAIRS + 1).toArrow()
+    if probe.num_rows <= DRIVER_CC_PAIRS:
+        import pyarrow as pa
+        node, rep = _components_local(probe.column("doc_a").to_numpy(),
+                                      probe.column("doc_b").to_numpy())
+        typ = probe.schema.field("doc_a").type
+        key = pairs.schema["doc_a"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"node": pa.array(node, typ), "rep": pa.array(rep, typ)}),
+            f"node {key}, rep {key}")
+    # the probe filled the checkpoint: the loop reads the pairs from it
     edges = (pairs.select(F.col("doc_a").alias("src"),
                           F.col("doc_b").alias("dst"))
              .union(pairs.select(F.col("doc_b").alias("src"),

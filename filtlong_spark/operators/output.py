@@ -75,15 +75,35 @@ def read_verdicts(spark: SparkSession, path: str) -> DataFrame:
         os.path.join(path, VERDICTS_SUBDIR))
 
 
+def _part_files(path: str, subdir: str) -> list[str]:
+    import glob
+    return sorted(glob.glob(os.path.join(path, subdir, "part-*")))
+
+
+def verdict_counts(path: str) -> dict[str, int]:
+    """Committed verdict rows by reason, read from the part files under
+    ``path`` with pyarrow (driver-side, no Spark job). The reason column
+    is read dictionary-encoded one record batch at a time, so driver
+    memory stays at one batch however many pages were flagged."""
+    from collections import Counter
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    counts = Counter()
+    for f in _part_files(path, VERDICTS_SUBDIR):
+        part = pq.ParquetFile(f, read_dictionary=["reason"])
+        for batch in part.iter_batches(columns=["reason"]):
+            for v in pc.value_counts(batch.column(0)):
+                counts[v["values"].as_py()] += v["counts"].as_py()
+    return dict(counts)
+
+
 def _manifest(path: str, subdir: str) -> dict[str, int]:
     """Per-data-file row counts from the parquet footers (driver-side,
     no Spark job) — the parquet-dir rendering of an Iceberg manifest."""
-    import glob
-
     import pyarrow.parquet as pq
-    files = sorted(glob.glob(os.path.join(path, subdir, "part-*")))
     return {os.path.basename(f): pq.ParquetFile(f).metadata.num_rows
-            for f in files}
+            for f in _part_files(path, subdir)}
 
 
 def write_lineage(path: str, metrics: dict,

@@ -14,11 +14,13 @@ Physical plan discipline (the 100 TB posture):
   (canonical_url_dedup) and in the gates' Arrow mappers (line clean,
   shingling, classifier features); everything else is columnar.
 - with any gate on, the gated, line-cleaned corpus is materialized ONCE;
-  the gates, the scorer and the survivor reattach read it, so ingest and
-  the line-clean mapper run twice per fresh run (line-frequency count,
-  corpus build) instead of once per consumer. It is committed with the
-  snapshot, so a resume reattaches survivor text from it with one scan
-  and never re-reads the source or re-runs a gate.
+  the gates, the scorer and the survivor reattach read it. With line
+  dedup on, the ingest + blocklist rows are materialized first, so the
+  line-frequency count and the line clean read them and ingest (with
+  its canonical-URL UDF) runs once per fresh run. The corpus is
+  committed with the snapshot, so a resume reattaches survivor text
+  from it with one scan and never re-reads the source or re-runs a
+  gate; a gated resume plans ingest only if its quarantine is read.
 - total raw input chars ride an Observation on the first action over
   the ingest rows — no separate input traversal.
 - E1 stats + the budget's passed-chars sum share ONE aggregate job over
@@ -28,16 +30,20 @@ Physical plan discipline (the 100 TB posture):
 
 Job count without gates: the snapshot write + the stats aggregate +
 [budget: 1 histogram + boundary] + the consumer's action. The gate stage
-adds the line-frequency collect, the corpus checkpoint, near-dup's own
-LSH and connected-components jobs, the corpus and verdict writes and
-the verdict count.
+adds the ingest checkpoint and line-frequency collect (line dedup on),
+the corpus checkpoint, near-dup's own jobs (the shingle checkpoint and
+the candidate-pair probe; a graph above the driver budget adds the
+connected-components loop, see dedup.connected_components), and the
+corpus and verdict writes. The per-gate drop counts are read from the
+verdict part files, with no job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
-from functools import reduce
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -56,13 +62,20 @@ from ..sources import tables
 class PipelineResult:
     kept: DataFrame        # survivors, ordered (warc_ts, url, child_start)
     reads2: DataFrame      # full post-scrub scored set with passed labels
-    quarantine: DataFrame
+    build_quarantine: Callable[[], DataFrame]  # plans `quarantine`
     total_input_chars: int
     target: int | None
     scratch_dir: str = ""
     resumed: bool = False
     metrics: dict | None = None
     lang_rejected: DataFrame | None = None  # langid-gated docs (A2 analog)
+
+    @cached_property
+    def quarantine(self) -> DataFrame:
+        """Ingest's and the gates' rejects with a reason column, planned
+        on first read: a resume that only writes survivors plans no
+        ingest."""
+        return self.build_quarantine()
 
     def unpersist(self):  # compat no-op (scratch is parquet-backed)
         return self
@@ -130,6 +143,13 @@ def _blocklist_on(cfg: FilterConfig, blocklist_hosts_df) -> bool:
                 or blocklist_hosts_df is not None)
 
 
+def _release_checkpoint(checkpointed: DataFrame) -> None:
+    """Drop an eager localCheckpoint's blocks from executor storage once
+    nothing reads it. PySpark has no call for this; the checkpoint's
+    plan is a LogicalRDD over the persisted RDD."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
                 blocklist_hosts_df: DataFrame | None, scratch: str):
     """The pre-scoring gates as one stage: (corpus, verdicts, drops).
@@ -137,16 +157,20 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
     ``corpus`` is the post-blocklist, line-cleaned pages (PAGE_COLS),
     materialized ONCE by an eager localCheckpoint that also carries the
     blocklist verdict; near-dup, the classifier, the scorer and the
-    survivor reattach all read it, so ingest, the blocklist probe and
-    the line-clean mapper run at most twice (the line-frequency count,
-    then this build). The checkpoint is also committed under
-    ``scratch`` as ``corpus/`` (a write that reads it back, nothing
-    upstream reruns), so resume reattaches survivor text from it.
+    survivor reattach all read it. With line dedup on, the rows before
+    the line clean get their own eager checkpoint, which the
+    line-frequency count and the clean both read, so ingest and the
+    blocklist probe run once; it is released from executor storage once
+    the corpus checkpoint is built. The corpus checkpoint is also
+    committed under ``scratch`` as ``corpus/`` (a write that reads it
+    back, nothing upstream reruns), so resume reattaches survivor text
+    from it.
     ``verdicts`` is the one (url, reason) table every gate writes to,
     committed under ``scratch`` before the snapshot; a url flagged twice
     keeps the first reason in DCLM order: deny list, then near-dup, then
     the classifier. Near-dup and the classifier see only unblocked pages.
-    ``drops``: rows each enabled gate dropped, by lineage counter."""
+    ``drops``: rows each enabled gate dropped, by lineage counter, read
+    from the committed verdict files."""
     from ..operators import dedup as dedup_op
     blocklist = _blocklist_on(cfg, blocklist_hosts_df)
     pages = valid.select(*PAGE_COLS, F.lit(True).alias("keep"))
@@ -165,13 +189,21 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
             key_col="url", carry=PAGE_COLS[1:])
         pages = pages.select(*PAGE_COLS[:3], F.when(
             F.col("keep"), F.col("text")).alias("text"), "keep")
+    pre_clean = None
     if cfg.line_dedup_min_df is not None:
+        # the line-frequency count and the line clean both read these
+        # rows: materialize them once, so ingest runs once per fresh leg
+        pages = pre_clean = pages.localCheckpoint(eager=True)
         # line frequencies count over the unblocked pages only
         hot = dedup_op.line_hot_hashes(pages.filter(F.col("keep")),
                                        cfg.line_dedup_min_df, key="url")
         pages = dedup_op.line_clean_pages(pages, cfg.line_dedup_min_df,
                                           hot=hot)
     pages = pages.localCheckpoint(eager=True)
+    if pre_clean is not None:
+        # everything downstream reads the corpus checkpoint: executor
+        # storage holds one full-text copy of the corpus, not two
+        _release_checkpoint(pre_clean)
     pages.write.mode("overwrite").parquet(
         os.path.join(scratch, output_op.CORPUS_SUBDIR))
     corpus = pages.filter(F.col("keep")).select(*PAGE_COLS)
@@ -204,7 +236,7 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
     verdicts = output_op.write_verdicts(
         flagged.groupBy("url").agg(F.min_by("reason", "rank")
                                    .alias("reason")), scratch)
-    counts = dict(verdicts.groupBy("reason").count().collect())
+    counts = output_op.verdict_counts(scratch)
     return corpus, verdicts, {counter: counts.get(reason, 0)
                               for counter, reason, _ in gates}
 
@@ -232,17 +264,15 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
     members = ((output_op.CORPUS_SUBDIR, output_op.VERDICTS_SUBDIR)
                if gated else ())
 
+    drops = {}
+    resumed = resume and output_op.is_committed(os.path.join(scratch, "reads2"))
     # without gates the committed snapshot holds metrics only, and the
     # source table is re-read at output time to reattach survivor text
     # (the reference's second input pass, src/main.cpp:263-311); with a
     # gate on, a resume reads the committed corpus instead, and ingest
-    # feeds only the lazy quarantine
-    ing = ingest_op.ingest(
+    # is planned only if the quarantine is read
+    ing = None if resumed and gated else ingest_op.ingest(
         pages, canonical_url_dedup=cfg.canonical_url_dedup)
-    quarantine = ing.quarantine
-
-    drops = {}
-    resumed = resume and output_op.is_committed(os.path.join(scratch, "reads2"))
     if resumed:
         lineage = output_op.read_lineage(scratch) or {}
         _check_resume_config(cfg, lineage.get("config") or {})
@@ -327,8 +357,12 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
             # node never runs and Observation.get raises — zero docs means
             # zero chars
             total_input_chars = 0
-    if gated:
-        quarantine = quarantine.unionByName(ing.valid.join(verdicts, "url"))
+
+    def quarantine() -> DataFrame:
+        i = ing or ingest_op.ingest(
+            pages, canonical_url_dedup=cfg.canonical_url_dedup)
+        return (i.quarantine.unionByName(i.valid.join(verdicts, "url"))
+                if gated else i.quarantine)
 
     # langid gate (A2 analog): rejected docs never enter normalization
     lang_rejected = reads2.filter(~F.col("lang_ok"))
@@ -411,7 +445,8 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
                 .sortWithinPartitions(*order_cols))
     else:
         kept = kept.orderBy(*order_cols)
-    return PipelineResult(kept=kept, reads2=labeled, quarantine=quarantine,
+    return PipelineResult(kept=kept, reads2=labeled,
+                          build_quarantine=quarantine,
                           total_input_chars=total_input_chars, target=target,
                           scratch_dir=scratch, resumed=resumed,
                           metrics=metrics, lang_rejected=lang_rejected)

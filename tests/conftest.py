@@ -39,12 +39,18 @@ def fastx_set(tmp_path_factory, spark):
       assembly, and two reads carry a header comment;
     - ``fasta``: ``reads.fasta``, the same reads as FASTA;
     - ``bad``: ``bad.fastq``, one record whose quality line is shorter
-      than its sequence.
+      than its sequence;
+    - ``short_1``/``short_2``: ``short_{1,2}.fastq.gz``, a gzipped
+      short-read pair tiling the assembly: 150-base reads every 25 bases
+      (clipped at the ends), forward in ``short_1`` and reverse
+      complemented in ``short_2``, so every assembly 16-mer occurs 10-12
+      times over both strands.
 
     Returns the paths as attributes. The checks that use the set only mean
     something if ``--split 25`` makes children against the assembly and
     ``--target_bases 10k`` drops a read in Phred mode, so both are asserted
     here."""
+    import gzip
     import random
     import types
 
@@ -56,7 +62,9 @@ def fastx_set(tmp_path_factory, spark):
     d = tmp_path_factory.mktemp("fastx_set")
     paths = types.SimpleNamespace(
         asm=str(d / "asm.fasta"), fastq=str(d / "reads.fastq"),
-        fasta=str(d / "reads.fasta"), bad=str(d / "bad.fastq"))
+        fasta=str(d / "reads.fasta"), bad=str(d / "bad.fastq"),
+        short_1=str(d / "short_1.fastq.gz"),
+        short_2=str(d / "short_2.fastq.gz"))
 
     def bases(n):
         return "".join(rng.choice("ACGT") for _ in range(n))
@@ -85,6 +93,14 @@ def fastx_set(tmp_path_factory, spark):
             fa.write(f">{header}\n{seq}\n")
     with open(paths.bad, "w") as f:
         f.write("@bad_1\nACGTACGTACGT\n+\nIIIIIIII\n")
+    revcomp = str.maketrans("ACGT", "TGCA")
+    with gzip.open(paths.short_1, "wt") as r1, \
+            gzip.open(paths.short_2, "wt") as r2:
+        for i, start in enumerate(range(-125, len(asm), 25)):
+            seq = asm[max(start, 0):start + 150]
+            r1.write(f"@short_{i}/1\n{seq}\n+\n{'I' * len(seq)}\n")
+            rc = seq.translate(revcomp)[::-1]
+            r2.write(f"@short_{i}/2\n{rc}\n+\n{'I' * len(rc)}\n")
 
     fq_df = fastx.read_fastx(spark, paths.fastq)
     split = fp.run_filtlong(spark, fq_df,

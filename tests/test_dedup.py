@@ -81,26 +81,128 @@ def test_simhash_width_survives_100k_corpus(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in out} == {(0, 100_000)}
 
 
-def test_connected_components_chain_and_cluster(spark):
+def _on_path(monkeypatch, path, fn):
+    """fn() with connected_components resolving small graphs on the
+    driver ("driver") or, with the driver budget at zero pairs, always on
+    the Spark loop ("spark")."""
+    with monkeypatch.context() as m:
+        if path == "spark":
+            m.setattr(dedup, "DRIVER_CC_PAIRS", 0)
+        return fn()
+
+
+def test_connected_components_chain_and_cluster(spark, monkeypatch):
     """Pairs (1,2),(2,3) chain + (10,11) pair + isolated 20: components
-    resolve to the min doc_id after propagation."""
+    resolve to the min doc_id after propagation, on either path."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
                                   "doc_a long, doc_b long")
     docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 20)],
                                  "doc_id long")
-    out = {r["doc_id"]: (r["rep_id"], r["is_dup"])
-           for r in dedup.dedup_assign(docs, pairs).collect()}
-    assert out == {1: (1, False), 2: (1, True), 3: (1, True),
-                   10: (10, False), 11: (10, True), 20: (20, False)}
+    for path in ("driver", "spark"):
+        out = _on_path(monkeypatch, path, lambda: {
+            r["doc_id"]: (r["rep_id"], r["is_dup"])
+            for r in dedup.dedup_assign(docs, pairs).collect()})
+        assert out == {1: (1, False), 2: (1, True), 3: (1, True),
+                       10: (10, False), 11: (10, True), 20: (20, False)}, path
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     n = 24
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)],
                                   "doc_a long, doc_b long")
-    comps = dedup.connected_components(pairs)
-    reps = {r["rep"] for r in comps.collect()}
-    assert reps == {0}
+    for path in ("driver", "spark"):
+        comps = _on_path(monkeypatch, path,
+                         lambda: dedup.connected_components(pairs).collect())
+        assert len(comps) == n + 1 and {r["rep"] for r in comps} == {0}, path
+
+
+def test_connected_components_evaluates_pairs_once(spark, monkeypatch):
+    """The size probe and the Spark loop read one evaluation of the
+    candidate pairs: a UDF in the pairs' plan runs once per pair."""
+    from pyspark.sql import functions as F
+    n = 40
+    for path in ("driver", "spark"):
+        seen = spark.sparkContext.accumulator(0)
+
+        def tap(x, seen=seen):
+            seen.add(1)
+            return x
+        pairs = (spark.createDataFrame([(i, i + 1) for i in range(n)],
+                                       "doc_a long, doc_b long")
+                 .select(F.udf(tap, "long")("doc_a").alias("doc_a"),
+                         "doc_b"))
+        comps = _on_path(monkeypatch, path,
+                         lambda: dedup.connected_components(pairs).collect())
+        assert {r["rep"] for r in comps} == {0}, path
+        assert seen.value == n, path
+
+
+def _random_pair_graph(rng):
+    """Pairs over random 60-bit ids: chains longer than 2^5 (in random id
+    order), stars, cycles, isolated pairs, a self-pair, and every tenth
+    pair repeated, half of those reversed."""
+    pairs, n = [], 0
+
+    def ids(k):
+        nonlocal n
+        n += k
+        return list(range(n - k, n))
+    for length in (33, 40):
+        c = ids(length)
+        rng.shuffle(c)
+        pairs += list(zip(c, c[1:]))
+    for size in (2, 15):
+        hub, *leaves = ids(size)
+        pairs += [(hub, x) for x in leaves]
+    for size in (3, 33):
+        c = ids(size)
+        pairs += list(zip(c, c[1:] + c[:1]))
+    for _ in range(5):
+        pairs.append(tuple(ids(2)))
+    pairs.append((ids(1)[0],) * 2)
+    pairs += [p if i % 2 else p[::-1] for i, p in enumerate(pairs[::10])]
+    label = rng.sample(range(1 << 60), n)
+    pairs = [(label[a], label[b]) for a, b in pairs]
+    rng.shuffle(pairs)
+    return pairs
+
+
+def _components_reference(pairs):
+    """{node: smallest node of its component}, by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_connected_components_paths_agree(spark, monkeypatch):
+    """Seeded random pair graphs: the driver path and the Spark loop give
+    identical (node, rep) rows, equal to a union-find reference. The
+    loop's min-label moves about one edge per round along a chain whose
+    ids are in random order, so the cap is raised above its default."""
+    import random
+    for seed in (0, 1):
+        pairs = _random_pair_graph(random.Random(seed))
+        df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        got = {}
+        for path in ("driver", "spark"):
+            comps = _on_path(monkeypatch, path,
+                             lambda: dedup.connected_components(
+                                 df, max_iter=64))
+            plan = comps._jdf.queryExecution().executedPlan().toString()
+            assert ("LocalTableScan" in plan) == (path == "driver"), plan
+            got[path] = sorted((r["node"], r["rep"])
+                               for r in comps.collect())
+        assert got["driver"] == got["spark"], seed
+        assert dict(got["driver"]) == _components_reference(pairs), seed
 
 
 def test_lsh_band_bucket_cap(spark):

@@ -10,10 +10,11 @@ engines and re-run these workloads unchanged. They skip where ``REF`` is
 absent, and run unchanged wherever it is present.
 
 The error checks (TestErrorParity, TestSortParity's
-``test_fasta_without_reference_errors``) and the distributed-sink checks
-(TestDistributedSink) depend on no golden value; they run everywhere, on
-the seeded read set that the ``fastx_set`` fixture (tests/conftest.py)
-writes."""
+``test_fasta_without_reference_errors``), the distributed-sink checks
+(TestDistributedSink) and the gzip / short-read reference checks
+(TestSeededReadReference) depend on no golden value; they run
+everywhere, on the seeded read set that the ``fastx_set`` fixture
+(tests/conftest.py) writes."""
 
 import os
 
@@ -65,6 +66,12 @@ def seeded_fasta(spark, fastx_set):
 @pytest.fixture(scope="module")
 def seeded_assembly(spark, fastx_set):
     return fastx.read_fastx(spark, fastx_set.asm).cache()
+
+
+@pytest.fixture(scope="module")
+def seeded_short_reads(spark, fastx_set):
+    return fastx.read_fastx(spark, [fastx_set.short_1,
+                                    fastx_set.short_2]).cache()
 
 
 def kept_names(res):
@@ -262,3 +269,53 @@ class TestDistributedSink:
         with pytest.raises(FileNotFoundError,
                            match=r"Error: cannot find file: BAD_FILENAME"):
             fastx.read_fastx(spark, "BAD_FILENAME")
+
+
+class TestSeededReadReference:
+    """The gzip reader and the short-read reference mode (-1/-2) on the
+    seeded gzipped pair that tiles the seeded assembly."""
+
+    def test_gzip_pair_parses(self, spark, fastx_set, seeded_short_reads):
+        import gzip
+        with gzip.open(fastx_set.short_1, "rt") as f:
+            lines = f.read().splitlines()
+        with fastx.open_fastx(fastx_set.short_1) as f:
+            recs = list(fastx.parse_fastx(f, fastx_set.short_1))
+        assert [r["name"] for r in recs] == [h[1:] for h in lines[0::4]]
+        assert [r["seq"] for r in recs] == lines[1::4]
+        assert [r["qual"] for r in recs] == lines[3::4]
+        rows = seeded_short_reads.collect()
+        assert len(rows) == 2 * len(recs)
+        assert {r["fmt"] for r in rows} == {"fastq"}
+
+    def test_kmer_set_required_copies(self, spark, seeded_short_reads):
+        """build_kmer_set keeps exactly the 16-mers seen at least
+        ``required_copies`` times over both strands of the reads."""
+        from collections import Counter
+        revcomp = str.maketrans("ACGT", "TGCA")
+        counts = Counter()
+        for r in seeded_short_reads.select("seq").collect():
+            for s in (r["seq"], r["seq"].translate(revcomp)[::-1]):
+                counts.update(s[i:i + 16] for i in range(len(s) - 15))
+        sizes = []
+        for copies in (1, 4, 11, 13):
+            got = fp.build_kmer_set(spark, seeded_short_reads, copies)
+            assert len(got) == len(set(got.tolist()))
+            sizes.append(len(got))
+            assert len(got) == sum(1 for c in counts.values()
+                                   if c >= copies)
+        # the tiling gives every assembly 16-mer 10-12 copies
+        assert sizes[0] == sizes[1] > sizes[2] > sizes[3] == 0
+
+    def test_read_reference_mode(self, spark, seeded_reads,
+                                 seeded_short_reads, seeded_assembly):
+        """Short reads that cover the assembly at least
+        ``required_copies`` times rank the long reads as the assembly
+        does, and not as their Phred scores do."""
+        cfg = FilterConfig(target_chars=10_000)
+        by_reads = kept_names(fp.run_filtlong(spark, seeded_reads, cfg,
+                                              ref_reads=seeded_short_reads))
+        assert by_reads == kept_names(fp.run_filtlong(
+            spark, seeded_reads, cfg, assembly=seeded_assembly))
+        assert by_reads != kept_names(fp.run_filtlong(spark, seeded_reads,
+                                                      cfg))

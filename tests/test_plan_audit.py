@@ -146,19 +146,58 @@ def test_gated_corpus_is_built_once(spark, tmp_path, monkeypatch):
     assert res.kept.count() > 0
 
 
-def test_resumed_gated_run_reads_the_committed_corpus(spark, tmp_path):
+def test_gated_ingest_runs_once(spark, tmp_path, monkeypatch):
+    """With line dedup on, the line-frequency count reads materialized
+    ingest + blocklist rows: neither the canonical-URL UDF nor the source
+    scan runs for it, so ingest's plan runs once per fresh leg (the line
+    clean reads the same rows). Those rows leave executor storage once
+    the corpus checkpoint is built, and the survivors never read them."""
+    from filtlong_spark.operators import dedup
+    from filtlong_spark.plans.pipeline import run_filter
+    seen = []
+    real = dedup.line_hot_hashes
+
+    def spy(docs, *a, **kw):
+        seen.append(docs)
+        return real(docs, *a, **kw)
+
+    monkeypatch.setattr(dedup, "line_hot_hashes", spy)
+    cfg = _gate_cfg(canonical_url_dedup=True, blocklist_hosts=("bad.ex.com",),
+                    line_dedup_min_df=3, near_dup_dedup="simhash")
+    src = _gate_source(spark, tmp_path)
+    res = run_filter(spark, src, cfg)
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    assert not set(src.inputFiles()) & set(seen[0].inputFiles())
+    level = (seen[0]._jdf.queryExecution().analyzed().collectLeaves().head()
+             .rdd().getStorageLevel())
+    assert not (level.useMemory() or level.useDisk()), level.toString()
+    assert res.kept.count() > 0
+
+
+def test_resumed_gated_run_reads_the_committed_corpus(spark, tmp_path,
+                                                      monkeypatch):
     """A resume with gates on reattaches survivor text from the corpus
     the fresh leg committed: neither the canonical-URL UDF nor the
     line-clean mapper runs again, and the source is not scanned for
-    it. The survivors equal the fresh leg's."""
+    it. Ingest is planned only when the quarantine is read. The
+    survivors equal the fresh leg's."""
+    from filtlong_spark.operators import ingest as ingest_op
     from filtlong_spark.plans.pipeline import run_filter
     cfg = _gate_cfg(canonical_url_dedup=True, blocklist_hosts=("bad.ex.com",),
                     line_dedup_min_df=3, near_dup_dedup="simhash")
     src = _gate_source(spark, tmp_path)
     ck = str(tmp_path / "ck")
     fresh = run_filter(spark, src, cfg, checkpoint_dir=ck).kept.collect()
+    calls = []
+    real = ingest_op.ingest
+    monkeypatch.setattr(ingest_op, "ingest",
+                        lambda *a, **kw: calls.append(1) or real(*a, **kw))
     res = run_filter(spark, src, cfg, checkpoint_dir=ck)
     assert res.resumed
+    assert not calls
+    assert res.quarantine.count() > 0 and len(calls) == 1
     plan = res.kept._jdf.queryExecution().executedPlan().toString()
     for node in ("ArrowEvalPython", "MapInArrow"):
         assert node not in plan, plan
