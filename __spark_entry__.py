@@ -100,20 +100,23 @@ def q_hard_rules(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def _scored(spark, sf_dir, with_spans=False):
-    """Score the documents table with the real pipeline UDF."""
-    # the scorer recomputes n_chars; drop the table's own copy
-    d = _docs(spark, sf_dir).drop("n_chars")
+def _scored(spark, sf_dir, split=None):
+    """Score the documents table with the pipeline's scorer: doc_id (as
+    a string) goes in as the url and comes back as ``doc_id`` from the
+    parent url; with ``split`` the rows are the scrubbed children and
+    the unscrubbed parents."""
+    d = _docs(spark, sf_dir)
     cfg = FilterConfig(min_length=1, window_size=WINDOW, mode="intrinsic",
-                       vocab=frozenset(VOCAB),
-                       split=3 if with_spans else None)
+                       vocab=frozenset(VOCAB), split=split)
     bc = refset_op.build_broadcast(spark, cfg, None)
-    return score_op.score_pandas(d, cfg, bc)
+    pages = d.select(F.col("doc_id").cast("string").alias("url"), "text")
+    return (score_op.score_and_scrub(pages, cfg, bc)
+            .withColumn("doc_id", F.col("parent_url").cast("long")))
 
 
 def q_window_quality(spark, sf_dir):
     """C3+C4: mean + sliding-min-window quality (src/read.cpp:208-236),
-    via the production pandas-UDF scorer."""
+    via the pipeline's scorer."""
     return (_scored(spark, sf_dir)
             .select("doc_id", "n_tokens", "mean_q", "window_q")
             .orderBy("doc_id"))
@@ -189,7 +192,7 @@ def q_refset_build(spark, sf_dir):
 
 def q_refset_quality(spark, sf_dir):
     """B4+C2: per-doc quality against the corpus-built accepted set via
-    explode + broadcast join (pure Catalyst spill path)."""
+    explode + broadcast join (pure Catalyst, no Python)."""
     d = _docs(spark, sf_dir)
     acc = refset_op.accepted_df(d, required_copies=4)
     return (score_op.quality_catalyst(d, acc, doc_key="doc_id")
@@ -200,28 +203,20 @@ def q_scrub_children(spark, sf_dir):
     """G2+G4+G5: split-mode scrub — bad-token runs >= 3 chars become cut
     points; children = complementary spans, named {id}_{start+1}-{end}
     (src/read.cpp:88-141). Text returned as md5 for compact comparison."""
-    s = _scored(spark, sf_dir, with_spans=True)
-    # ONE pass instead of a parents/children union: the scorer already
-    # gives unscrubbed docs a single full-doc span ([0, n_chars] — see
-    # scoring._score_batch), so exploding child_spans unconditionally
-    # yields the parent rows too (md5(substring(text,1,n_chars)) ==
-    # md5(text) byte-for-byte) — the union's two filtered branches each
-    # re-evaluated the whole Arrow scoring UDF (2x ArrowEvalPython).
-    scrubbed = F.col("scrubbed")
-    e = s.select("doc_id", "text", "scrubbed",
-                 F.explode("child_spans").alias("sp"))
-    return (e.select(
-        F.when(scrubbed,
-               F.concat_ws("", F.col("doc_id").cast("string"), F.lit("_"),
-                           (F.col("sp.start") + 1).cast("string"),
-                           F.lit("-"), F.col("sp.end").cast("string")))
-        .otherwise(F.col("doc_id").cast("string")).alias("child_id"),
-        F.col("sp.start").alias("start"),
-        F.col("sp.end").alias("end"),
-        F.md5(F.substring("text", F.col("sp.start") + 1,
-                          F.col("sp.end") - F.col("sp.start"))
-              .cast("binary")).alias("text_md5"))
-        .orderBy("child_id"))
+    # the scorer's rows are the children of scrubbed docs (named by
+    # core.child_name) and each unscrubbed doc as one [0, n_chars) span;
+    # their text comes from one join back to the documents on doc_id
+    s = _scored(spark, sf_dir, split=3)
+    text = _docs(spark, sf_dir).select("doc_id", "text")
+    return (s.join(text, "doc_id")
+            .select(F.col("url").alias("child_id"),
+                    F.col("child_start").alias("start"),
+                    F.col("child_end").alias("end"),
+                    F.md5(F.substring("text", F.col("child_start") + 1,
+                                      F.col("child_end")
+                                      - F.col("child_start"))
+                          .cast("binary")).alias("text_md5"))
+            .orderBy("child_id"))
 
 
 def q_langid(spark, sf_dir):

@@ -1,11 +1,13 @@
-"""Arrow-vectorized scoring UDFs (the slow-path kernels, batched).
+"""The intrinsic scorer: one fused, Arrow-batched mapInPandas pass.
 
 Per-token work never materializes as a Spark column (mirrors the reference
 discarding the quality string after scoring, src/read.cpp:25-62): each
-batch is tokenized, painted against the broadcast accepted set, and reduced
-to per-doc metrics (+ child spans when scrubbing) inside one Arrow batch.
+batch is tokenized, painted against the broadcast accepted set, reduced to
+per-doc metrics and, when scrubbing, cut into re-scored children inside
+one Arrow batch. ``reads2_parents`` builds the parent rows for this mapper
+and for the distributed-LM reassembly (operators/lm.py) alike.
 
-All math delegates to ``filtlong_spark.core`` so the pandas UDFs and the
+All math delegates to ``filtlong_spark.core`` so the mapper and the
 pure-Python oracle are bit-identical.
 """
 
@@ -13,7 +15,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import core
 from ..config import FilterConfig
@@ -48,99 +49,37 @@ def _register_self_contained_pickling() -> None:
         if mod in sys.modules:
             cloudpickle.register_pickle_by_value(sys.modules[mod])
 
-SCORE_FIELDS = T.StructType([
-    T.StructField("n_chars", T.LongType()),
-    T.StructField("n_tokens", T.LongType()),
-    T.StructField("mean_q", T.DoubleType()),
-    T.StructField("window_q", T.DoubleType()),
-    T.StructField("ratio", T.DoubleType()),
-    T.StructField("child_spans", T.ArrayType(T.StructType([
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-    ]))),
-    T.StructField("scrubbed", T.BooleanType()),
-])
-
-
-def _score_batch(texts: pd.Series, accepted, cfg_dict: dict) -> pd.DataFrame:
-    """Struct-per-doc scoring on the same flat batch kernels as the fused
-    mapper (core.batch_tokenize / flat_* / _batch_scrub)."""
-    import numpy as np
-    window_size = cfg_dict["window_size"]
-    trim = cfg_dict["trim"]
-    split = cfg_dict["split"]
-    want_spans = trim or split is not None
-    texts = [t if isinstance(t, str) else "" for t in texts]
-    nd = len(texts)
-    is_lm = isinstance(accepted, tuple) and accepted and accepted[0] == "lm"
-    # non-LM painting reads tokens from the blob buffer (pyarrow is_in)
-    # so the findall that builds per-token Python strings is skipped
-    tb = core.batch_tokenize(texts, need_tokens=bool(is_lm))
-    if is_lm:
-        qfn = core.quality_for(accepted)
-        parts, o = [], 0
-        for c in tb.counts:
-            parts.append(qfn(tb.tokens[o:o + int(c)]))
-            o += int(c)
-        q = np.concatenate(parts) if parts else np.zeros(0)
-    else:
-        q = core.flat_token_quality_batch(tb, accepted)
-    mean, win = core.flat_mean_window(q, tb.counts, window_size)
-    ratio = core.flat_window_ratio(mean, win)
-    n_chars = np.fromiter((len(t) for t in texts), dtype=np.int64, count=nd)
-
-    if want_spans:
-        scrubbed, child_rows = _batch_scrub(
-            tb, q, texts, np.zeros(nd, dtype=bool), trim, split, False)
-        spans_by_doc: dict[int, list] = {}
-        for d, s, e in child_rows:
-            spans_by_doc.setdefault(d, []).append({"start": s, "end": e})
-        child_spans = [spans_by_doc[d] if scrubbed[d]
-                       else [{"start": 0, "end": int(n_chars[d])}]
-                       for d in range(nd)]
-        scrubbed = scrubbed.tolist()
-    else:
-        child_spans = [None] * nd
-        scrubbed = [False] * nd
-    return pd.DataFrame({
-        "n_chars": n_chars, "n_tokens": tb.counts,
-        "mean_q": mean, "window_q": win, "ratio": ratio,
-        "child_spans": child_spans, "scrubbed": scrubbed,
-    })
-
-
-def make_score_udf(accepted_bc, cfg: FilterConfig):
-    """Scalar pandas UDF text -> struct of per-doc metrics.
-
-    ``accepted_bc`` is a SparkContext broadcast of the accepted-token set —
-    the web analog of the broadcast k-mer set probed per base
-    (src/kmers.cpp:170-172): a broadcast semi-join at sub-row granularity,
-    which is why it's a broadcast *variable*, not a df.join.
-    """
-    _register_self_contained_pickling()
-    cfg_dict = {"window_size": cfg.window_size, "trim": cfg.trim,
-                "split": cfg.split}
-
-    @F.pandas_udf(SCORE_FIELDS)
-    def score_udf(texts: pd.Series) -> pd.DataFrame:
-        return _score_batch(texts, accepted_bc.value, cfg_dict)
-
-    # non-deterministic ON PURPOSE (optimization guide §4.4): a filter
-    # or generator null-guard on a UDF-derived column (e.g. explode of
-    # child_spans) otherwise gets pushed below the projection with its
-    # own COPY of the UDF — the plan then scores every document twice
-    # (observed: two ArrowEvalPython nodes in scrub_children, one below
-    # the repartition at input-partition parallelism). The scorer is a
-    # pure function of text, so the annotation changes nothing
-    # semantically; it only forbids duplication/reordering.
-    return score_udf.asNondeterministic()
-
-
 READS2_SCHEMA = ("url string, parent_url string, "
                  "n_chars long, n_tokens long, mean_q double, "
                  "window_q double, ratio double, "
                  "child_start int, child_end int, is_child boolean, "
                  "lang_pred string, lang_ok boolean")
+READS2_COLS = ["url", "parent_url", "n_chars", "n_tokens", "mean_q",
+               "window_q", "ratio", "child_start", "child_end", "is_child",
+               "lang_pred", "lang_ok"]
+
+
+def reads2_parents(urls, n_chars, n_tokens, mean, win, ratio, lang_pred,
+                   gated, scrubbed) -> pd.DataFrame:
+    """The parent rows of one batch, as both reads2 mappers emit them:
+    each doc under its own url as one [0, n_chars) span, langid-gated
+    docs with zeroed metrics (n_tokens 0, mean_q/window_q 0.0, ratio
+    1.0), and scrubbed parents left out (their children replace them)."""
+    import numpy as np
+    nd = len(urls)
+    return pd.DataFrame({
+        "url": urls, "parent_url": urls,
+        "n_chars": n_chars,
+        "n_tokens": np.where(gated, 0, n_tokens),
+        "mean_q": np.where(gated, 0.0, mean),
+        "window_q": np.where(gated, 0.0, win),
+        "ratio": np.where(gated, 1.0, ratio),
+        "child_start": np.zeros(nd, dtype=np.int32),
+        "child_end": n_chars.astype(np.int32),
+        "is_child": np.zeros(nd, dtype=bool),
+        "lang_pred": lang_pred,
+        "lang_ok": ~gated,
+    }, columns=READS2_COLS)[~scrubbed]
 
 
 def _batch_scrub(tb, q, texts, gated, trim, split, pii):
@@ -190,10 +129,6 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
     langid = cfg.langid_enabled
     lang_expected = cfg.langid_expected
 
-    COLS = ["url", "parent_url", "n_chars", "n_tokens", "mean_q",
-            "window_q", "ratio", "child_start", "child_end", "is_child",
-            "lang_pred", "lang_ok"]
-
     def _flat_quality(tb, accepted):
         """Batch painting: a C-level membership probe for set payloads
         (blob-buffer is_in — no Python token strings); the bigram-LM
@@ -220,7 +155,7 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
             # (findall + utf-32 run detection), one isin paint, prefix-sum
             # means/windows, vectorized bad-run detection; per-doc Python
             # runs only for docs that actually scrub.
-            urls = pdf["url"].tolist()
+            urls = pdf["url"].to_numpy(dtype=object)
             texts = [t if isinstance(t, str) else "" for t in pdf["text"]]
             nd = len(texts)
             accepted = accepted_bc.value
@@ -251,21 +186,8 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
                 scrubbed, child_rows = _batch_scrub(
                     tb, q, texts, gated, trim, split, pii)
 
-            keep_mask = ~scrubbed  # gated + unscrubbed parents
-            out = pd.DataFrame({
-                "url": np.array(urls, dtype=object),
-                "parent_url": np.array(urls, dtype=object),
-                "n_chars": n_chars,
-                "n_tokens": np.where(gated, 0, counts),
-                "mean_q": np.where(gated, 0.0, mean),
-                "window_q": np.where(gated, 0.0, win),
-                "ratio": np.where(gated, 1.0, ratio),
-                "child_start": np.zeros(nd, dtype=np.int32),
-                "child_end": n_chars.astype(np.int32),
-                "is_child": np.zeros(nd, dtype=bool),
-                "lang_pred": pred,
-                "lang_ok": ~gated,
-            })[keep_mask]
+            out = reads2_parents(urls, n_chars, counts, mean, win, ratio,
+                                 pred, gated, scrubbed)
 
             if child_rows:
                 # children re-score through the SAME flat kernels

@@ -278,12 +278,13 @@ DRIVER_CC_PAIRS = 1 << 20
 
 
 def _components_local(a, b):
-    """(node, rep) numpy arrays for the pair arrays ``a``/``b``: min-label
-    propagation as in the Spark loop, with each round's pointer jumping
-    run to every chain's root, over dense node indices (np.unique sorts,
-    so the smallest index is the smallest doc_id). Labels only ever fall
-    to a smaller node of the same component, so the loop ends, and it
-    ends with every component on its minimum."""
+    """(node, rep) numpy arrays for the pair arrays ``a``/``b``: the Spark
+    loop's round rule (each edge sends the smaller endpoint label to both
+    endpoints and to both endpoints' labels), with each round's pointer
+    jumping run to every chain's root, over dense node indices (np.unique
+    sorts, so the smallest index is the smallest doc_id). Labels only
+    ever fall to a smaller node of the same component, so the loop ends,
+    and it ends with every component on its minimum."""
     import numpy as np
     nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
     src, dst = idx[:len(a)], idx[len(a):]
@@ -291,8 +292,8 @@ def _components_local(a, b):
     while True:
         m = np.minimum(lab[src], lab[dst])
         new = lab.copy()
-        np.minimum.at(new, src, m)
-        np.minimum.at(new, dst, m)
+        for to in (src, dst, lab[src], lab[dst]):
+            np.minimum.at(new, to, m)
         hop = new[new]
         while (hop != new).any():  # pointer jumping to each chain's root
             new, hop = hop, hop[hop]
@@ -313,14 +314,18 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     The perfbench workloads all take this path; none builds a graph
     large enough for the loop below, so its cost is unmeasured there.
 
-    Above DRIVER_CC_PAIRS, each round is one equi-join of the (pairs-only)
-    edge list with the label table, a min-aggregate, and one pointer hop
-    (rep := rep's rep); only docs that appear in a pair participate.
-    Along a chain whose ids are in random order the minimum still moves
-    about one edge per round, so max_iter bounds the rounds and a loop
-    that has not converged raises. localCheckpoint truncates the lineage
-    each round (the iterative-Spark requirement — without it the
-    logical plan grows without bound)."""
+    Above DRIVER_CC_PAIRS, each round joins the (pairs-only, both
+    directions) edge list with the label table on src and on dst; every
+    edge sends m = min(rep[src], rep[dst]) to dst and to the node
+    rep[src] (root hooking: a label moves to the whole tree hanging off
+    it, not one edge further), then a min-aggregate and one pointer hop
+    (rep := rep's rep). Only docs that appear in a pair participate.
+    Without the hook a label moves about one edge per round along a
+    chain whose ids are in random order (a 90-node chain needed > 20
+    rounds); with it such chains settle in a few rounds that grow with
+    log n. A loop still moving after max_iter rounds raises.
+    localCheckpoint truncates the lineage each round (the iterative-Spark
+    requirement — without it the logical plan grows without bound)."""
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
     probe = pairs.limit(DRIVER_CC_PAIRS + 1).toArrow()
     if probe.num_rows <= DRIVER_CC_PAIRS:
@@ -342,8 +347,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
               .withColumn("rep", F.col("node")).localCheckpoint())
     changed = 0
     for _ in range(max_iter):
-        msgs = (edges.join(labels, edges.src == labels.node)
-                .select(F.col("dst").alias("node"), "rep"))
+        msgs = (edges
+                .join(labels.select(F.col("node").alias("src"),
+                                    F.col("rep").alias("rs")), "src")
+                .join(labels.select(F.col("node").alias("dst"),
+                                    F.col("rep").alias("rd")), "dst")
+                .select(F.explode(F.array("dst", "rs")).alias("node"),
+                        F.least("rs", "rd").alias("rep")))
         new_labels = (msgs.union(labels.select("node", "rep"))
                       .groupBy("node").agg(F.min("rep").alias("rep")))
         # pointer jump: follow one extra hop through the rep chain
@@ -364,8 +374,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             break
     if changed > 0:
         # exiting via the iteration cap with labels still moving means a
-        # WRONG dedup grouping, not a crash — make it loud (pointer
-        # jumping needs a pathological component diameter to get here)
+        # WRONG dedup grouping, not a crash — make it loud (with root
+        # hooking the rounds grow with log n, so only a graph far beyond
+        # any near-dup candidate set gets here)
         raise RuntimeError(
             f"Error: connected_components did not converge within "
             f"{max_iter} iterations ({changed} labels still changing); "

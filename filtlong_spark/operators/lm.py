@@ -363,9 +363,7 @@ def make_reassemble_mapper(cfg: FilterConfig, eps_good: bool):
     trim, split = cfg.trim, cfg.split
     scrub = trim or split is not None or cfg.pii_scrub
 
-    COLS = ["url", "parent_url", "n_chars", "n_tokens", "mean_q",
-            "window_q", "ratio", "child_start", "child_end", "is_child",
-            "lang_pred", "lang_ok"]
+    parents, COLS = scoring.reads2_parents, scoring.READS2_COLS
 
     def child_quality(starts, ends, good, gfirst, gback, s, e):
         """Per-token 0/1 for child span [s, e): full inner tokens reuse
@@ -496,20 +494,8 @@ def make_reassemble_mapper(cfg: FilterConfig, eps_good: bool):
                     doc_of_t, starts_t, ends_t, q, n_chars, gated,
                     trim, split, pii_by_doc)
 
-            keep = ~scrubbed  # gated + unscrubbed parents
-            out = pd.DataFrame({
-                "url": urls, "parent_url": urls,
-                "n_chars": n_chars,
-                "n_tokens": np.where(gated, 0, tok_counts),
-                "mean_q": np.where(gated, 0.0, mean),
-                "window_q": np.where(gated, 0.0, win),
-                "ratio": np.where(gated, 1.0, ratio),
-                "child_start": np.zeros(nd, dtype=np.int64),
-                "child_end": n_chars,
-                "is_child": np.zeros(nd, dtype=bool),
-                "lang_pred": lang_pred,
-                "lang_ok": ~gated,
-            }, columns=COLS)[keep]
+            out = parents(urls, n_chars, tok_counts, mean, win, ratio,
+                          lang_pred, gated, scrubbed)
 
             if child_rows:
                 # children re-score from the parent's token flags alone

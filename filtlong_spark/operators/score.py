@@ -1,15 +1,14 @@
 """Per-document scoring stage (SURVEY.md §2C: C1-C6 + D1).
 
-Two implementations:
+``score_and_scrub`` is the one intrinsic scorer: the pipeline, the
+streaming scorer and the oracle's scoring queries all run it. One fused
+mapInPandas pass (functions/scoring.make_reads2_mapper) paints tokens,
+computes mean/window quality and, when scrubbing, emits re-scored
+children; the length score and hard rules stay in whole-stage codegen.
 
-- ``score_pandas`` — the full pipeline path: one Arrow-batched pandas UDF
-  computes per-token painting, mean/window quality, and (when scrubbing)
-  child spans; everything else (length score, hard rules) stays in
-  whole-stage codegen.
-- ``quality_catalyst`` — a pure-Catalyst mean-quality path (explode tokens
-  -> broadcast join accepted set -> re-aggregate). No Python at all; used
-  by the driver-facing oracle queries and as the spill path when the
-  accepted set is too big to broadcast as a variable.
+``quality_catalyst`` is the Catalyst rendering of mean quality (explode
+tokens -> join the accepted set -> re-aggregate, no Python) behind the
+``refset_quality`` oracle query; no pipeline stage reaches it.
 """
 
 from __future__ import annotations
@@ -19,15 +18,6 @@ from pyspark.sql import functions as F
 
 from ..config import FilterConfig
 from ..functions import scoring
-
-
-def score_pandas(pages: DataFrame, cfg: FilterConfig, accepted_bc) -> DataFrame:
-    """pages(url, text, ...) -> + n_chars, n_tokens, mean_q, window_q,
-    ratio, child_spans, scrubbed, length_s, hard_passed."""
-    udf = scoring.make_score_udf(accepted_bc, cfg)
-    df = pages.withColumn("_m", udf(F.col("text"))).select("*", "_m.*").drop("_m")
-    df = df.withColumn("length_s", scoring.length_score_col(F.col("n_chars")))
-    return df.withColumn("hard_passed", scoring.hard_pass_col(cfg))
 
 
 def score_and_scrub(pages: DataFrame, cfg: FilterConfig, accepted_bc) -> DataFrame:
@@ -52,10 +42,8 @@ def quality_catalyst(pages: DataFrame, accepted: DataFrame,
     toks = pages.select(
         F.col(doc_key),
         F.explode(F.expr(scoring_tokenize_expr())).alias("token"))
-    # no broadcast hint on purpose: this IS the spill path for accepted
-    # sets too big to broadcast — AQE broadcasts when the set is small and
-    # falls back to a shuffle join when it isn't (forcing the hint would
-    # OOM exactly in the case this path exists for)
+    # no broadcast hint: AQE broadcasts the set when it is small and
+    # falls back to a shuffle join when it isn't
     acc = (accepted.select("token").distinct()
            .withColumn("_hit", F.lit(1)))
     joined = toks.join(acc, "token", "left")

@@ -77,9 +77,6 @@ class PipelineResult:
         ingest."""
         return self.build_quarantine()
 
-    def unpersist(self):  # compat no-op (scratch is parquet-backed)
-        return self
-
 
 # cfg fields baked into the committed reads2 snapshot (anything that moves
 # per-doc metrics, hard_passed, or the child set). Budget/weight fields are

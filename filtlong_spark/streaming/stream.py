@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FilterConfig
-from ..functions import scoring
 from ..operators import refset as refset_op
+from ..operators import score as score_op
 
 
 def score_stream(spark: SparkSession, pages_stream: DataFrame,
@@ -30,12 +30,7 @@ def score_stream(spark: SparkSession, pages_stream: DataFrame,
     every operator here is stateless per row)."""
     cfg.validate()
     accepted_bc = refset_op.build_broadcast(spark, cfg, ref_pages)
-    mapper, schema = scoring.make_reads2_mapper(accepted_bc, cfg)
-    scored = pages_stream.select("url", "text").mapInPandas(
-        mapper, schema=schema)
-    scored = scored.withColumn(
-        "length_s", scoring.length_score_col(F.col("n_chars")))
-    return scored.withColumn("hard_passed", scoring.hard_pass_col(cfg))
+    return score_op.score_and_scrub(pages_stream, cfg, accepted_bc)
 
 
 def pages_stream_clf_gate(spark: SparkSession, source_dir: str,

@@ -138,16 +138,16 @@ def test_connected_components_evaluates_pairs_once(spark, monkeypatch):
 
 
 def _random_pair_graph(rng):
-    """Pairs over random 60-bit ids: chains longer than 2^5 (in random id
-    order), stars, cycles, isolated pairs, a self-pair, and every tenth
-    pair repeated, half of those reversed."""
+    """Pairs over random 60-bit ids: chains longer than 2^5, one of 90
+    nodes (in random id order), stars, cycles, isolated pairs, a
+    self-pair, and every tenth pair repeated, half of those reversed."""
     pairs, n = [], 0
 
     def ids(k):
         nonlocal n
         n += k
         return list(range(n - k, n))
-    for length in (33, 40):
+    for length in (33, 40, 90):
         c = ids(length)
         rng.shuffle(c)
         pairs += list(zip(c, c[1:]))
@@ -185,9 +185,9 @@ def _components_reference(pairs):
 
 def test_connected_components_paths_agree(spark, monkeypatch):
     """Seeded random pair graphs: the driver path and the Spark loop give
-    identical (node, rep) rows, equal to a union-find reference. The
-    loop's min-label moves about one edge per round along a chain whose
-    ids are in random order, so the cap is raised above its default."""
+    identical (node, rep) rows, equal to a union-find reference, within
+    the default round cap (a 90-node chain in random id order needs
+    more than 20 rounds without root hooking)."""
     import random
     for seed in (0, 1):
         pairs = _random_pair_graph(random.Random(seed))
@@ -195,8 +195,7 @@ def test_connected_components_paths_agree(spark, monkeypatch):
         got = {}
         for path in ("driver", "spark"):
             comps = _on_path(monkeypatch, path,
-                             lambda: dedup.connected_components(
-                                 df, max_iter=64))
+                             lambda: dedup.connected_components(df))
             plan = comps._jdf.queryExecution().executedPlan().toString()
             assert ("LocalTableScan" in plan) == (path == "driver"), plan
             got[path] = sorted((r["node"], r["rep"])

@@ -2,7 +2,11 @@
 
 import datetime as dt
 
+from filtlong_spark import fixtures as fx
+from filtlong_spark.config import FilterConfig
 from filtlong_spark.operators import events as ev_op
+from filtlong_spark.operators import refset as refset_op
+from filtlong_spark.operators import score as score_op
 
 
 def _ev(spark, rows):
@@ -205,3 +209,34 @@ def test_streaming_clf_gate_matches_batch(spark, tmp_path):
     kept = {r[0] for r in streamed if r[-1]}
     assert "https://a.test/junk" not in kept
     assert "https://a.test/good" in kept
+
+
+def _cfg(**kw):
+    kw.setdefault("mode", "intrinsic")
+    kw.setdefault("vocab", fx.VOCAB)
+    return FilterConfig(**kw)
+
+
+def test_stream_matches_batch(spark, tmp_path):
+    """availableNow streaming scoring == batch scoring on the same input."""
+    from filtlong_spark.streaming.stream import run_available_now
+
+    src = str(tmp_path / "src")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    rows = fx.volume(sf=0.0001)
+    fx.to_spark_df(spark, rows).write.parquet(src)
+
+    cfg = _cfg(min_length=100, min_mean_q=50.0, split=40)
+    run_available_now(spark, src, cfg, sink, ckpt)
+    streamed = {(r["url"], r["n_chars"], r["mean_q"], r["window_q"],
+                 r["hard_passed"])
+                for r in spark.read.parquet(sink).collect()}
+
+    bc = refset_op.build_broadcast(spark, cfg, None)
+    batch = {(r["url"], r["n_chars"], r["mean_q"], r["window_q"],
+              r["hard_passed"])
+             for r in score_op.score_and_scrub(
+                 spark.read.parquet(src), cfg, bc).collect()}
+    assert streamed == batch
+    assert len(streamed) > 0

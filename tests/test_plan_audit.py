@@ -21,6 +21,28 @@ def test_no_cross_products(spark, name):
         assert marker not in plan, f"{name}: {marker} in plan\n{plan}"
 
 
+@pytest.mark.parametrize("name", ("window_quality", "normalize_scores",
+                                  "final_score", "keep_budget",
+                                  "scrub_children"))
+def test_scorer_queries_match_oracle_scoring_once(spark, name):
+    """The queries on the intrinsic scorer equal their DuckDB oracle, and
+    each plan runs the scorer once per doc: one mapInPandas pass and no
+    scalar Arrow UDF (a UDF column below a filter or generator can be
+    duplicated into a second evaluation of the scorer)."""
+    import duckdb
+
+    from scripts.check_correctness import frame_fingerprint
+    df = entry_mod.queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM "
+            f"'{SF_DIR}/documents.parquet'")
+    oracle = con.sql(entry_mod.oracle_sql()[name]).df()
+    assert frame_fingerprint(df.toPandas()) == frame_fingerprint(oracle)
+
+
 def test_pipeline_label_join_not_cartesian(spark):
     """The output label join (metrics-only side vs source text) must be
     an equi-join on the parent url — never a nested loop."""
