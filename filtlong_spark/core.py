@@ -28,7 +28,9 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-TOKEN_RE = re.compile(r"\S+")
+# Java regex \S: re.ASCII limits \s to [ \t\n\x0B\f\r], the set Catalyst's
+# regexp_extract_all(text, '\\S+') splits on.
+TOKEN_RE = re.compile(r"\S+", re.ASCII)
 
 # Half-score length: a document of this many chars scores 50.
 # Mirrors the hard-coded 5 kbp in Read::get_length_score (src/read.cpp:240).
@@ -36,11 +38,16 @@ HALF_LENGTH_SCORE = 5000.0
 
 
 def tokenize(text: str) -> list[tuple[str, int, int]]:
-    """Tokens as (token, start_char, end_char) — maximal non-space runs.
+    """Tokens as (token, start_char, end_char) — maximal runs of anything
+    but Java whitespace. The scalar reference for batch_tokenize, so the
+    oracle and the Arrow kernels share one convention: NBSP, U+3000,
+    U+001C-U+001F and U+0085 are token characters, exactly as in
+    Catalyst's ``regexp_extract_all(text, '\\S+')``. The DuckDB mirrors
+    (RE2) split the same way except on vertical tab, which RE2's \\s
+    leaves inside a token.
 
     The char offsets are what make scrubbed text byte-identical between
-    the Spark pipeline, the oracle, and the DuckDB SQL
-    (``regexp_extract_all(text, '\\S+')``).
+    the Spark pipeline, the oracle, and the DuckDB SQL.
     """
     return [(m.group(0), m.start(), m.end()) for m in TOKEN_RE.finditer(text)]
 
@@ -173,54 +180,37 @@ def final_score(length_s: float, mean_q_score: float, ratio: float,
 # ---------------------------------------------------------------------------
 
 
-# every codepoint matched by re \s (Python 3.11 str patterns) — verified
-# exhaustively against re.match(r"\s") over all codepoints in tests.
-WS_CODES = np.array([
-    0x0009, 0x000A, 0x000B, 0x000C, 0x000D, 0x001C, 0x001D, 0x001E, 0x001F,
-    0x0020, 0x0085, 0x00A0, 0x1680, 0x2000, 0x2001, 0x2002, 0x2003, 0x2004,
-    0x2005, 0x2006, 0x2007, 0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F,
-    0x205F, 0x3000], dtype=np.uint32)
-_WS_MAX = 0x3000
-# one extra False slot: codes above the table clip onto it (never ws)
-_WS_LUT = np.zeros(_WS_MAX + 2, dtype=bool)
-_WS_LUT[WS_CODES] = True
-_WS_LUT_ASCII = np.zeros(256, dtype=bool)
-_WS_LUT_ASCII[WS_CODES[WS_CODES < 256]] = True
+# Java regex whitespace [ \t\n\x0B\f\r]: what Catalyst's
+# regexp_extract_all(text, '\\S+') splits on, and TOKEN_RE's re.ASCII \s.
+# All six are ASCII bytes and no UTF-8 multi-byte sequence holds an
+# ASCII byte, so this one byte table finds every token of any text.
+_WS_BYTE = np.zeros(256, dtype=bool)
+_WS_BYTE[[0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x20]] = True
 
 
 class TokenBatch:
-    """Flat tokenization of a whole batch: tokens (flat list, doc order),
-    doc_of (doc index per token), starts/ends (DOC-LOCAL char offsets),
-    counts (tokens per doc), doc_starts (each doc's char offset in the
-    blob, for mapping blob-level regex hits back to docs)."""
-    __slots__ = ("tokens", "doc_of", "starts", "ends", "counts",
-                 "doc_starts", "blob")
+    """Flat tokenization of a whole batch: doc_of (doc index per token),
+    starts/ends (DOC-LOCAL codepoint offsets), counts (tokens per doc),
+    and each token's byte range [bstarts, bends) in the batch's UTF-8
+    blob ``u8`` (read by batch_token_array)."""
+    __slots__ = ("doc_of", "starts", "ends", "counts", "u8", "bstarts",
+                 "bends")
 
-    def __init__(self, tokens, doc_of, starts, ends, counts, doc_starts,
-                 blob):
-        self.tokens, self.doc_of = tokens, doc_of
-        self.starts, self.ends, self.counts = starts, ends, counts
-        self.doc_starts, self.blob = doc_starts, blob
-
-    def doc_tokens(self, d: int) -> list[str]:
-        o = int(self.counts[:d].sum())  # rare path (LM fallback only)
-        return self.tokens[o:o + int(self.counts[d])]
+    def __init__(self, doc_of, starts, ends, counts, u8, bstarts, bends):
+        self.doc_of, self.starts, self.ends = doc_of, starts, ends
+        self.counts, self.u8 = counts, u8
+        self.bstarts, self.bends = bstarts, bends
 
 
-def batch_tokenize(texts: list[str], need_tokens: bool = True) -> TokenBatch:
+def batch_tokenize(texts: list[str]) -> TokenBatch:
     """Tokenize a batch with ZERO per-token Python: join the docs into one
-    blob (single-space separators — whitespace, so tokens never straddle
-    docs), findall the tokens in one C call, and derive char offsets from
-    a utf-32 view of the blob (one codepoint per uint32 = Python string
-    indexing) with vectorized \\S-run boundary detection. Bit-identical to
-    tokenize() per doc (property-tested incl. exotic unicode whitespace).
-
-    ``need_tokens=False`` (ASCII batches only; ignored otherwise) skips
-    the findall so NO per-token Python strings are ever built — tokens
-    is None and consumers read the blob through the offsets
-    (batch_token_array / pyarrow is_in membership). findall was ~2/3 of
-    the tokenize cost and exists only to feed Python-string consumers.
-    """
+    blob (single-space separators, so tokens never straddle docs), encode
+    it to UTF-8 once, and find the non-whitespace runs with one byte
+    table lookup. Codepoint offsets (what _batch_scrub, child spans and
+    F.substring need) are a prefix count of the non-continuation bytes;
+    on ASCII blobs they equal the byte offsets. ``surrogatepass`` keeps a
+    lone surrogate one non-whitespace codepoint. Per doc, equal to
+    tokenize() (property-tested) and to Catalyst's '\\S+' tokens."""
     nd = len(texts)
     empty = np.zeros(0, dtype=np.int64)
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=nd)
@@ -228,179 +218,52 @@ def batch_tokenize(texts: list[str], need_tokens: bool = True) -> TokenBatch:
     if nd > 1:
         np.cumsum(lens[:-1] + 1, out=doc_starts[1:])
     blob = " ".join(texts)
-    if blob.isascii():  # O(1) flag check; 4x less memory traffic
-        tokens = TOKEN_RE.findall(blob) if need_tokens else None
-        if need_tokens and not tokens:
-            return TokenBatch([], empty, empty, empty,
-                              np.zeros(nd, dtype=np.int64), doc_starts,
-                              blob)
-        codes = np.frombuffer(blob.encode("ascii"), dtype=np.uint8)
-        nz = ~_WS_LUT_ASCII[codes]
-        if not need_tokens and not nz.any():
-            return TokenBatch([], empty, empty, empty,
-                              np.zeros(nd, dtype=np.int64), doc_starts,
-                              blob)
-    else:
-        tokens = TOKEN_RE.findall(blob)
-        if not tokens:
-            return TokenBatch([], empty, empty, empty,
-                              np.zeros(nd, dtype=np.int64), doc_starts,
-                              blob)
-        try:
-            raw = blob.encode("utf-32-le")
-        except UnicodeEncodeError:
-            # lone surrogates (possible from surrogateescape upstream
-            # decoders) can't round-trip utf-32 — take the slow per-doc
-            # path; \S matches surrogates, so finditer handles them
-            return _batch_tokenize_slow(texts, doc_starts, blob)
-        codes = np.frombuffer(raw, dtype=np.uint32)
-        nz = ~_WS_LUT[np.minimum(codes, _WS_MAX + 1)]
+    u8 = np.frombuffer(blob.encode("utf-8", "surrogatepass"), dtype=np.uint8)
+    nz = ~_WS_BYTE[u8]
+    if not nz.any():
+        return TokenBatch(empty, empty, empty, np.zeros(nd, dtype=np.int64),
+                          u8, empty, empty)
     d8 = np.diff(nz.view(np.int8))
-    tstarts = np.nonzero(d8 == 1)[0] + 1
-    tends = np.nonzero(d8 == -1)[0] + 1
+    bstarts = np.nonzero(d8 == 1)[0] + 1
+    bends = np.nonzero(d8 == -1)[0] + 1
     if nz[0]:
-        tstarts = np.concatenate(([0], tstarts))
+        bstarts = np.concatenate(([0], bstarts))
     if nz[-1]:
-        tends = np.concatenate((tends, [codes.size]))
+        bends = np.concatenate((bends, [u8.size]))
+    if blob.isascii():  # O(1) flag check: one byte per codepoint
+        tstarts, tends = bstarts, bends
+    else:
+        cp = np.zeros(u8.size + 1, dtype=np.int64)
+        np.cumsum((u8 & 0xC0) != 0x80, out=cp[1:])
+        tstarts, tends = cp[bstarts], cp[bends]
     doc_of = np.searchsorted(doc_starts, tstarts, side="right") - 1
-    starts = tstarts - doc_starts[doc_of]
-    ends = tends - doc_starts[doc_of]
     counts = np.bincount(doc_of, minlength=nd).astype(np.int64)
-    return TokenBatch(tokens, doc_of, starts, ends, counts, doc_starts,
-                      blob)
-
-
-def _batch_tokenize_slow(texts, doc_starts, blob) -> "TokenBatch":
-    """Per-doc finditer fallback for strings the vectorized offset pass
-    can't encode (lone surrogates). Same outputs as batch_tokenize."""
-    tokens, doc_of_l, starts_l, ends_l = [], [], [], []
-    counts = np.zeros(len(texts), dtype=np.int64)
-    for d, t in enumerate(texts):
-        c = 0
-        for m in TOKEN_RE.finditer(t):
-            tokens.append(m.group(0))
-            doc_of_l.append(d)
-            starts_l.append(m.start())
-            ends_l.append(m.end())
-            c += 1
-        counts[d] = c
-    return TokenBatch(tokens, np.array(doc_of_l, dtype=np.int64),
-                      np.array(starts_l, dtype=np.int64),
-                      np.array(ends_l, dtype=np.int64), counts,
-                      doc_starts, blob)
+    return TokenBatch(doc_of, tstarts - doc_starts[doc_of],
+                      tends - doc_starts[doc_of], counts, u8, bstarts, bends)
 
 
 def batch_token_array(tb: "TokenBatch"):
     """The batch's flat token list as ONE pyarrow StringArray, built
-    directly from the blob's byte buffer for ASCII batches (a vectorized
-    gather of each token's byte range + an offsets cumsum — zero Python
-    string objects; pa.array(list_of_str) measured ~1.6 us/token, the
-    single hottest step of any window kernel). Non-ASCII batches fall
-    back to pa.array over the Python tokens (codepoint offsets are not
-    byte offsets there). Element i equals tb.tokens[i] exactly."""
+    directly from the blob's UTF-8 buffer (a vectorized gather of each
+    token's byte range + an offsets cumsum — zero Python string objects;
+    pa.array(list_of_str) measured ~1.6 us/token, the single hottest
+    step of any window kernel). Element i is the i-th token in doc
+    order, equal to the i-th regexp_extract_all(text, '\\S+') row. A lone
+    surrogate (only a Python caller can pass one; Spark's Arrow batches
+    cannot carry it) stays as its surrogatepass bytes, which are not
+    valid UTF-8: membership probes work, to_pylist raises."""
     import pyarrow as pa
-    n = tb.starts.size
+    n = tb.bstarts.size
     if n == 0:
         return pa.array([], type=pa.string())
-    if not tb.blob.isascii():
-        # non-ASCII batches always carry the Python token list
-        # (batch_tokenize ignores need_tokens=False there)
-        return pa.array(tb.tokens, type=pa.string())
-    blob_b = np.frombuffer(tb.blob.encode("ascii"), dtype=np.uint8)
-    gstarts = tb.doc_starts[tb.doc_of] + tb.starts
-    lens = tb.ends - tb.starts
+    lens = tb.bends - tb.bstarts
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
     total = int(offsets[-1])
-    # concat of ranges [gstarts[i], gstarts[i]+lens[i]) as one gather
-    idx = np.repeat(gstarts - offsets[:-1], lens) + np.arange(total)
-    values = blob_b[idx]
+    # concat of ranges [bstarts[i], bends[i]) as one gather
+    idx = np.repeat(tb.bstarts - offsets[:-1], lens) + np.arange(total)
     return pa.StringArray.from_buffers(
-        n, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(values))
-
-
-# JAVA regex whitespace — [ \t\n\x0B\f\r], exactly Python's re.ASCII \s
-# and exactly what Catalyst's regexp_extract_all(text, '\\S+') splits
-# on. DISTINCT from Python's default-Unicode \s (WS_CODES above): NBSP,
-# ideographic space, FS/GS/RS/US are TOKEN chars here.
-_WS_LUT_JAVA = np.zeros(256, dtype=bool)
-_WS_LUT_JAVA[[0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x20]] = True
-TOKEN_RE_ASCII = re.compile(r"\S+", re.ASCII)
-
-
-def batch_tokenize_java(texts: list[str]):
-    """Flat batch tokenization under JAVA regex semantics — the exact
-    splitter of every Catalyst '\\S+' tokenizer this repo mirrors (so an
-    Arrow rendering of an aggregate-path operator stays bit-identical
-    even on NBSP/ideographic-space text, unlike batch_tokenize's
-    Python-Unicode \\S). Returns (token_arr: pa.StringArray, doc_of,
-    counts, char_lens) with token_arr element i equal to the i-th
-    regexp_extract_all row, char_lens in codepoints (== F.length)."""
-    import pyarrow as pa
-    nd = len(texts)
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=nd)
-    doc_starts = np.zeros(nd, dtype=np.int64)
-    if nd > 1:
-        np.cumsum(lens[:-1] + 1, out=doc_starts[1:])
-    blob = " ".join(texts)
-    z64 = np.zeros(0, dtype=np.int64)
-    empty = (pa.array([], type=pa.string()), z64,
-             np.zeros(nd, dtype=np.int64), z64)
-    if not blob:
-        return empty
-    if blob.isascii():
-        codes = np.frombuffer(blob.encode("ascii"), dtype=np.uint8)
-        u8, byte_off = codes, None
-    else:
-        try:
-            codes = np.frombuffer(blob.encode("utf-32-le"),
-                                  dtype=np.uint32)
-        except UnicodeEncodeError:
-            # lone surrogates: per-doc finditer fallback (re.ASCII \S
-            # == Java \S on every input incl. surrogates)
-            toks, doc_of_l, lens_l = [], [], []
-            for d, t in enumerate(texts):
-                for m in TOKEN_RE_ASCII.finditer(t):
-                    toks.append(m.group(0))
-                    doc_of_l.append(d)
-                    lens_l.append(m.end() - m.start())
-            doc_of = np.array(doc_of_l, dtype=np.int64)
-            return (pa.array(toks, type=pa.string()), doc_of,
-                    np.bincount(doc_of, minlength=nd).astype(np.int64),
-                    np.array(lens_l, dtype=np.int64))
-        blens = np.where(codes < 0x80, 1,
-                         np.where(codes < 0x800, 2,
-                                  np.where(codes < 0x10000, 3, 4))) \
-            .astype(np.int64)
-        byte_off = np.zeros(codes.size + 1, dtype=np.int64)
-        np.cumsum(blens, out=byte_off[1:])
-        u8 = np.frombuffer(blob.encode("utf-8"), dtype=np.uint8)
-    nz = ~_WS_LUT_JAVA[np.minimum(codes, 0xFF)]
-    if not nz.any():
-        return empty
-    d8 = np.diff(nz.view(np.int8))
-    ts_ = np.nonzero(d8 == 1)[0] + 1
-    te_ = np.nonzero(d8 == -1)[0] + 1
-    if nz[0]:
-        ts_ = np.concatenate(([0], ts_))
-    if nz[-1]:
-        te_ = np.concatenate((te_, [codes.size]))
-    doc_of = np.searchsorted(doc_starts, ts_, side="right") - 1
-    counts = np.bincount(doc_of, minlength=nd).astype(np.int64)
-    char_lens = te_ - ts_
-    if byte_off is None:
-        bstart, bend = ts_, te_
-    else:
-        bstart, bend = byte_off[ts_], byte_off[te_]
-    out_lens = bend - bstart
-    n = ts_.size
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(out_lens, out=offsets[1:])
-    idx = np.repeat(bstart - offsets[:-1], out_lens) \
-        + np.arange(int(offsets[-1]))
-    arr = pa.StringArray.from_buffers(
-        n, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(u8[idx]))
-    return arr, doc_of, counts, char_lens
+        n, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(tb.u8[idx]))
 
 
 def flat_ngram_windows(tb: "TokenBatch", n: int):
@@ -428,16 +291,6 @@ def flat_ngram_windows(tb: "TokenBatch", n: int):
     return d, pos, wins.take(pa.array(idx))
 
 
-def flat_token_quality(tokens_flat: list[str], accepted) -> np.ndarray:
-    """Vectorized 0/1 painting of a flat token list: pandas isin (a C hash
-    probe) instead of a per-token Python loop. Identical to token_quality
-    applied per doc (set membership on identical strings)."""
-    if not tokens_flat:
-        return np.zeros(0, dtype=np.float64)
-    import pandas as pd
-    return pd.Index(tokens_flat).isin(accepted).astype(np.float64)
-
-
 # accepted-set -> pyarrow value_set, cached per worker. Keyed by id()
 # WITH a strong reference to the set stored alongside, so the id can
 # never be recycled; one entry per broadcast accepted set per worker.
@@ -454,15 +307,10 @@ def _accepted_value_set(accepted):
 
 
 def flat_token_quality_batch(tb: "TokenBatch", accepted) -> np.ndarray:
-    """The same 0/1 painting as flat_token_quality, but reading the
-    tokens straight out of the batch blob's byte buffer (pyarrow is_in
-    over batch_token_array) — pairs with batch_tokenize(
-    need_tokens=False) so NO per-token Python strings are ever built.
-    Falls back to the pandas probe when the Python token list exists
-    anyway (non-ASCII batches). Identical membership on identical
-    strings."""
-    if tb.tokens is not None:
-        return flat_token_quality(tb.tokens, accepted)
+    """Vectorized 0/1 painting of a whole batch: pyarrow is_in over
+    batch_token_array, so NO per-token Python strings are ever built.
+    Identical to token_quality applied per doc (set membership on
+    identical strings)."""
     import pyarrow.compute as pc
     if tb.starts.size == 0:
         return np.zeros(0, dtype=np.float64)
@@ -567,10 +415,10 @@ def _trigram_tables():
 def _text_trigram_keys(text: str) -> np.ndarray:
     """All overlapping char-trigram keys of lower(text), vectorized:
     utf-32 view -> three shifted slices packed into int64. surrogatepass:
-    lone surrogates (reachable via surrogateescape upstream decoders —
-    the same hazard batch_tokenize guards) encode as their codepoint,
-    occupy a trigram position like any other char, and match no profile
-    key — instead of UnicodeEncodeError killing the whole stage."""
+    lone surrogates (reachable via surrogateescape upstream decoders;
+    batch_tokenize also encodes with surrogatepass) encode as their
+    codepoint, occupy a trigram position like any other char, and match
+    no profile key — instead of UnicodeEncodeError killing the stage."""
     u = np.frombuffer(text.lower().encode("utf-32-le", "surrogatepass"),
                       dtype=np.uint32).astype(np.int64)
     if u.size < 3:

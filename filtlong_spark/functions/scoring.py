@@ -132,17 +132,19 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
     def _flat_quality(tb, accepted):
         """Batch painting: a C-level membership probe for set payloads
         (blob-buffer is_in — no Python token strings); the bigram-LM
-        painter stays per-doc (order-dependent chain)."""
+        painter stays per-doc (order-dependent chain) and is the one
+        consumer of Python token strings."""
         import numpy as np
         if isinstance(accepted, tuple) and accepted and accepted[0] == "lm":
             qfn = core.quality_for(accepted)
-            if not tb.tokens:
+            if not tb.starts.size:
                 return np.zeros(0, dtype=np.float64)
+            toks = core.batch_token_array(tb).to_pylist()
             parts, o = [], 0
             for c in tb.counts:
-                parts.append(qfn(tb.tokens[o:o + int(c)]))
+                parts.append(qfn(toks[o:o + int(c)]))
                 o += int(c)
-            return np.concatenate(parts) if parts else np.zeros(0)
+            return np.concatenate(parts)
         return core.flat_token_quality_batch(tb, accepted)
 
     def mapper(batches):
@@ -152,16 +154,14 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
             # only url+text cross the Arrow boundary inward, metrics-only
             # outward (no timestamps — pandas timestamp conversion was a
             # measured hotspot). ZERO per-token Python: one blob tokenize
-            # (findall + utf-32 run detection), one isin paint, prefix-sum
-            # means/windows, vectorized bad-run detection; per-doc Python
-            # runs only for docs that actually scrub.
+            # (a byte-table run scan over the UTF-8 blob), one is_in
+            # paint, prefix-sum means/windows, vectorized bad-run
+            # detection; per-doc Python runs only for docs that scrub.
             urls = pdf["url"].to_numpy(dtype=object)
             texts = [t if isinstance(t, str) else "" for t in pdf["text"]]
             nd = len(texts)
             accepted = accepted_bc.value
-            is_lm = (isinstance(accepted, tuple) and accepted
-                     and accepted[0] == "lm")
-            tb = core.batch_tokenize(texts, need_tokens=bool(is_lm))
+            tb = core.batch_tokenize(texts)
             counts = tb.counts
 
             if langid:
@@ -192,7 +192,7 @@ def make_reads2_mapper(accepted_bc, cfg: FilterConfig):
             if child_rows:
                 # children re-score through the SAME flat kernels
                 ctexts = [texts[d][s:e] for d, s, e in child_rows]
-                ctb = core.batch_tokenize(ctexts, need_tokens=bool(is_lm))
+                ctb = core.batch_tokenize(ctexts)
                 ccounts = ctb.counts
                 cq = _flat_quality(ctb, accepted)
                 cmean, cwin = core.flat_mean_window(cq, ccounts, window_size)

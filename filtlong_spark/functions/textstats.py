@@ -42,7 +42,7 @@ def token_stats_batch(texts: list[str], vocab_vs, stop_vs):
     n_distinct) int64 arrays for EVERY doc of one Arrow batch (zeros for
     token-less docs) — the body shared by token_stats and the
     classifier's feature pass. Flat blob tokenize without Python token
-    strings (core.batch_tokenize_java: JAVA \\s semantics, so
+    strings (core.batch_tokenize, the one Java-\\s kernel, so
     NBSP/ideographic-space text tokenizes IDENTICALLY to the Catalyst
     '\\S+' tokenizer), memberships probed on the per-batch DICTIONARY
     (dictionary_encode: tens of distinct web tokens per thousand
@@ -52,11 +52,12 @@ def token_stats_batch(texts: list[str], vocab_vs, stop_vs):
     import numpy as np
     import pyarrow.compute as pc
     nd = len(texts)
-    arr, doc_of, counts, char_lens = core.batch_tokenize_java(texts)
-    if not len(arr):
+    tb = core.batch_tokenize(texts)
+    counts, doc_of = tb.counts, tb.doc_of
+    if not tb.starts.size:
         z = np.zeros(nd, dtype=np.int64)
         return counts, z, z, z, z
-    de = arr.dictionary_encode()
+    de = core.batch_token_array(tb).dictionary_encode()
     codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     vmask = pc.is_in(de.dictionary, value_set=vocab_vs).to_numpy(
         zero_copy_only=False)
@@ -64,7 +65,7 @@ def token_stats_batch(texts: list[str], vocab_vs, stop_vs):
         zero_copy_only=False)
     good = np.bincount(doc_of[vmask[codes]], minlength=nd)
     stop = np.bincount(doc_of[smask[codes]], minlength=nd)
-    c = np.concatenate(([0], np.cumsum(char_lens)))
+    c = np.concatenate(([0], np.cumsum(tb.ends - tb.starts)))
     off = np.zeros(nd + 1, dtype=np.int64)
     np.cumsum(counts, out=off[1:])
     sum_len = c[off[1:]] - c[off[:-1]]
@@ -332,7 +333,7 @@ def fingerprint_df(docs: DataFrame, key: str = "doc_id") -> DataFrame:
         texts_l = [t if isinstance(t, str) else "" for t in texts]
         nd = len(texts_l)
         out = np.zeros(nd, dtype=np.int64)
-        tb = core.batch_tokenize(texts_l, need_tokens=False)
+        tb = core.batch_tokenize(texts_l)
         T = tb.starts.size
         if T:
             arr = core.batch_token_array(tb)

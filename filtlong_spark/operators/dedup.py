@@ -15,14 +15,13 @@ Every operator here is mirrored by an exact DuckDB SQL oracle in
 __spark_entry__.py (same md5-derived hashes -> identical values in both
 engines, no float ambiguity except cosine, which is rounded).
 
-Tokenization note (round-5 ADVICE item): the Python window/shingle
-kernels tokenize with core.TOKEN_RE (Python Unicode \\S), while the
-DuckDB oracles use RE2 \\S semantics — on text containing non-ASCII
-whitespace (NBSP, ideographic space) the two can split differently.
-The corpora this repo is checked against are ASCII (verified across
-every SF, incl. the driver-generated ones), where both agree exactly;
-a production deployment mixing the Python kernels with the SQL mirrors
-on non-ASCII text should pin one convention (re.ASCII matches RE2).
+Tokenization: every Python window/shingle kernel tokenizes with
+core.batch_tokenize, which splits on Java whitespace ([ \\t\\n\\x0B\\f\\r])
+exactly as Catalyst's regexp_extract_all(text, '\\S+') does, on any
+input: NBSP, ideographic space and the other Unicode-only spaces stay
+inside tokens. The DuckDB mirrors (RE2 \\S) agree everywhere except on
+vertical tab (\\x0B), which RE2 keeps inside a token; the oracle SQL keeps
+RE2's \\S, and the corpora it checks hold no vertical tab.
 """
 
 from __future__ import annotations
@@ -675,7 +674,7 @@ def simhash_of_texts(texts, core):
 
     shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
     weights = (np.uint64(1) << shifts)
-    tb = core.batch_tokenize(texts, need_tokens=False)
+    tb = core.batch_tokenize(texts)
     counts = np.asarray(tb.counts, dtype=np.int64)
     nz = counts > 0
     if not nz.any():

@@ -90,7 +90,7 @@ def lm_count_tables(ref_pages: DataFrame, min_count: int = 1,
         for rb in batches:
             texts = [t if isinstance(t, str) else ""
                      for t in rb.column("text").to_pylist()]
-            tb = core.batch_tokenize(texts, need_tokens=False)
+            tb = core.batch_tokenize(texts)
             counts = np.asarray(tb.counts, dtype=np.int64)
             doc_of = np.asarray(tb.doc_of, dtype=np.int64)
             offsets = np.concatenate(([0], np.cumsum(counts)))
@@ -229,7 +229,7 @@ def make_token_mapper(cfg: FilterConfig):
             texts = [t if isinstance(t, str) else ""
                      for t in rb.column("text").to_pylist()]
             nd = len(texts)
-            tb = core.batch_tokenize(texts, need_tokens=False)
+            tb = core.batch_tokenize(texts)
             if langid:
                 pred, _ = core.flat_predict_lang_texts(texts)
                 gated = (pred != lang_expected) if lang_expected is not None \

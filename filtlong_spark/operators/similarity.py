@@ -26,10 +26,6 @@ from pyspark.sql import DataFrame, functions as F
 from .dedup import MAX_BAND_BUCKET, _cap_buckets
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
 def dot(a, b):
     """Deterministic left-to-right fold of pairwise products."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -214,7 +210,7 @@ def corpus_mean(emb: DataFrame, dim: int) -> list[float]:
 def lsh_band_keys(emb: DataFrame, n_bands: int = LSH_BANDS,
                   band_bits: int = BAND_BITS,
                   center: bool = False,
-                  dim: int | None = None, mu=None) -> DataFrame:
+                  dim: int | None = None) -> DataFrame:
     """(vec_id, band, key): banded sign-LSH signature — band b's key packs
     sign bits of planes [b*band_bits, (b+1)*band_bits), MSB-first. ONE
     numpy mapInPandas pass (a BLAS int matmul per Arrow batch); the
@@ -232,7 +228,6 @@ def lsh_band_keys(emb: DataFrame, n_bands: int = LSH_BANDS,
     recall 209/215 -> 192/215 for raw-cos>=0.99 pairs. Centering is a
     translation, so truly near-identical vectors stay near-identical."""
     import numpy as np
-    import pandas as pd
 
     from ..functions.scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
@@ -244,14 +239,12 @@ def lsh_band_keys(emb: DataFrame, n_bands: int = LSH_BANDS,
         if first is None:
             return spark.createDataFrame([], schema)
         dim = len(first["embedding"])
-    # dim/mu can be passed in by a caller that already collected the
-    # corpus (near_dup_pairs' bucket-local path) — each probe here is
-    # otherwise its own Spark job at query-construction time
-    if mu is None:
-        mu = (np.array(corpus_mean(emb, dim), dtype=np.float64)
-              if center else np.zeros(dim, dtype=np.float64))
-    else:
-        mu = np.asarray(mu, dtype=np.float64)
+    # dim can be passed in by a caller that already probed it
+    # (near_dup_pairs) — the probe is otherwise its own Spark job at
+    # query-construction time. The mean always comes from the one
+    # corpus_mean aggregate, so every near-dup path bands alike.
+    mu = (np.array(corpus_mean(emb, dim), dtype=np.float64)
+          if center else np.zeros(dim, dtype=np.float64))
     n_planes = n_bands * band_bits
     w = plane_matrix(dim, n_planes)
     # per-band MSB-first packing: plane p contributes bit (band_bits-1 - p%band_bits)
@@ -280,71 +273,23 @@ def lsh_band_keys(emb: DataFrame, n_bands: int = LSH_BANDS,
     return emb.select("vec_id", "embedding").mapInArrow(mapper, schema)
 
 
-# corpus size cap for the broadcast-gather cosine path: n * (dim*8 + 8)
+# corpus size cap for near_dup_pairs' bucket-local path: n * (dim*8 + 8)
 # bytes of float64 matrix must fit comfortably in every executor (and
-# the driver pulls it once). Above the cap, fall back to the join path.
+# the driver pulls it once). Above the cap, near_dup_pairs takes the
+# join path (_pair_cosines).
 PAIR_COS_BROADCAST_BYTES = 64 << 20
 
 
-def _pair_cosines(emb: DataFrame, pairs: DataFrame,
-                  prefer_broadcast: bool = True) -> DataFrame:
+def _pair_cosines(emb: DataFrame, pairs: DataFrame) -> DataFrame:
     """(probe_id, vec_id) candidate pairs -> + cosine, in the oracle's
     operation order (dot of RAW doubles / product of norms), rounded to
-    6dp JVM-side (Spark/DuckDB share HALF_UP).
-
-    Two physical shapes (guide §8: decide with small rows, move big
-    rows once):
-
-    - corpus fits PAIR_COS_BROADCAST_BYTES: broadcast the (n, dim)
-      float64 matrix once and compute every pair's cosine in a map-only
-      Arrow pass over the (probe_id, vec_id) INT pairs — the pair
-      stream never carries embedding payloads (the join path shipped
-      2 x dim floats per candidate through the exchange AND the Python
-      boundary: ~1.6 GB for dedup_text_embedding's 6.4M sf1.0
-      candidates vs ~100 MB of int pairs here).
-    - larger corpus: the original two equi-joins on vec_id (AQE
-      broadcasts when a side is small) + vectorized numpy cosines —
-      the 100 TB shape where the corpus cannot broadcast."""
+    6dp JVM-side (Spark/DuckDB share HALF_UP). Two equi-joins on vec_id
+    (AQE broadcasts when a side is small) + vectorized numpy cosines —
+    the shape that needs no corpus broadcast, so it holds at any size."""
     import numpy as np
-    import pandas as pd
 
     from ..functions.scoring import _register_self_contained_pickling
     _register_self_contained_pickling()
-
-    first = emb.select("embedding").first() if prefer_broadcast else None
-    if first is not None:
-        dim = len(first["embedding"])
-        n = emb.count()
-        if n * (dim * 8 + 8) <= PAIR_COS_BROADCAST_BYTES:
-            pdf = emb.select("vec_id", "embedding").toPandas()
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            M = np.array(list(pdf["embedding"]), dtype=np.float64)
-            order = np.argsort(ids, kind="stable")
-            ids, M = ids[order], M[order]
-            norms = _safe_norms(M)
-            bc = emb.sparkSession.sparkContext.broadcast((ids, M, norms))
-
-            def gather_mapper(batches):
-                import pyarrow as pa
-                b_ids, b_m, b_norms = bc.value
-                for rb in batches:
-                    if not rb.num_rows:
-                        continue
-                    p = rb.column("probe_id").to_numpy(zero_copy_only=False)
-                    c = rb.column("vec_id").to_numpy(zero_copy_only=False)
-                    pi = np.searchsorted(b_ids, p)
-                    ci = np.searchsorted(b_ids, c)
-                    P, C = b_m[pi], b_m[ci]
-                    cos = (np.einsum("ij,ij->i", P, C)
-                           / (b_norms[pi] * b_norms[ci]))
-                    yield pa.record_batch(
-                        [rb.column("probe_id"), rb.column("vec_id"),
-                         pa.array(cos)],
-                        names=["probe_id", "vec_id", "cos"])
-
-            out = pairs.select("probe_id", "vec_id").mapInArrow(
-                gather_mapper, schema="probe_id long, vec_id long, cos double")
-            return out.withColumn("cos", F.round("cos", 6))
 
     e = emb.select("vec_id", "embedding")
     j = (pairs
@@ -419,10 +364,7 @@ def ann_lsh_candidates(emb: DataFrame, probe_max_id: int,
     rounded to 6dp for cross-engine determinism."""
     cand = lsh_candidate_pairs(emb, probe_max_id, max_bucket,
                                n_bands, band_bits, center, distinct=False)
-    # probe-bounded candidate sets are small: the join path (AQE
-    # broadcasts the pair side) beats paying the gather-matrix setup
-    return _pair_cosines(emb, cand,
-                         prefer_broadcast=probe_max_id is None).distinct()
+    return _pair_cosines(emb, cand).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -551,7 +493,7 @@ def ann_ivf_topk(emb: DataFrame, probe_max_id: int, k: int = 5,
     cand = (assigned.join(probes.select("probe_id", "list_id"), "list_id")
             .filter(F.col("probe_id") != F.col("vec_id"))
             .select("probe_id", "vec_id"))
-    pairs = _pair_cosines(emb, cand, prefer_broadcast=False)
+    pairs = _pair_cosines(emb, cand)
     w = Window.partitionBy("probe_id").orderBy(F.desc("cos"),
                                                F.asc("vec_id"))
     return (pairs.withColumn("rank", F.row_number().over(w))
@@ -582,7 +524,7 @@ def embed_text(docs: DataFrame, dim: int = 32) -> DataFrame:
         for pdf in batches:
             texts = [t if isinstance(t, str) else "" for t in pdf["text"]]
             ids = np.asarray(pdf["doc_id"], dtype=np.int64)
-            tb = core.batch_tokenize(texts, need_tokens=False)
+            tb = core.batch_tokenize(texts)
             counts = np.asarray(tb.counts, dtype=np.int64)
             nz = counts > 0
             if not nz.any():
@@ -627,7 +569,7 @@ def near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     dim = len(first["embedding"])
     # ONE bounded collect decides the path AND feeds it: read at most
     # cap_rows+1 rows — within the broadcast budget that IS the corpus
-    # matrix (no separate count/corpus_mean/toPandas jobs); one row
+    # matrix (no separate count/toPandas jobs); one row
     # over means fall back to the join path (the read stays bounded at
     # any corpus size: limit pushes into the scan)
     cap_rows = PAIR_COS_BROADCAST_BYTES // (dim * 8 + 8)
@@ -641,7 +583,7 @@ def near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     # self-join to candidate pairs + per-pair cosine re-join
     cand = lsh_candidate_pairs(emb, None, max_bucket, n_bands, band_bits,
                                center, distinct=False)
-    return (_pair_cosines(emb, cand, prefer_broadcast=False)
+    return (_pair_cosines(emb, cand)
             .filter(F.col("cos") >= threshold)
             .select("probe_id", "vec_id", "cos")
             .distinct())
@@ -655,17 +597,18 @@ def _near_dup_bucket_local(emb: DataFrame, pdf, dim: int,
     SELF-join materialized every candidate pair as JVM rows — ~12M rows
     through a join, a distinct exchange, and the Python boundary for
     sf1.0's dedup_text_embedding, ~5-6 s of pure pair plumbing. With
-    the corpus matrix broadcast (the same budget gate as
-    _pair_cosines), one Arrow pass over the ~200k-row capped band table
-    — repartitioned so each (band, key) bucket is one contiguous sorted
-    run — generates each bucket's pairs and their cosines IN NUMPY and
-    emits only rows near the threshold; the join, the pair exchange,
-    and the boundary rows all disappear.
+    the corpus matrix broadcast (near_dup_pairs' gate:
+    PAIR_COS_BROADCAST_BYTES), one Arrow pass over the ~200k-row capped
+    band table — repartitioned so each (band, key) bucket is one
+    contiguous sorted run — generates each bucket's pairs and their
+    cosines IN NUMPY and emits only rows near the threshold; the join,
+    the pair exchange, and the boundary rows all disappear.
 
     Exactness: pair set is identical (same capped buckets, same a < b
     orientation, duplicates across bands collapsed by the same final
-    distinct); cosines use the identical einsum row-dot the pair-gather
-    path used; the Python-side prefilter keeps everything above
+    distinct; the band keys use the same corpus_mean when centering);
+    cosines use the identical einsum row-dot as the join path's
+    _pair_cosines; the Python-side prefilter keeps everything above
     threshold - 1e-6 RAW, which cannot drop a pair whose HALF_UP-rounded
     6dp cosine reaches the threshold (|round(c) - c| <= 0.5e-6), and
     the authoritative round+filter stays JVM-side as before."""
@@ -679,15 +622,7 @@ def _near_dup_bucket_local(emb: DataFrame, pdf, dim: int,
     order = np.argsort(ids, kind="stable")
     ids, M = ids[order], M[order]
     norms = _safe_norms(M)
-    # corpus mean from the already-collected matrix: for the
-    # integer-valued embeddings the oracle checks (hashed-BoW counts)
-    # the per-dimension sums are exact in float64 regardless of
-    # summation order, so this equals corpus_mean()'s Spark aggregate
-    # bit-for-bit (the same argument that function documents)
-    mu = (M.sum(axis=0) / len(ids) if center and len(ids)
-          else np.zeros(dim, dtype=np.float64))
-    bands = lsh_band_keys(emb, n_bands, band_bits, center,
-                          dim=dim, mu=mu)
+    bands = lsh_band_keys(emb, n_bands, band_bits, center, dim=dim)
     bands = bands.localCheckpoint(eager=True)
     bands = _cap_buckets(bands, ["band", "key"], max_bucket)
     bc = emb.sparkSession.sparkContext.broadcast((ids, M, norms))

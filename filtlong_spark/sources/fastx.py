@@ -18,7 +18,6 @@ from __future__ import annotations
 import glob
 import gzip
 import io
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,11 +87,6 @@ def open_fastx(path: str) -> io.TextIOBase:
     if path.endswith(".gz"):
         return io.TextIOWrapper(gzip.open(path, "rb"), encoding="ascii")
     return open(path, "rt", encoding="ascii")
-
-
-def parse_fastx_file(path: str) -> list[dict]:
-    with open_fastx(path) as f:
-        return list(parse_fastx(f, os.path.basename(path)))
 
 
 def read_fastx(spark: SparkSession, paths: str | list[str]) -> DataFrame:

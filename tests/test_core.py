@@ -158,14 +158,12 @@ _token_strategy = st.lists(
 @given(docs=_token_strategy)
 @settings(max_examples=_EXAMPLES, deadline=None)
 def test_flat_token_quality_and_langid_match_scalar(docs):
-    flat = [t for d in docs for t in d]
-    counts = np.array([len(d) for d in docs], dtype=np.int64)
     accepted = {"the", "a", "data", "q1"}
-    q = core.flat_token_quality(flat, accepted)
+    texts = [" ".join(d) for d in docs]
+    q = core.flat_token_quality_batch(core.batch_tokenize(texts), accepted)
     exp_q = (np.concatenate([core.token_quality(d, accepted) for d in docs])
              if docs else np.zeros(0))
     assert np.array_equal(q, exp_q)
-    texts = [" ".join(d) for d in docs]
     pred, conf = core.flat_predict_lang_texts(texts)
     for i, t in enumerate(texts):
         ep, ec = core.predict_lang(t)
@@ -173,19 +171,10 @@ def test_flat_token_quality_and_langid_match_scalar(docs):
         assert conf[i] == ec
 
 
-def test_ws_codes_match_re():
-    """WS_CODES must be exactly the codepoints re \\s matches (the blob
-    tokenizer's correctness hinges on this table)."""
-    import re as _re
-    import sys
-    ws = {c for c in range(sys.maxunicode + 1)
-          if (0xD800 > c or c > 0xDFFF) and _re.match(r"\s", chr(c))}
-    assert ws == set(int(c) for c in core.WS_CODES)
-
-
 _texts_strategy = st.lists(
     st.text(alphabet=st.sampled_from(
-        list("ab q1.") + ["\t", "\n", " ", "　", " ", "\U0001F600"]),
+        list("ab q1.") + ["\t", "\n", "\x0b", "\x1c", "\x85", "\xa0",
+                          "\u3000", "\u2028", "é", "中", "\U0001F600"]),
         min_size=0, max_size=30),
     min_size=0, max_size=8)
 
@@ -201,7 +190,7 @@ def test_batch_tokenize_matches_scalar(texts):
             starts_exp.append(s)
             ends_exp.append(e)
             doc_exp.append(d)
-    assert tb.tokens == flat_exp
+    assert core.batch_token_array(tb).to_pylist() == flat_exp
     assert tb.starts.tolist() == starts_exp
     assert tb.ends.tolist() == ends_exp
     assert tb.doc_of.tolist() == doc_exp
@@ -226,7 +215,8 @@ def test_batch_scrub_matches_scalar(texts, trim, split, pii):
         texts[0] = texts[0] + " bob@x.io g"
     accepted_is_good = lambda tok: set(tok) <= set("g") and tok  # noqa: E731
     tb = core.batch_tokenize(texts)
-    q = np.array([1.0 if accepted_is_good(t) else 0.0 for t in tb.tokens])
+    q = np.array([1.0 if accepted_is_good(t) else 0.0
+                  for t in core.batch_token_array(tb).to_pylist()])
     gated = np.zeros(len(texts), dtype=bool)
     scrubbed, child_rows = _batch_scrub(tb, q, texts, gated, trim, split, pii)
     for d, t in enumerate(texts):
@@ -244,14 +234,15 @@ def test_batch_scrub_matches_scalar(texts, trim, split, pii):
 
 
 def test_batch_tokenize_surrogate_fallback():
-    """Lone surrogates (surrogateescape upstream) can't encode to utf-32;
-    the slow per-doc fallback must produce identical structure."""
+    """Lone surrogates (surrogateescape upstream) encode with
+    surrogatepass as one non-whitespace codepoint: offsets and counts
+    equal the scalar tokenizer's."""
     texts = ["ab \ud800cd ef", "plain text"]
     tb = core.batch_tokenize(texts)
     exp = [[(t, s, e) for t, s, e in core.tokenize(x)] for x in texts]
-    assert tb.tokens == [t for d in exp for t, _, _ in d]
     assert tb.counts.tolist() == [len(d) for d in exp]
     assert tb.starts.tolist() == [s for d in exp for _, s, _ in d]
+    assert tb.ends.tolist() == [e for d in exp for _, _, e in d]
 
 
 def test_pickle_by_value_modules_import():

@@ -240,7 +240,7 @@ def test_bounded_sample_semantics():
 def test_lone_surrogate_does_not_crash():
     """surrogateescape upstream decoders can hand the kernel lone
     surrogates; they must count as unmatched trigram positions, not
-    raise (the batch_tokenize slow-path hazard, mirrored here)."""
+    raise (surrogatepass, as in batch_tokenize)."""
     pred, conf = core.flat_predict_lang_texts(
         ["hello \ud800 world the and of to with that this from"])
     assert pred[0] == "en" and conf[0] > 0

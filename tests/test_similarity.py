@@ -161,3 +161,36 @@ def test_centered_banding_prunes_clustered_corpus(spark):
                                        center=True).collect()}
     planted = {(i, i + 200) for i in range(50)}
     assert len(got & planted) / len(planted) >= 0.9
+
+
+def test_near_dup_paths_agree(spark, monkeypatch):
+    """near_dup_pairs returns the same (probe_id, vec_id, cos) rows on the
+    bucket-local path and on the join path (a zero broadcast budget
+    forces the join path), on integer embeddings and on fractional ones
+    banded around their centred mean: both paths take that mean from the
+    one corpus_mean aggregate."""
+    rng = np.random.default_rng(5)
+    ints = rng.integers(0, 4, size=(200, 16)).astype(float)
+    ints[100:150] = ints[0:50]
+    ints[100:150, 0] += 1.0
+    int_rows = [(i, [float(x) for x in ints[i]]) for i in range(200)]
+    int_emb = spark.createDataFrame(int_rows,
+                                    "vec_id long, embedding array<float>")
+    cases = [(int_emb, False), (int_emb, True), (_emb_df(spark), True)]
+    for emb, center in cases:
+        def run():
+            return {(r["probe_id"], r["vec_id"], r["cos"])
+                    for r in sim.near_dup_pairs(
+                        emb, threshold=0.8, band_bits=8,
+                        center=center).collect()}
+        local = run()
+        calls = []
+        real = sim._pair_cosines
+        with monkeypatch.context() as m:
+            m.setattr(sim, "PAIR_COS_BROADCAST_BYTES", 0)
+            m.setattr(sim, "_pair_cosines",
+                      lambda *a: calls.append(1) or real(*a))
+            joined = run()
+        assert calls, "the join path did not run"
+        assert local, center
+        assert local == joined, center
