@@ -108,9 +108,10 @@ def full_stack_cfg():
 
 def lm_stack_cfg():
     """The same stage stack with the bigram-LM (KenLM-style perplexity)
-    scorer forced onto the DISTRIBUTED path — the heaviest plan in the
-    repo (token-grain shuffle + count-table joins + collect_list
-    reassembly)."""
+    scorer forced onto the DISTRIBUTED path: count tables, then the
+    corpus's distinct-bigram verdicts broadcast into one fused scorer
+    (the token-grain joins + collect_list reassembly above
+    lm.LM_VERDICT_MAX_KEYS distinct bigrams)."""
     from filtlong_spark import FilterConfig
     return FilterConfig(min_length=100, keep_percent=80.0, trim=True,
                         split=40, pii_scrub=True,
@@ -220,9 +221,9 @@ def run_bench(cpus: int = CPUS, sf_dir: str = SF_DIR) -> dict:
         big = min(big_runs, key=lambda r: r["pipeline_sec"])
         out["big_input"] = {**big,
                             "runs": [r["pipeline_sec"] for r in big_runs]}
-        # LM leg (distributed bigram-LM = the heaviest path: token-grain
-        # Arrow materialization + count-table joins + collect_list
-        # reassembly) on a slice of the same input: steady-state docs/s
+        # LM leg (distributed bigram-LM: count tables, a vocab-grain
+        # verdict pass over the corpus's distinct bigrams, then one fused
+        # scorer) on a slice of the same input: steady-state docs/s
         # is flat in doc count (the plan is linear), and the full 300k
         # run would blow the bench budget. The slice is MATERIALIZED to
         # parquet once — feeding `.limit(n)` directly would re-execute a

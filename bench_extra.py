@@ -19,8 +19,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# bench.py's $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS settings and defaults
+from bench import CPUS, SF_DIR  # noqa: E402
 
 
 def session():

@@ -149,9 +149,11 @@ class FilterConfig:
     lm_min_count: int = 1
 
     # bigram_lm physical strategy: 'auto' (pick by the pruned model's
-    # entry count — operators/lm.choose_strategy), 'distributed'
-    # (token-grain Catalyst joins against the count tables — no model
-    # collect, the 100 TB path) or 'broadcast' (whole pruned model as a
+    # entry count — operators/lm.choose_strategy), 'distributed' (no
+    # model collect, the 100 TB path: the corpus's distinct bigram
+    # verdicts broadcast into one fused scorer while they fit
+    # lm.LM_VERDICT_MAX_KEYS, else token-grain Catalyst joins
+    # against the count tables) or 'broadcast' (whole pruned model as a
     # broadcast variable — exact even for mid-token PII fragments,
     # requires a driver-sized model)
     lm_strategy: str = "auto"

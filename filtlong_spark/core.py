@@ -208,9 +208,13 @@ def batch_tokenize(texts: list[str]) -> TokenBatch:
     it to UTF-8 once, and find the non-whitespace runs with one byte
     table lookup. Codepoint offsets (what _batch_scrub, child spans and
     F.substring need) are a prefix count of the non-continuation bytes;
-    on ASCII blobs they equal the byte offsets. ``surrogatepass`` keeps a
-    lone surrogate one non-whitespace codepoint. Per doc, equal to
-    tokenize() (property-tested) and to Catalyst's '\\S+' tokens."""
+    on ASCII blobs they equal the byte offsets. A lone surrogate (only a
+    Python caller can pass one, e.g. text from a ``surrogateescape``
+    decoder; Spark's Arrow batches cannot carry it) becomes U+FFFD in the
+    blob: its three surrogatepass bytes are rewritten in place, so byte
+    and codepoint offsets do not move and the blob stays valid UTF-8.
+    Per doc, equal to tokenize() (property-tested) and to Catalyst's
+    '\\S+' tokens."""
     nd = len(texts)
     empty = np.zeros(0, dtype=np.int64)
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=nd)
@@ -218,7 +222,14 @@ def batch_tokenize(texts: list[str]) -> TokenBatch:
     if nd > 1:
         np.cumsum(lens[:-1] + 1, out=doc_starts[1:])
     blob = " ".join(texts)
-    u8 = np.frombuffer(blob.encode("utf-8", "surrogatepass"), dtype=np.uint8)
+    try:
+        u8 = np.frombuffer(blob.encode("utf-8"), dtype=np.uint8)
+    except UnicodeEncodeError:
+        u8 = np.frombuffer(blob.encode("utf-8", "surrogatepass"),
+                           dtype=np.uint8).copy()
+        # a surrogate encodes as ED A0-BF xx; ED is always a lead byte
+        sur = np.nonzero((u8[:-2] == 0xED) & (u8[1:-1] >= 0xA0))[0]
+        u8[sur], u8[sur + 1], u8[sur + 2] = 0xEF, 0xBF, 0xBD
     nz = ~_WS_BYTE[u8]
     if not nz.any():
         return TokenBatch(empty, empty, empty, np.zeros(nd, dtype=np.int64),
@@ -248,10 +259,8 @@ def batch_token_array(tb: "TokenBatch"):
     token's byte range + an offsets cumsum — zero Python string objects;
     pa.array(list_of_str) measured ~1.6 us/token, the single hottest
     step of any window kernel). Element i is the i-th token in doc
-    order, equal to the i-th regexp_extract_all(text, '\\S+') row. A lone
-    surrogate (only a Python caller can pass one; Spark's Arrow batches
-    cannot carry it) stays as its surrogatepass bytes, which are not
-    valid UTF-8: membership probes work, to_pylist raises."""
+    order, equal to the i-th regexp_extract_all(text, '\\S+') row (a lone
+    surrogate reads as U+FFFD, see batch_tokenize)."""
     import pyarrow as pa
     n = tb.bstarts.size
     if n == 0:

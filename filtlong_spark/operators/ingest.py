@@ -39,10 +39,12 @@ def ingest(pages: DataFrame, order_cols=("warc_ts", "url"),
     the key would shuffle EVERY row (including the text column) and AQE
     then coalesces the CPU-heavy downstream Python stage onto a handful of
     tasks. Instead: (1) find duplicated keys with a key-only aggregate
-    (shuffles just keys), (2) broadcast-join that small set back, so clean
-    rows flow scan->score with no shuffle, and only the duplicated subset
-    pays the window. Assumes dups are the exception (url-keyed crawl
-    snapshots); a dup-heavy source should be pre-bucketed by key instead.
+    (shuffles just keys), (2) broadcast that small set into an anti join
+    (clean rows) and a semi join (duplicated rows) — one broadcast
+    exchange, which the two branches reuse — so clean rows flow
+    scan->score with no shuffle, and only the duplicated subset pays the
+    window. Assumes dups are the exception (url-keyed crawl snapshots); a
+    dup-heavy source should be pre-bucketed by key instead.
     """
     if canonical_url_dedup:
         from ..functions.weburl import canonical_url_col
@@ -57,13 +59,11 @@ def ingest(pages: DataFrame, order_cols=("warc_ts", "url"),
          .when(F.length("text") == 0, F.lit("empty_text")))
 
     # A4: duplicated keys, key-only aggregate -> small -> broadcast
-    dup_keys = (base.groupBy("_key").agg(F.count("*").alias("_n"))
-                .filter(F.col("_n") > 1).select("_key")
-                .withColumn("_dup", F.lit(1)))
-    marked = base.join(F.broadcast(dup_keys), "_key", "left")
-
-    clean = marked.filter(F.col("_dup").isNull()).drop("_dup")
-    dups = marked.filter(F.col("_dup").isNotNull()).drop("_dup")
+    dup_keys = F.broadcast(
+        base.groupBy("_key").agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") > 1).select("_key"))
+    clean = base.join(dup_keys, "_key", "left_anti")
+    dups = base.join(dup_keys, "_key", "left_semi")
     w = Window.partitionBy("_key").orderBy(*[F.col(c) for c in order_cols])
     dups = (dups.withColumn("_rn", F.row_number().over(w))
             .withColumn(

@@ -47,8 +47,10 @@ def bigram_lm_counts(ref_pages: DataFrame, min_count: int = 1,
     collected into the broadcast payload, so the driver never holds more
     than the prune bound admits. ``tables``: pre-built LmCounts (from
     lm.plan_lm) to reuse instead of re-counting. For corpora whose pruned
-    model still outgrows the driver, use lm_strategy='distributed'
-    (token-grain joins, zero collect)."""
+    model still outgrows the driver, use lm_strategy='distributed': it
+    collects only the verdicts of the scored corpus's distinct bigrams
+    (and above lm.LM_VERDICT_MAX_KEYS of those, nothing: token-grain
+    joins)."""
     from . import lm as lm_op
     if tables is None:
         tables = lm_op.lm_count_tables(ref_pages, min_count)

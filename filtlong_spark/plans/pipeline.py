@@ -133,6 +133,10 @@ def _combine_stats(part_rows) -> dict:
 # the page columns the gate stage materializes and the output reattaches
 PAGE_COLS = ("url", "warc_ts", "lang", "text")
 DROP_COUNTERS = ("blocklist_dropped", "near_dup_dropped", "clf_dropped")
+# the bigram-LM scorer's size-gated decision (None outside bigram_lm):
+# lm_path 'broadcast' / 'verdict_broadcast' / 'token_join', the verdict
+# key count (verdict path only) and the verdict path's key bound
+LM_DECISION = ("lm_path", "lm_verdict_keys", "lm_verdict_max_entries")
 
 
 def _blocklist_on(cfg: FilterConfig, blocklist_hosts_df) -> bool:
@@ -249,7 +253,12 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
     (north_rule: resumable from the last committed snapshot).
     ``blocklist_hosts_df``: optional one-column DataFrame(host) deny list
     for the blocklist stage when the list is too large for
-    cfg.blocklist_hosts (UT1 scale); unioned with the config tuple."""
+    cfg.blocklist_hosts (UT1 scale); unioned with the config tuple.
+    ``pages`` must give the same rows each time it is evaluated: a fresh
+    leg reads it in more than one Spark job (the snapshot write and the
+    survivor text reattach; under lm_strategy='distributed', also the
+    verdict pass), so persist or write out a sampled or unordered-limit
+    source first."""
     cfg.validate()
     scratch = checkpoint_dir or output_op.new_scratch_dir()
     gated = (_blocklist_on(cfg, blocklist_hosts_df)
@@ -261,7 +270,7 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
     members = ((output_op.CORPUS_SUBDIR, output_op.VERDICTS_SUBDIR)
                if gated else ())
 
-    drops = {}
+    counters = {}
     resumed = resume and output_op.is_committed(os.path.join(scratch, "reads2"))
     # without gates the committed snapshot holds metrics only, and the
     # source table is re-read at output time to reattach survivor text
@@ -276,7 +285,7 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         output_op.verify_snapshot_chain(scratch, required=members)
         reads2 = spark.read.parquet(os.path.join(scratch, "reads2"))
         total_input_chars = lineage.get("total_input_chars", 0)
-        drops = lineage
+        counters = lineage
         # survivors reattach the fresh leg's line-CLEANED text from the
         # committed corpus (one parquet scan, no gate reruns); gated docs
         # were never scored, so the inner label join below cannot
@@ -307,13 +316,16 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         if gated:
             # the Observation sits below the gates, so the budget still
             # measures against the RAW input chars (src/main.cpp:89,228)
-            corpus, verdicts, drops = _gate_stage(
+            corpus, verdicts, counters = _gate_stage(
                 spark, valid, cfg, blocklist_hosts_df, scratch)
             valid = corpus.join(verdicts, "url", "left_anti")
 
         lm_strategy, lm_tables = None, None
         if cfg.mode == "bigram_lm":
             from ..operators import lm as lm_op
+            counters.update(
+                lm_path="broadcast",
+                lm_verdict_max_entries=lm_op.LM_VERDICT_MAX_KEYS)
             lm_strategy = cfg.lm_strategy
             if lm_strategy == "auto":
                 # planning step: broadcast iff the pruned model fits the
@@ -326,10 +338,11 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
                                                   cfg.lm_min_count)
         try:
             if lm_strategy == "distributed":
-                # LM scale path: token-grain Catalyst joins against the
-                # count tables — the model is never collected anywhere
+                # LM scale path: the corpus's pair verdicts broadcast, or
+                # token-grain joins — the model is never collected
                 scored = lm_op.score_and_scrub_distributed(
-                    spark, valid, cfg, ref_pages, tables=lm_tables)
+                    spark, valid, cfg, ref_pages, tables=lm_tables,
+                    decision=counters)
             else:
                 accepted_bc = refset_op.build_broadcast(
                     spark, cfg, ref_pages, lm_tables=lm_tables)
@@ -396,9 +409,9 @@ def run_filter(spark: SparkSession, pages: DataFrame, cfg: FilterConfig,
         "passed_chars_pre_budget": int(stats["passed_chars"] or 0),
         "target": target,
         "resumed": resumed,
-        # per-gate drop counters (None when the gate is off; on resume,
-        # read back from the committed lineage)
-        **{k: drops.get(k) for k in DROP_COUNTERS},
+        # per-gate drop counters and the LM decision (None when the gate
+        # or LM is off; on resume, read back from the committed lineage)
+        **{k: counters.get(k) for k in DROP_COUNTERS + LM_DECISION},
         "config": {k: (list(v) if isinstance(v, frozenset) else v)
                    for k, v in cfg.__dict__.items()},
     }

@@ -1,7 +1,9 @@
 """Phase-level profile of the distributed bigram-LM leg (bench
-big_input_lm input): times count-tables, stage-1 tokenize, paint+
-reassembly, and the full pipeline separately so optimization targets
-the measured bottleneck, not a guess.
+big_input_lm input): times the count tables, both sub-paths of
+lm.score_and_scrub_distributed — the verdict broadcast (phase 1 verdict
+pass, then the fused scorer's write) and the token join (stage-1
+tokenize, paint, reassembly) — and the full pipeline separately, so
+optimization targets the measured bottleneck, not a guess.
 
 Usage: python scripts/profile_lm.py [n_runs]
 """
@@ -23,12 +25,28 @@ def main():
     spark = bench.build_session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
+    from pyspark.sql import functions as F
+
     from filtlong_spark.operators import lm as lm_op
     from filtlong_spark.plans.pipeline import run_filter
 
     pages = spark.read.parquet("data/pages_lm_50000.parquet")
     n = pages.count()
     cfg = bench.lm_stack_cfg()
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    def distributed(bound):
+        """score_and_scrub_distributed's noop write with the verdict
+        bound set to ``bound`` (0 forces the token join)."""
+        saved = lm_op.LM_VERDICT_MAX_KEYS
+        lm_op.LM_VERDICT_MAX_KEYS = bound
+        try:
+            noop(lm_op.score_and_scrub_distributed(
+                spark, pages, cfg, pages, tables=tables))
+        finally:
+            lm_op.LM_VERDICT_MAX_KEYS = saved
 
     n_runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     for r in range(n_runs):
@@ -38,25 +56,31 @@ def main():
         t["count_tables"] = time.time() - t0
 
         t0 = time.time()
-        from pyspark.sql import functions as F
+        verdicts = lm_op.lm_verdicts(pages, tables, cfg.lm_threshold,
+                                     lm_op.LM_VERDICT_MAX_KEYS)
+        t["verdict_pass"] = time.time() - t0
+
+        t0 = time.time()
+        distributed(lm_op.LM_VERDICT_MAX_KEYS)
+        t["verdict_pass+fused_write"] = time.time() - t0
+
+        t0 = time.time()
         keyed = pages.select(F.xxhash64("url").alias("doc_key"),
                              "url", "text")
         tok_rows = keyed.mapInArrow(lm_op.make_token_mapper(cfg),
                                      schema=lm_op.TOK_SCHEMA)
         n_tok = tok_rows.count()
-        t["stage1_tokenize"] = time.time() - t0
+        t["token_join.stage1_tokenize"] = time.time() - t0
 
         t0 = time.time()
         painted = lm_op.paint_goodness(tok_rows, tables.c1, tables.c2e,
                                        tables.total, cfg.lm_threshold)
         painted.count()
-        t["stage1+paint"] = time.time() - t0
+        t["token_join.stage1+paint"] = time.time() - t0
 
         t0 = time.time()
-        reads2 = lm_op.score_and_scrub_distributed(
-            spark, pages, cfg, pages, tables=tables)
-        reads2.count()
-        t["stage1+paint+reassemble"] = time.time() - t0
+        distributed(0)
+        t["token_join.write"] = time.time() - t0
         tables.release()
 
         t0 = time.time()
@@ -64,7 +88,8 @@ def main():
         res.kept.count()
         t["full_pipeline"] = time.time() - t0
 
-        print(f"run {r}: n_docs={n} n_tok_rows={n_tok}")
+        keys = None if verdicts is None else len(verdicts[0])
+        print(f"run {r}: n_docs={n} n_tok_rows={n_tok} verdict_keys={keys}")
         for k, v in t.items():
             print(f"  {k:28s} {v:7.2f}s")
     spark.stop()
