@@ -366,6 +366,9 @@ def _run(a) -> int:
         for ln in report.verbose_read_info(rows, name_col="name",
                                            parent_col="parent_name"):
             print(ln, file=sys.stderr)
+        print("", file=sys.stderr)
+        for ln in report.verbose_scores_table(rows, name_col="name"):
+            print(ln, file=sys.stderr)
 
     kept_chars = (res.reads2.filter("passed")
                   .agg({"n_chars": "sum"}).collect()[0][0]) or 0

@@ -126,10 +126,10 @@ class FilterConfig:
     # run at ingest before any dedup/scoring: docs whose url host is in
     # blocklist_hosts OR whose text contains a blocklist_words entry
     # (lower-cased substring) are quarantined with reason 'blocklisted'.
-    # Empty tuples = stage off. At UT1 scale pass the host list via a
-    # DataFrame to run_filter's blocklist_hosts_df instead (broadcast or
-    # bucketed probe); these config tuples are for list sizes a config
-    # object can reasonably carry.
+    # Hosts compare lower-cased. Empty tuples = stage off. At UT1 scale
+    # pass the host list via a DataFrame to run_filter's
+    # blocklist_hosts_df instead (a broadcast probe); these config tuples
+    # are for list sizes a config object can reasonably carry.
     blocklist_hosts: tuple = ()
     blocklist_words: tuple = ()
 
@@ -149,7 +149,7 @@ class FilterConfig:
     lm_min_count: int = 1
 
     # bigram_lm physical strategy: 'auto' (pick by the pruned model's
-    # entry count — operators/lm.choose_strategy), 'distributed' (no
+    # entry count — operators/lm.plan_lm), 'distributed' (no
     # model collect, the 100 TB path: the corpus's distinct bigram
     # verdicts broadcast into one fused scorer while they fit
     # lm.LM_VERDICT_MAX_KEYS, else token-grain Catalyst joins

@@ -1112,18 +1112,6 @@ def bigram_quality(tokens: list[str], c2, c1, total: int,
     return q
 
 
-def doc_perplexity(tokens: list[str], c2, c1, total: int) -> float:
-    """exp(-mean log p) over the token stream (documentation metric)."""
-    if not tokens:
-        return float("inf")
-    s = 0.0
-    prev = None
-    for t in tokens:
-        s += math.log(bigram_prob(prev, t, c2, c1, total))
-        prev = t
-    return math.exp(-s / len(tokens))
-
-
 # ---------------------------------------------------------------------------
 # PII / toxicity scrub spans (north_rule: compiled-regex scrubber).
 # An additional bad-span source feeding the same trim/split machinery —

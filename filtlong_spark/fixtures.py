@@ -282,8 +282,8 @@ def langid_suite() -> list[dict]:
 
 def volume(sf: float, seed: int = 42) -> list[dict]:
     """~1000*sf docs: log-normal lengths (median ~2k chars), Beta bad-token
-    fraction, Poisson-planted bad runs, Zipf-distributed hosts (to exercise
-    salted repartitioning)."""
+    fraction, Poisson-planted bad runs, Zipf-distributed hosts (host-skewed,
+    like a crawl)."""
     rng = np.random.default_rng(seed)
     n_docs = max(20, int(1_000_000 * sf))  # sf=0.001 -> 1k docs (FIXTURES.md)
     lengths = np.clip(rng.lognormal(np.log(2000), 0.6, n_docs), 120, 20000).astype(int)

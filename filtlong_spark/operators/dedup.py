@@ -402,8 +402,8 @@ def dedup_assign(docs: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def url_doc_key(col: Column | str = "url") -> Column:
     """int64 dedup key for a url-keyed page: the md5-60 prefix (the
-    repo's one shared hash kernel, md5_60_of_distinct — mirrored in
-    DuckDB as ('0x' || substr(md5(url), 1, 15))::BIGINT). 60-bit
+    width of the repo's one shared hash kernel, _md5_60_arrow — mirrored
+    in DuckDB as ('0x' || substr(md5(url), 1, 15))::BIGINT). 60-bit
     collisions (expected ~n^2/2^61 pairs, ~10^5 at 10^12 docs) can only
     cause a FALSE near-dup drop of one page — acceptable for a dedup
     verdict, unlike a scoring-identity key (see lm.py's loud-failure
@@ -633,28 +633,14 @@ def simhash(docs: DataFrame) -> DataFrame:
         mapper, schema="doc_id long, simhash long")
 
 
-def md5_60_of_distinct(tokens):
-    """(codes, h60): factorize a flat token list and md5-hash each
-    DISTINCT token once to its 60-bit prefix (first 15 hex chars) — the
-    ONE hash kernel every md5-keyed operator shares (simhash votes,
-    hashed-BoW embedding dims); both DuckDB oracles depend on this exact
-    prefix width, so there is exactly one copy of it."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    codes, uniq = pd.factorize(np.array(tokens, dtype=object), sort=False)
-    h60 = np.fromiter(
-        (int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-         for t in uniq), dtype=np.uint64, count=len(uniq))
-    return codes, h60
-
-
 def md5_60_of_distinct_batch(tb, core):
-    """md5_60_of_distinct for a whole TokenBatch without Python token
-    strings: Arrow dictionary_encode over the buffer-built token array
-    (first-appearance codes, same as pd.factorize) + _md5_60_arrow over
-    the distinct dictionary. Identical (codes, h60) values."""
+    """(codes, h60) for a whole TokenBatch: factorize its tokens and
+    md5-hash each DISTINCT token once to its 60-bit prefix (first 15 hex
+    chars), the kernel the simhash votes and the hashed-BoW embedding
+    dims share; both DuckDB oracles depend on this exact prefix width.
+    No Python token strings: Arrow dictionary_encode over the
+    buffer-built token array (first-appearance codes) + _md5_60_arrow
+    over the distinct dictionary."""
     import numpy as np
     arr = core.batch_token_array(tb)
     de = arr.dictionary_encode()
@@ -664,12 +650,12 @@ def md5_60_of_distinct_batch(tb, core):
 
 
 def simhash_of_texts(texts, core):
-    """Per-batch fingerprint kernel shared by the batch operator and the
-    streaming ingest dedup: (has_tokens mask, int64 fingerprints for the
-    masked docs). One md5 per DISTINCT token, segment-summed bit votes
-    per doc. ``core`` is passed in (not imported here) so callers
-    capture it at closure-definition time and the pickled UDF stays
-    self-contained on workers without --py-files."""
+    """Per-batch fingerprint kernel of the simhash operator: (has_tokens
+    mask, int64 fingerprints for the masked docs). One md5 per DISTINCT
+    token, segment-summed bit votes per doc. ``core`` is passed in (not
+    imported here) so callers capture it at closure-definition time and
+    the pickled UDF stays self-contained on workers without
+    --py-files."""
     import numpy as np
 
     shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)

@@ -12,17 +12,13 @@ Scale shape:
   event_type) — the classic pre-aggregated rollup; no skew risk beyond
   event_type cardinality.
 - sessionize: one shuffle on user_id (the session window); per-user data
-  is tiny, hot users are bounded by their own event rate. The streaming
-  rendering (streaming/stream.py) uses a watermark + window aggregate.
+  is tiny, hot users are bounded by their own event rate.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-EVENTS_SCHEMA = ("event_id long, ts timestamp_ntz, user_id long, "
-                 "event_type string, value double, props string")
 
 
 def value_cents():

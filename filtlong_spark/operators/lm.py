@@ -188,8 +188,7 @@ LM_BROADCAST_MAX_ENTRIES = 2_000_000
 LM_VERDICT_MAX_KEYS = 1_000_000
 
 
-def plan_lm(ref_pages: DataFrame | None, cfg: FilterConfig,
-            max_entries: int | None = None
+def plan_lm(ref_pages: DataFrame | None, cfg: FilterConfig
             ) -> tuple[str, LmCounts | None]:
     """Resolve lm_strategy='auto' AND hand back the count tables the
     planning pass already built (persisted), so the chosen path — either
@@ -198,21 +197,11 @@ def plan_lm(ref_pages: DataFrame | None, cfg: FilterConfig,
     join-side size estimate."""
     if ref_pages is None:
         return "distributed", None  # downstream raises the clear error
-    if max_entries is None:
-        max_entries = LM_BROADCAST_MAX_ENTRIES
     tables = lm_count_tables(ref_pages, cfg.lm_min_count)
     n_entries = tables.c1.count() + tables.c2e.count()
-    strategy = ("broadcast" if n_entries <= max_entries else "distributed")
+    strategy = ("broadcast" if n_entries <= LM_BROADCAST_MAX_ENTRIES
+                else "distributed")
     return strategy, tables
-
-
-def choose_strategy(ref_pages: DataFrame | None, cfg: FilterConfig,
-                    max_entries: int | None = None) -> str:
-    """Planning-only wrapper over plan_lm (releases the tables)."""
-    strategy, tables = plan_lm(ref_pages, cfg, max_entries)
-    if tables is not None:
-        tables.release()
-    return strategy
 
 
 def _doc_front(texts: list, langid: bool, lang_expected, pii: bool):

@@ -1,17 +1,13 @@
-"""Partitioning & skew utilities (north_star: salted repartitioning on
-url-hash to defuse host-level skew + explicit shuffle-partition tuning).
+"""Host-grain operators over web pages: the host of a url, the
+data-derived host quality gate, temperature-damped per-host sampling and
+the UT1-style deny-list gate.
 
-Web crawls are host-skewed (Zipf): any groupBy/join keyed by host (or a
-prefix of url) concentrates hot hosts onto single tasks. Remedies, in
-preference order:
-
-1. AQE skew-join splitting (spark.sql.adaptive.skewJoin.enabled) — free,
-   joins only.
-2. Salted repartition (here): spread rows of the same key over
-   ``n_salts`` buckets via xxhash64(url, salt); aggregations then run
-   partial-per-salt -> final-per-key (two-stage agg).
-3. Pre-bucketed tables (Iceberg bucket(url, N) partition spec) for
-   repeated co-located joins.
+Web crawls are host-skewed (Zipf), so a groupBy or join keyed by raw
+host rows would put a hot host on one task. None of these operators
+does that: the host aggregates are partial (each partition collapses to
+one row per distinct host before the exchange) and the host-grain
+result, one row per host, joins back by broadcast. AQE's skew-join
+splitting (spark.sql.adaptive.skewJoin.enabled) covers any other join.
 """
 
 from __future__ import annotations
@@ -20,45 +16,11 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def host_of(url_col) -> "F.Column":
-    return F.regexp_extract(url_col, r"^https?://([^/]+)/", 1)
-
-
-def with_salt(df: DataFrame, key: str = "host", n_salts: int = 16,
-              salt_from: str | None = "url") -> DataFrame:
-    """Salt column in [0, n_salts) that VARIES WITHIN a key.
-
-    The salt must come from something finer-grained than ``key`` — a pure
-    function of the key itself assigns every row of a hot key the same
-    salt and spreads nothing. Two sources:
-
-    - ``salt_from=<col>``: pmod(xxhash64(key, salt_from), n) — fully
-      deterministic (repeatable across retries/resumes); requires a payload
-      column with per-row variation (url under a host key, doc_id, text).
-    - ``salt_from=None``: cycle on the per-partition row counter
-      (monotonically_increasing_id mod n) — shuffle-free and works even
-      when rows of a key are bit-identical. Stable on task retry when the
-      input is a deterministic scan (parquet splits replay identically);
-      NOT stable if an upstream shuffle's partitioning changes (AQE
-      coalescing between runs), so prefer a payload column for resumable
-      jobs.
-    """
-    if salt_from is not None:
-        salt = F.pmod(F.xxhash64(F.col(key), F.col(salt_from)),
-                      F.lit(n_salts))
-    else:
-        salt = F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
-    return df.withColumn("_salt", salt.cast("int"))
-
-
-def repartition_salted(df: DataFrame, n_partitions: int,
-                       key: str = "host", n_salts: int = 16,
-                       salt_from: str | None = "url") -> DataFrame:
-    """Hash-repartition on (key, salt) — same-key rows spread over up to
-    n_salts distinct shuffle targets, defusing single-host hot spots.
-    Downstream aggregations must run two-stage (partial per (key, salt),
-    final per key) exactly like skew_aware_host_agg."""
-    return with_salt(df, key, n_salts, salt_from).repartition(
-        n_partitions, F.col(key), F.col("_salt"))
+    """Lower-cased host of an http(s) url: the authority up to the first
+    '/', '?' or '#', without userinfo or port; the scheme matches in any
+    case. "" when the url is not http(s)."""
+    return F.lower(F.regexp_extract(
+        url_col, r"(?i)^https?://(?:[^/?#]*@)?([^/?#:]*)", 1))
 
 
 def host_quality_gate(docs: DataFrame, vocab,
@@ -108,51 +70,6 @@ def host_quality_gate(docs: DataFrame, vocab,
             .withColumn("keep",
                         F.col("host_mean_q") >= F.lit(min_host_mean_q))
             .select("doc_id", "host", "host_mean_q", "keep"))
-
-
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   n_buckets: int = 32,
-                   sort_cols: tuple[str, ...] | None = None) -> None:
-    """Persist ``df`` hash-BUCKETED on ``key`` (+ optionally sorted
-    within buckets) — remedy #3 from the module docstring, concretely:
-    two tables bucketed the same way equi-join WITHOUT any shuffle
-    exchange (Spark trusts the on-disk bucketing as the required
-    hash partitioning), which is the repeated-co-located-join shape a
-    100 TB pipeline wants for its big fact tables (pages joined to
-    per-url scores/labels round after round). The parquet rendering of
-    an Iceberg ``bucket(key, N)`` partition spec; saveAsTable uses the
-    session catalog's warehouse dir (no Hive metastore needed)."""
-    w = df.write.mode("overwrite").format("parquet") \
-        .bucketBy(n_buckets, key)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
-def bucketed_join(spark, left_table: str, right_table: str,
-                  key: str, how: str = "inner") -> DataFrame:
-    """Equi-join two same-bucketed tables on their bucket key: with
-    matching bucket counts the plan is SortMergeJoin over the existing
-    on-disk layout — zero Exchange on either side (plan-asserted in
-    tests/test_partitioning.py). At 10^12 docs this turns every
-    score/label/dedup re-join from two corpus-wide shuffles into a
-    scan."""
-    return spark.table(left_table).join(spark.table(right_table),
-                                        key, how)
-
-
-def skew_aware_host_agg(pages: DataFrame, n_salts: int = 16) -> DataFrame:
-    """Two-stage (salted) per-host aggregation: partial per (host, salt),
-    final per host — the hot host's rows are reduced by n_salts tasks
-    before the single final row. Returns (host, n_docs, chars)."""
-    base = (pages.withColumn("host", host_of(F.col("url")))
-            .withColumn("_salt",
-                        F.pmod(F.xxhash64("url"), F.lit(n_salts)).cast("int")))
-    partial = (base.groupBy("host", "_salt")
-               .agg(F.count("*").alias("n"),
-                    F.sum(F.length("text")).alias("c")))
-    return (partial.groupBy("host")
-            .agg(F.sum("n").alias("n_docs"), F.sum("c").alias("chars")))
 
 
 def host_temperature_sample(docs: DataFrame, target_per_host: int,
@@ -216,11 +133,9 @@ def blocklist_gate(docs: DataFrame, blocked_hosts: DataFrame,
     ``carry`` columns of the input passed through unchanged.
 
     Scale shape: the deny list is millions of domains vs 10^12 docs, so
-    it broadcasts (UT1 is ~100 MB of hostnames; above the broadcast
-    budget, write_bucketed both sides on host instead — same pattern as
-    refset.py's documented spill path) and the probe is a map-only hash
-    join; the word rules are a Catalyst contains-chain over the text
-    already in the scan — zero shuffle end to end. Mirrored exactly by
+    it broadcasts (UT1 is ~100 MB of hostnames) and the probe is a
+    map-only hash join; the word rules are a Catalyst contains-chain over
+    the text already in the scan — zero shuffle end to end. Mirrored exactly by
     the blocklist DuckDB oracle."""
     hosts = (blocked_hosts.select(F.col(blocked_hosts.columns[0])
                                   .alias("host"))

@@ -1,8 +1,8 @@
 """Per-document scoring stage (SURVEY.md §2C: C1-C6 + D1).
 
-``score_and_scrub`` is the one intrinsic scorer: the pipeline, the
-streaming scorer and the oracle's scoring queries all run it. One fused
-mapInPandas pass (functions/scoring.make_reads2_mapper) paints tokens,
+``score_and_scrub`` is the one intrinsic scorer: the pipeline and the
+oracle's scoring queries both run it. One fused mapInPandas pass
+(functions/scoring.make_reads2_mapper) paints tokens,
 computes mean/window quality and, when scrubbing, emits re-scored
 children; the length score and hard rules stay in whole-stage codegen.
 

@@ -26,12 +26,6 @@ from pyspark.sql import DataFrame, functions as F
 from .dedup import MAX_BAND_BUCKET, _cap_buckets
 
 
-def dot(a, b):
-    """Deterministic left-to-right fold of pairwise products."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
 def norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
                               F.lit(0.0), lambda acc, x: acc + x))

@@ -9,7 +9,6 @@ against the reference's own test fixtures (tests/test_fastx_parity.py).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -201,10 +200,3 @@ def write_fastx(result: FastxResult, out_dir: str,
     byte-for-byte (asserted in tests). No survivor ever touches the
     driver."""
     sink_df(result, n_partitions).write.mode("overwrite").text(out_dir)
-
-
-def read_fastx_output(out_dir: str) -> str:
-    """Concatenate a write_fastx output dir in part-filename order."""
-    import glob
-    parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
-    return "".join(open(p, encoding="ascii").read() for p in parts)

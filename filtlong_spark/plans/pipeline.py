@@ -184,6 +184,8 @@ def _gate_stage(spark: SparkSession, valid: DataFrame, cfg: FilterConfig,
             [(h,) for h in cfg.blocklist_hosts], "host string")
         if blocklist_hosts_df is not None:
             hosts_df = hosts_df.unionByName(blocklist_hosts_df.toDF("host"))
+        # host_of lower-cases the probe, so the deny list is too
+        hosts_df = hosts_df.select(F.lower("host").alias("host"))
         pages = part_op.blocklist_gate(
             valid.withColumn("_bl_host", part_op.host_of(F.col("url"))),
             hosts_df, tuple(cfg.blocklist_words), host_col="_bl_host",

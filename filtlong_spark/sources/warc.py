@@ -162,12 +162,6 @@ def iter_warc_pages(path: str):
             }
 
 
-def parse_warc_file(path: str) -> list[dict]:
-    """WARC file -> pages rows (fixture-scale convenience; the Spark
-    source streams via iter_warc_pages/page_batches instead)."""
-    return list(iter_warc_pages(path))
-
-
 WARC_BATCH_ROWS = 256
 _PAGE_COLS = ["url", "warc_ts", "html", "text", "lang"]
 

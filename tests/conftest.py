@@ -123,3 +123,10 @@ try:
         _hyp_settings.load_profile(_os.environ["HYPOTHESIS_PROFILE"])
 except ImportError:
     pass
+
+
+def read_fastx_output(out_dir: str) -> str:
+    """Concatenate a write_fastx output dir in part-filename order."""
+    import glob
+    parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
+    return "".join(open(p, encoding="ascii").read() for p in parts)

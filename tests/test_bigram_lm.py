@@ -27,14 +27,6 @@ def test_bigram_quality_threshold():
     assert list(q) == [1.0, 1.0, 0.0]
 
 
-def test_doc_perplexity_orders_docs():
-    corpus = [["the", "fast", "sort"] * 20]
-    c2, c1, total = core.build_bigram_lm(corpus)
-    good = core.doc_perplexity(["the", "fast", "sort"], c2, c1, total)
-    bad = core.doc_perplexity(["zq", "xv", "kk"], c2, c1, total)
-    assert good < bad
-
-
 def test_pipeline_bigram_mode_matches_oracle(spark):
     rows = fx.sort_suite()
     ref = fx.ref_corpus(noisy=True)
@@ -313,7 +305,7 @@ def test_lm_mappers_unpickle_without_the_package(tmp_path):
     assert done.returncode == 0, done.stderr[-2000:]
 
 
-def test_lm_auto_strategy_switches_on_model_size(spark):
+def test_lm_auto_strategy_switches_on_model_size(spark, monkeypatch):
     """lm_strategy='auto' picks broadcast iff the PRUNED model's entry
     count fits the configured budget — and the auto-resolved pipeline
     matches both explicit strategies."""
@@ -322,11 +314,19 @@ def test_lm_auto_strategy_switches_on_model_size(spark):
     ref_rows = fx.ref_corpus(noisy=True)
     ref = fx.to_spark_df(spark, ref_rows)
     cfg = FilterConfig(min_length=1, mode="bigram_lm", keep_percent=90.0)
+
+    def planned():
+        chosen, tables = lm_op.plan_lm(ref, cfg)
+        tables.release()
+        return chosen
+
     # tiny fixture model: far under the default budget -> broadcast
-    assert lm_op.choose_strategy(ref, cfg) == "broadcast"
+    assert planned() == "broadcast"
     # squeeze the budget below the model size -> distributed
-    assert lm_op.choose_strategy(ref, cfg, max_entries=1) == "distributed"
-    assert lm_op.choose_strategy(None, cfg) == "distributed"
+    with monkeypatch.context() as m:
+        m.setattr(lm_op, "LM_BROADCAST_MAX_ENTRIES", 1)
+        assert planned() == "distributed"
+    assert lm_op.plan_lm(None, cfg) == ("distributed", None)
     outs = []
     for strategy in ("auto", "distributed", "broadcast"):
         c = FilterConfig(min_length=1, mode="bigram_lm", keep_percent=90.0,

@@ -14,6 +14,8 @@ from filtlong_spark.config import FilterConfig
 from filtlong_spark.plans import fastx_pipeline as fp
 from filtlong_spark.sources import fastx
 
+from conftest import read_fastx_output
+
 
 def test_version(capsys):
     assert cli.main(["--version"]) == 0
@@ -66,15 +68,28 @@ def test_cli_refset_trim_split_and_out_dir(capsys, spark, tmp_path,
     assembly = fastx.read_fastx(spark, fastx_set.asm)
     cfg = FilterConfig(min_length=1, split=25, mode="refset")
     res = fp.run_filtlong(spark, reads, cfg, assembly=assembly)
-    assert fp.read_fastx_output(out_dir) == "".join(fp.to_fastx_lines(res))
+    assert read_fastx_output(out_dir) == "".join(fp.to_fastx_lines(res))
 
 
 def test_cli_verbose_blocks(capsys, spark, fastx_set):
-    rc = cli.main(["--min_length", "1", "--verbose", "-a",
+    rc = cli.main(["--min_length", "1", "--verbose", "--split", "25", "-a",
                    fastx_set.asm, fastx_set.fastq])
     out, err = capsys.readouterr()
     assert rc == 0
+    lines = err.splitlines()
     assert "mean quality" in err  # per-read verbose block on stderr
+    # the per-read block names each post-scrub record right above its
+    # metrics line; the score table that follows has one row per record,
+    # in the same order
+    records = [lines[i - 1] for i, ln in enumerate(lines)
+               if ln.startswith("            length = ")]
+    # --split made children, named <parent>_<start>-<end>
+    assert any("-" in name for name in records)
+    head = lines.index("Read name\tLength score\tMean quality score\t"
+                       "Window quality score\tFinal score")
+    table = [ln.split("\t") for ln in lines[head + 1:]]
+    assert [row[0].rstrip() for row in table] == records
+    assert all(len(row) == 5 for row in table)
 
 
 def test_web_subcommand_end_to_end(capsys, spark, tmp_path):

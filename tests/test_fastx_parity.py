@@ -25,6 +25,8 @@ from filtlong_spark.config import FilterConfig
 from filtlong_spark.plans import fastx_pipeline as fp
 from filtlong_spark.sources import fastx
 
+from conftest import read_fastx_output
+
 REF = "/root/reference/test"
 
 needs_ref = pytest.mark.skipif(
@@ -231,7 +233,7 @@ class TestDistributedSink:
         fp.write_fastx(res, out, n_partitions=4)
         import glob as _glob
         assert len(_glob.glob(out + "/part-*")) >= 1
-        assert fp.read_fastx_output(out) == expected
+        assert read_fastx_output(out) == expected
 
     def test_write_fastx_fasta_format(self, spark, seeded_fasta,
                                       seeded_assembly, tmp_path):
@@ -240,7 +242,7 @@ class TestDistributedSink:
                               assembly=seeded_assembly)
         out = str(tmp_path / "fasta_out")
         fp.write_fastx(res, out, n_partitions=3)
-        text = fp.read_fastx_output(out)
+        text = read_fastx_output(out)
         assert text == "".join(fp.to_fastx_lines(res))
         assert text.startswith(">")
 

@@ -1,101 +1,8 @@
-"""Salted repartitioning / skew utilities."""
+"""Host-grain operators: quality gate, per-host sampling, deny list."""
 
 from pyspark.sql import functions as F
 
-from filtlong_spark import fixtures as fx
 from filtlong_spark.operators import partitioning as pt
-
-
-def test_salt_deterministic_and_bounded(spark):
-    df = fx.to_spark_df(spark, fx.volume(sf=0.0002))
-    a = {(r["url"], r["_salt"])
-         for r in pt.with_salt(df, key="url", salt_from="text").collect()}
-    b = {(r["url"], r["_salt"])
-         for r in pt.with_salt(df, key="url", salt_from="text").collect()}
-    assert a == b
-    assert all(0 <= s < 16 for _, s in a)
-
-
-def test_salt_varies_within_hot_key(spark):
-    # ONE host repeated 400x: the salt must take >1 value within the key
-    # (a salt that is a pure function of the key spreads nothing)
-    rows = [dict(fx.sort_suite()[0], url=f"https://hot.example.com/d/{i}",
-                 text="join hash sort") for i in range(400)]
-    df = (fx.to_spark_df(spark, rows)
-          .withColumn("host", pt.host_of(F.col("url"))))
-    salts = {r["_salt"] for r in
-             pt.with_salt(df, key="host", salt_from="url").collect()}
-    assert len(salts) > 1
-
-
-def test_salted_repartition_spreads_identical_key(spark):
-    # ONE url repeated 400x (rows bit-identical in the key) + 50 cold docs:
-    # counter-based salting must still spread the hot key over >1 partition
-    rows = [dict(fx.sort_suite()[0], url="https://hot.example.com/d",
-                 text=f"join hash sort {i}") for i in range(400)]
-    rows += [dict(fx.sort_suite()[0], url=f"https://cold{i}.example.com/d",
-                  text="join hash sort") for i in range(50)]
-    df = fx.to_spark_df(spark, rows)
-    hot_pids = (pt.repartition_salted(df, 8, key="url", salt_from=None)
-                .filter(F.col("url") == "https://hot.example.com/d")
-                .select(F.spark_partition_id().alias("pid"))
-                .distinct().count())
-    assert hot_pids > 1
-    # and the deterministic payload-salt path spreads a hot HOST key
-    # (urls distinct, host identical — the canonical web-skew shape)
-    rows2 = [dict(fx.sort_suite()[0], url=f"https://hot.example.com/d/{i}",
-                  text="join hash sort") for i in range(400)]
-    df2 = (fx.to_spark_df(spark, rows2)
-           .withColumn("host", pt.host_of(F.col("url"))))
-    hot_pids2 = (pt.repartition_salted(df2, 8, key="host", salt_from="url")
-                 .filter(F.col("host") == "hot.example.com")
-                 .select(F.spark_partition_id().alias("pid"))
-                 .distinct().count())
-    assert hot_pids2 > 1
-
-
-def test_skew_aware_host_agg_correct(spark):
-    rows = [dict(fx.sort_suite()[0], url=f"https://hot.example.com/d/{i}",
-                 text="abcde") for i in range(100)]
-    df = fx.to_spark_df(spark, rows)
-    out = {(r["host"], r["n_docs"], r["chars"])
-           for r in pt.skew_aware_host_agg(df).collect()}
-    assert out == {("hot.example.com", 100, 500)}
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located bucketed join (the Iceberg bucket(key, N) rendering):
-    two tables bucketed the same way on doc_id must equi-join with ZERO
-    shuffle Exchange in the physical plan — the repeated-join shape a
-    100 TB pipeline uses for its fact tables — and return exactly the
-    plain join's rows."""
-    # (warehouse dir is a static conf — tables land in the session
-    # default and are dropped below, which deletes managed-table data)
-    docs = fx.to_spark_df(spark, fx.volume(sf=0.002)) \
-        .withColumn("doc_id", F.xxhash64("url")) \
-        .select("doc_id", "url", "text")
-    scores = docs.select("doc_id", F.length("text").alias("n_chars"))
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast: test-sized tables would otherwise take a
-        # BroadcastHashJoin (which ignores bucketing); at fact-table
-        # scale neither side broadcasts and SMJ-over-buckets is the plan
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        pt.write_bucketed(docs, "b_docs", "doc_id", n_buckets=8,
-                          sort_cols=("doc_id",))
-        pt.write_bucketed(scores, "b_scores", "doc_id", n_buckets=8,
-                          sort_cols=("doc_id",))
-        joined = pt.bucketed_join(spark, "b_docs", "b_scores", "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        got = joined.count()
-        exp = docs.join(scores, "doc_id").count()
-        assert got == exp > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        spark.sql("DROP TABLE IF EXISTS b_docs")
-        spark.sql("DROP TABLE IF EXISTS b_scores")
 
 
 def test_host_quality_gate_cuts_bad_domain(spark):

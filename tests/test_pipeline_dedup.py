@@ -187,23 +187,39 @@ def test_blocklist_stage_quarantines_hosts_and_words(spark):
     rows.append(("https://h0.ex.com/spamdoc", "2024-01-03T00:00:00", "en",
                  "AAAA CCCC GGGG TTTT forbiddenword "
                  + " ".join(f"z{j}" for j in range(40))))
+    # url shapes whose host is casino.example all the same: no path, a
+    # bare query or fragment, scheme or host in upper case, a port,
+    # userinfo; the deny list spells the host in mixed case
+    casino = ["https://casino.example", "https://casino.example?x=1",
+              "http://casino.example#top", "HTTPS://casino.example/a",
+              "https://Casino.Example/b", "https://casino.example:443/c",
+              "https://user:pw@casino.example/d"]
+    rows += [(u, f"2024-01-04T00:00:{k:02d}", "en",
+              "AAAA CCCC GGGG TTTT " + " ".join(f"c{k}y{j}"
+                                                 for j in range(40)))
+             for k, u in enumerate(casino)]
     res = run_filter(spark, _pages(spark, rows),
-                     _cfg(blocklist_hosts=("h1.ex.com",),
+                     _cfg(blocklist_hosts=("h1.ex.com", "Casino.EXAMPLE"),
                           blocklist_words=("FORBIDDENword",)))
     kept_urls = {r["url"] for r in res.kept.collect()}
     assert not any("h1.ex.com" in u for u in kept_urls)
     assert "https://h0.ex.com/spamdoc" not in kept_urls
+    assert not kept_urls & set(casino)
     q = {r["url"]: r["reason"] for r in res.quarantine.collect()}
     assert set(q.values()) == {"blocklisted"}
-    assert len(q) == 5 and res.metrics["blocklist_dropped"] == 5
+    assert set(casino) <= set(q)
+    n_blocked = 5 + len(casino)
+    assert len(q) == n_blocked
+    assert res.metrics["blocklist_dropped"] == n_blocked
     assert res.total_input_chars == sum(len(t) for *_, t in rows)
     # large-list path: the same deny list via blocklist_hosts_df
-    hosts_df = spark.createDataFrame([("h1.ex.com",)], "host string")
+    hosts_df = spark.createDataFrame([("h1.ex.com",), ("CASINO.example",)],
+                                     "host string")
     res2 = run_filter(spark, _pages(spark, rows),
                       _cfg(blocklist_words=("forbiddenword",)),
                       blocklist_hosts_df=hosts_df)
     assert {r["url"] for r in res2.kept.collect()} == kept_urls
-    assert res2.metrics["blocklist_dropped"] == 5
+    assert res2.metrics["blocklist_dropped"] == n_blocked
 
 
 def test_blocklist_stage_resume_restores_counter(spark, tmp_path):

@@ -140,7 +140,7 @@ def test_warc_malformed_archive_errors_clearly(spark, tmp_path):
     bad = tmp_path / "bad.warc"
     bad.write_bytes(b"HTTP/1.1 200 OK\r\n\r\nnot a warc at all")
     with pytest.raises(Exception, match="not a WARC record header"):
-        warc.parse_warc_file(str(bad))
+        list(warc.iter_warc_pages(str(bad)))
     # truncated content-length: the record claims more bytes than exist;
     # the parser must stop cleanly at EOF rather than loop or crash
     rec = (b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -148,5 +148,5 @@ def test_warc_malformed_archive_errors_clearly(spark, tmp_path):
            b"Content-Length: 999999\r\n\r\nshort")
     t = tmp_path / "trunc.warc"
     t.write_bytes(rec)
-    rows = warc.parse_warc_file(str(t))
+    rows = list(warc.iter_warc_pages(str(t)))
     assert len(rows) == 1 and rows[0]["url"] == "u"
